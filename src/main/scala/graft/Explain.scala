@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints `explain("formatted")` for the named queries
   * (or a default headline set) so broadcast/pushdown/codegen can be
-  * inspected per operator:
+  * inspected per operator, under the same session configuration (AQE,
+  * extensions, core count) that Bench and Verify run them with:
   *
   *   sbt "runMain graft.Explain [sfDir] [query ...]"
   *
@@ -19,11 +18,7 @@ object Explain {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_agg", "q_join_enrich", "q_dom_analysis", "q_dedup_minhash",
         "q_ann_cosine", "q_price_candidates", "q_tfidf_topk", "q_hotspots")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cores, "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       SparkEntry.queries.get(n) match {

@@ -11,19 +11,18 @@ package graft
   * prose). One JSON line per run; pass runs ≥ 2 and read the later
   * runs as the warm figure.
   *
-  * Usage: SPARK_GRAFT_CPUS=32 sbt "runMain graft.ForestCost <sfDir> [runs]"
+  * Usage: sbt "runMain graft.ForestCost <sfDir> [runs]"
   */
 object ForestCost {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val runs = if (args.length > 1) args(1).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = Sessions.local(cpus, "graft-forest-cost")
+    val spark = Sessions.local(Sessions.cores, "graft-forest-cost")
     spark.sparkContext.setLogLevel("WARN")
     (1 to runs).foreach { i =>
       val (cand, buildS, scoreS) =
         operators.Similarity.forestScoreCost(spark, dir)
-      println(f"""{"run":$i,"dir":"$dir","directed_candidates":$cand,"build_sec":$buildS%.3f,"score_sec":$scoreS%.3f,"score_us_per_kcand":${scoreS * 1e6 / math.max(1L, cand / 1000)}%.2f}""")
+      println(f"""{"run":$i,"dir":${Json.str(dir)},"directed_candidates":$cand,"build_sec":$buildS%.3f,"score_sec":$scoreS%.3f,"score_us_per_kcand":${scoreS * 1e6 / math.max(1L, cand / 1000)}%.2f}""")
     }
     spark.stop()
   }

@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Session extension registering graft's custom Catalyst functions for
   * SQL use:
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
-  *   // or spark.sql.extensions=graft.GraftExtensions
+  *   spark.sql.extensions=graft.GraftExtensions  // what Sessions.local sets
+  *   // or the session builder's withExtensions(new GraftExtensions)
   *   spark.sql("SELECT price_candidates(html) FROM pages")
   *
   * `price_candidates` is the reference's HTML price scanner

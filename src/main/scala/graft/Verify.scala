@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,59 +10,22 @@ object Verify {
     // let stale results masquerade as a fresh PASS — fail loudly instead
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
-    // Long batteries accumulate localCheckpoint blocks across queries
-    // (each query's checkpoints are correct for its own latency, but a
-    // 300-query session hoards them until the store wedges — the r13
-    // sf3 finding: query 14 of a heavy 15-query run stalled on
-    // checkpoint writes a fresh JVM absorbed in minutes). Two-level
-    // hygiene: drop persisted blocks after EVERY query, and recycle
-    // the whole SparkSession every SPARK_GRAFT_RECYCLE queries
-    // (default 40; 0 disables) so executor/driver heaps, shuffle
-    // dirs, and the block manager restart from zero ~8 times per
-    // full battery at a cost of ~1-2 s each.
+    // SPARK_GRAFT_RECYCLE restarts the session every N queries (default
+    // 40; 0 disables), ~8 times per full battery at ~1-2 s each
     val recycleEvery = sys.env.getOrElse("SPARK_GRAFT_RECYCLE", "40").toInt
-    var spark = Sessions.local(cpus, "graft-verify")
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    var sinceRecycle = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
+    val named = SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) }.toSeq
+    Sessions.battery("graft-verify", recycleEvery, named)(_ => ()) { case (spark, (name, fn)) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // release this query's localCheckpoint blocks + cached plans
-      try {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        spark.catalog.clearCache()
-      } catch { case _: Throwable => () }
-      sinceRecycle += 1
-      if (recycleEvery > 0 && sinceRecycle >= recycleEvery) {
-        spark.stop()
-        spark = Sessions.local(cpus, "graft-verify")
-        spark.sparkContext.setLogLevel("WARN")
-        sinceRecycle = 0
+        System.err.println(s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), oracleJson(SparkEntry.oracleSql))
   }
+
+  /** The oracle map as one JSON object, query name → SQL text. */
+  private[graft] def oracleJson(sql: Map[String, String]): String =
+    sql.map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
 }

@@ -43,16 +43,6 @@ object Text {
         "(?<=[\\d])(,)(?=[\\d])", ""),
       "[\t\n\r,]", "")
 
-  /** Character n-grams following the reference's exact (quirky) loop:
-    * for i in 1 until len, emit substring(i, i+n) iff i+n < len — i.e.
-    * the first char is never a gram start and the final gram stops one
-    * short of the end. Count = max(0, len - n - 1).
-    * Reference: Utils.gramsByN (Utils.scala:40-52). */
-  def charGrams(c: Column, n: Int): Column =
-    when(length(c) >= n + 2,
-      transform(sequence(lit(2), length(c) - n), i => c.substr(i, lit(n))))
-      .otherwise(array().cast("array<string>"))
-
   /** URL → host, `www.` stripped, failures → "www.failed.com".
     * Reference: Utils.getDomain (Utils.scala:359-375). */
   def getDomain(c: Column): Column = {

@@ -64,15 +64,6 @@ object MLQueries {
         floor(col("mean_tfidf") * 1e6 + 0.5).cast("long").as("mean_tfidf_e6"))
   }
 
-  /** Char n-grams with the reference's quirky bounds (gramsByN,
-    * Transformer.scala:89-101: index 0 never starts a gram, the last
-    * gram stops one short; short strings yield no grams) — the
-    * codegen'd [[graft.functions.CharGrams]] kernel, not an interpreted
-    * transform/sequence HOF: this runs per candidate row in the
-    * featurization hot path. */
-  private def charGramsArr(s: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
-    graft.functions.CharGrams.charGrams(s, n)
-
   /** Labeled candidate text features — the reference's gramsTFIDFParser
     * (Transformer.scala:74-87): data = text_before + text_after +
     * domain; terms = char 3-grams ++ char 4-grams ++ tokens; location
@@ -80,7 +71,7 @@ object MLQueries {
     * to the page's true price). Deterministic ~5% URL sample cap keeps
     * the training job bounded at any corpus scale. */
   private def candidateFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.Text
+    import graft.functions.{CharGrams, Text}
     val cand = graft.operators.Extraction.labeledCandidates(spark, dir)
       .filter(pmod(xxhash64(col("o_orderkey")), lit(20)) === 0)
     val domain = concat(lit("shop"), (col("o_custkey") % 3).cast("string"), lit(".example.com"))
@@ -88,7 +79,8 @@ object MLQueries {
     cand.select(
       col("o_orderkey"),
       domain.as("domain"),
-      concat(charGramsArr(data, 3), charGramsArr(data, 4), Text.tokenize(data)).as("terms"),
+      concat(CharGrams.charGrams(data, 3), CharGrams.charGrams(data, 4), Text.tokenize(data))
+        .as("terms"),
       (col("location").cast("double") / col("page_len")).as("location_norm"),
       coalesce((Text.parsePriceLocale(col("candidate")) === col("a_val"))
         .cast("double"), lit(0.0)).as("label"))

@@ -72,8 +72,8 @@ object StreamingQueries {
 
   /** Run `df` through a memory sink synchronously; return the result.
     * Sinks from previous invocations are dropped first so repeated runs
-    * (warmup + timed, TimeOne repeats) don't accumulate result sets in
-    * driver memory. */
+    * (warmup + timed, Bench's cold and warm runs) don't accumulate
+    * result sets in driver memory. */
   private def runToMemory(spark: SparkSession, df: DataFrame,
       mode: OutputMode): DataFrame = {
     spark.catalog.listTables().collect()

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.Text
+import graft.functions.{CharGrams, Text}
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
@@ -60,7 +60,7 @@ class FidelitySpec extends SparkSpec {
       grams
     }
     val ins = randomStrings(300, 40)
-    val got = runCol(ins, c => concat_ws("≬", Text.charGrams(c, 3)))
+    val got = runCol(ins, c => concat_ws("≬", CharGrams.charGrams(c, 3)))
     ins.zip(got).foreach { case (s, g) =>
       val mine = if (g.isEmpty) Nil else g.split("≬").toList
       assert(mine == refGrams(s, 3).reverse, s"input=$s")
