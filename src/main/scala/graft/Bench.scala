@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line. A query that throws is recorded with err:1 and
@@ -33,7 +34,7 @@ object Bench {
   private def loadavg(): String =
     try scala.io.Source.fromFile("/proc/loadavg").mkString.trim
       .split("\\s+").take(4).mkString(" ")
-    catch { case scala.util.control.NonFatal(_) => "unavailable" }
+    catch { case NonFatal(_) => "unavailable" }
 
   /** One query's record. When `error` names the exception class that
     * failed the cold run, `cold` is its time-to-failure and the other
@@ -66,14 +67,14 @@ object Bench {
       try {
         Seq("lineitem", "orders", "part", "customer", "events", "documents", "embeddings")
           .foreach(t => try sources.Tables.table(spark, sfDir, t).limit(1).count()
-            catch { case _: Throwable => () })
+            catch { case NonFatal(_) => () })
         SparkEntry.entry(spark).limit(1).count()
-      } catch { case _: Throwable => () }
+      } catch { case NonFatal(_) => () }
       // only the streaming scorer consumes the model store — skip its
       // (possibly multi-second) build when a filter excludes it
       if (only.isEmpty || only("q_stream_pipe"))
         try ml.ModelMap.ensure(spark, sfDir)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] model-map warmup failed: ${e.getMessage}")
         }
     }
@@ -140,7 +141,7 @@ object Bench {
       val stamped = slot.replaceAll("\\.json$", "") + s"_$stamp.json"
       Seq(slot, stamped).foreach { p =>
         try java.nio.file.Files.writeString(java.nio.file.Paths.get(p), json)
-        catch { case scala.util.control.NonFatal(e) =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[bench] sidecar write failed ($p): ${e.getMessage}")
         }
       }

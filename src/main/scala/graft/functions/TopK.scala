@@ -131,13 +131,10 @@ final class TopEdgesState(val k: Int) {
 
   /** Total order matching Spark's SQL sort on (score DESC, id ASC):
     * NaN sorts as the LARGEST double (java.lang.Double.compare) and
-    * -0.0 is treated equal to 0.0 with the tie broken by id. Note:
-    * Spark's SortOrder itself (NormalizeFloatingNumbers applies to
-    * grouping/join/window-PARTITION keys, not ORDER BY keys) would
-    * order +0.0 strictly before -0.0 under DESC — a divergence
-    * confined to ±0.0 score ties, unobservable on real cosine data
-    * and ACCEPTED (hash-verified green across all consumers).
-    * Returns < 0 when (s1,i1) ranks strictly better. */
+    * -0.0 is treated equal to 0.0 with the tie broken by id — Spark's
+    * sort and row_number window compare ±0.0 equal as well (TopKSpec
+    * pins both on a ±0.0 tie). Returns < 0 when (s1,i1) ranks strictly
+    * better. */
   @inline private def cmp(s1: Double, i1: Long, s2: Double, i2: Long): Int = {
     val a = if (s1 == 0.0d) 0.0d else s1
     val b = if (s2 == 0.0d) 0.0d else s2

@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
 case class DomainModel(featurizer: TopKByAvgTFIDFModel, gbt: GBTClassificationModel)
 
 /** The persisted per-domain model map and its lifecycle: train → save →
-  * (merge) → load → broadcast → per-record scoring.
+  * (merge) → load → broadcast → per-record scoring. A map trained in
+  * this JVM is scored as trained; `load` serves only a map that is
+  * already on disk.
   *
   * Storage layout under a map root `path`:
   * {{{
@@ -190,45 +192,59 @@ object ModelMap {
     * The domain list here is the bounded event alphabet, so a short
     * driver loop (concurrent fits, as the reference's `list.par`) is the
     * right shape — the unbounded-domain training path is
-    * [[MLQueries.gbtTrainEval]]'s grouped executor-local trainer. */
-  def trainAndSave(spark: SparkSession, dir: String, path: String, runId: Long): Unit = {
+    * [[MLQueries.gbtTrainEval]]'s grouped executor-local trainer.
+    * Returns the map as trained: the caller scores with these very
+    * models, with no read back from `path`. */
+  def trainAndSave(spark: SparkSession, dir: String, path: String,
+      runId: Long): Map[String, DomainModel] = {
     val data = labeledCandidates(syntheticPages(Tables.events(spark, dir)))
       .filter(col("event_id") % 10 < 7)
       .cache()
     try {
       data.count() // materialize the shared cache before the racing fits
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(TrainedDomains.length)
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val fits = TrainedDomains.map { dom =>
-        Future {
-          val d = data.filter(col("domain") === dom)
-          val fpm = new TopKByAvgTFIDF().fit(d)
-          val gbt = new GBTClassifier()
-            .setMaxIter(5).setMaxDepth(3).setSeed(42L)
-            .setLabelCol("label").setFeaturesCol("features")
-            .fit(fpm.transform(d))
-          dom -> DomainModel(fpm, gbt)
-        }
+      val models = perDomain(TrainedDomains) { dom =>
+        val d = data.filter(col("domain") === dom)
+        val fpm = new TopKByAvgTFIDF().fit(d)
+        val gbt = new GBTClassifier()
+          .setMaxIter(5).setMaxDepth(3).setSeed(42L)
+          .setLabelCol("label").setFeaturesCol("features")
+          .fit(fpm.transform(d))
+        DomainModel(fpm, gbt)
       }
-      val models =
-        try fits.map(Await.result(_, Duration.Inf)).toMap
-        finally pool.shutdown()
       save(spark, path, runId, models)
+      models
     } finally data.unpersist()
   }
 
+  /** Persist `models` under `path`. Each domain's featurizer and GBT are
+    * written concurrently; `meta` is written last, once every domain's
+    * files are complete, so its presence marks a whole map (the commit
+    * marker [[ensure]] checks). */
   def save(spark: SparkSession, path: String, runId: Long,
       models: Map[String, DomainModel]): Unit = {
     import spark.implicits._
-    models.foreach { case (dom, dm) =>
-      dm.featurizer.write.overwrite().save(s"$path/domains/$dom/featurizer")
-      dm.gbt.write.overwrite().save(s"$path/domains/$dom/gbt")
+    perDomain(models.keys.toSeq) { dom =>
+      models(dom).featurizer.write.overwrite().save(s"$path/domains/$dom/featurizer")
+      models(dom).gbt.write.overwrite().save(s"$path/domains/$dom/gbt")
     }
     models.keys.toSeq.sorted.map(d => (d, runId, FormatVersion))
       .toDF("domain", "run_id", "version")
       .write.mode("overwrite").parquet(s"$path/meta")
+  }
+
+  /** `f` over the domains, one pool thread each, keyed by domain. Returns
+    * only after every call has finished — a failed one is rethrown then,
+    * never while its siblings are still writing. */
+  private def perDomain[A](domains: Seq[String])(f: String => A): Map[String, A] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, domains.length))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val calls = domains.map(dom => dom -> Future(f(dom)))
+      calls.foreach { case (_, c) => Await.ready(c, Duration.Inf) }
+      calls.map { case (dom, c) => dom -> c.value.get.get }.toMap
+    } finally pool.shutdown()
   }
 
   /** Load the map; throws if absent or written by an older format. */
@@ -281,14 +297,15 @@ object ModelMap {
 
   // ---------------------------------------------------------------------------
   // Ensure + in-process cache (bench runs the pipe repeatedly; the map
-  // is trained once and loaded models are reused within the JVM).
+  // is trained or loaded once and reused within the JVM).
   // ---------------------------------------------------------------------------
 
   private val cache = scala.collection.concurrent.TrieMap.empty[String, Map[String, DomainModel]]
 
-  /** Return the trained map for `dir`, training+saving it on first use
-    * (the one-time BuildAndSaveModels step a real deployment runs ahead
-    * of the streaming scorer). */
+  /** Return the trained map for `dir`. On first use it is trained, saved
+    * and returned as trained (the one-time BuildAndSaveModels step a real
+    * deployment runs ahead of the streaming scorer); [[load]] runs only
+    * when a complete map of this format is already on disk. */
   def ensure(spark: SparkSession, dir: String): Map[String, DomainModel] = {
     val path = defaultPath(spark, dir)
     cache.getOrElseUpdate(path, this.synchronized {
@@ -297,11 +314,12 @@ object ModelMap {
           spark.read.parquet(s"$path/meta").head()
             .getAs[Int]("version") == FormatVersion
         } catch { case _: Exception => false }
-      if (!exists) {
-        trainAndSave(spark, dir, path, runId = 1L)
+      if (exists) load(spark, path)
+      else {
+        val models = trainAndSave(spark, dir, path, runId = 1L)
         pruneStaleSiblings(spark, dir, keep = path)
+        models
       }
-      load(spark, path)
     })
   }
 

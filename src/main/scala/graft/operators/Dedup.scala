@@ -387,8 +387,8 @@ object Dedup {
     * near-dup subgraph, orders of magnitude smaller than the corpus —
     * and no component is ever collected; singleton docs never enter
     * the loop and rejoin at the end as their own clusters. */
-  def dedupClusters(spark: SparkSession, dir: String, maxIter: Int = 30): DataFrame = {
-    val labels = componentLabels(minhashPairs(spark, dir).select("id_a", "id_b"), maxIter)
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
+    val labels = componentLabels(minhashPairs(spark, dir).select("id_a", "id_b"))
     val lab = Tables.documents(spark, dir)
       .select(col("doc_id"))
       .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
@@ -414,7 +414,9 @@ object Dedup {
     * O(log diameter) rounds, not O(diameter)) + a bounded one-row
     * convergence aggregate (the label sum strictly decreases until
     * fixpoint, so no per-row change tracking); `localCheckpoint`
-    * truncates lineage so round N never replays rounds 1..N-1. */
+    * truncates lineage so round N never replays rounds 1..N-1. A graph
+    * that has not converged after `maxIter` rounds throws: its labels
+    * would not yet be component minima. */
   private[graft] def componentLabels(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
     val edges = pairs
       .unionAll(pairs.select(col("id_b").as("id_a"), col("id_a").as("id_b")))
@@ -453,6 +455,8 @@ object Dedup {
         prevSum = curSum
         i += 1
       }
+      if (!converged) throw new IllegalStateException(
+        s"connected components did not converge in $i rounds (maxIter = $maxIter)")
       // the final round's aggregate materialized the checkpoint, so the
       // returned frame no longer depends on the unpersisted edge list
       labels

@@ -2751,11 +2751,11 @@ object Similarity {
     * the oracle exhausted the sandbox's spill disk. Each round here
     * is (neighbor-min over the edge list) then (label := label of
     * label) — ROUND-FOR-ROUND the Dedup.componentLabels iteration, and
-    * [[CcRounds]] = its maxIter, so the two states are identical at
-    * the cap whether or not the propagation has converged (when Spark
-    * converges early, the oracle's extra rounds are no-ops on the
-    * fixpoint). Cost per round ∝ nodes + edges — linear, like the
-    * engine. */
+    * [[CcRounds]] = its maxIter. Spark throws rather than return labels
+    * that have not converged within maxIter rounds, so whenever it
+    * returns, its labels are the fixpoint and the oracle's remaining
+    * rounds are no-ops on it. Cost per round ∝ nodes + edges — linear,
+    * like the engine. */
   private val CcRounds = 30 // = Dedup.componentLabels maxIter — keep in sync
 
   /** The unrolled rounds over an `<edgesName>(src, dst)` CTE, ending

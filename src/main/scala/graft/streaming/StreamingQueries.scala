@@ -98,8 +98,9 @@ object StreamingQueries {
     * per-message predict → Utils.getPriceFromMsgMap decide).
     *
     * [[graft.ml.ModelMap.ensure]] trains and persists the map on first
-    * use (the BuildAndSaveModels step); the stream then loads it once,
-    * broadcasts it, and every record's candidates are featurized and
+    * use (the BuildAndSaveModels step) and hands back the map it trained,
+    * or loads one already persisted; the stream broadcasts that map
+    * once, and every record's candidates are featurized and
     * margin-scored in-task — `mapPartitions` is justified here because
     * the per-page argmax over a broadcast model's candidate scores is
     * per-record imperative work no streaming window can express (row

@@ -670,6 +670,21 @@ class OperatorSpec extends SparkSpec {
     }
   }
 
+  test("connected components: a chain that outruns maxIter throws, the default labels it") {
+    // 64 nodes whose ids rise along the chain: min-label propagation
+    // with pointer jumping needs 7 rounds (6 to reach the fixpoint, one
+    // more to see the label sum hold)
+    import spark.implicits._
+    val pairs = (1L until 64L).map(i => (i - 1, i)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](
+      graft.operators.Dedup.componentLabels(pairs, maxIter = 3))
+    assert(e.getMessage.contains("3 rounds") && e.getMessage.contains("maxIter = 3"),
+      e.getMessage)
+    val labels = graft.operators.Dedup.componentLabels(pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels == (0L until 64L).map(_ -> 0L).toMap)
+  }
+
   test("minhash hot-bucket cap bounds an identical-content flood") {
     // 1000 byte-identical docs land in ONE bucket per band; uncapped
     // pairing would emit ~500k pairs — the cap bounds it at C(64,2).

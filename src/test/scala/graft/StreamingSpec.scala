@@ -51,7 +51,8 @@ class StreamingSpec extends SparkSpec {
 
   test("stream pipe: persisted model map round-trips and its GBTs select the true price") {
     import graft.ml.ModelMap
-    // ensure → train+save on first use, load (from disk) + broadcast after
+    // ensure → train+save on first use and return the trained map (load
+    // from disk only for a map persisted earlier); the pipe broadcasts it
     val models = ModelMap.ensure(spark, sf)
     assert(models.keySet == ModelMap.TrainedDomains.toSet)
     models.values.foreach { dm =>

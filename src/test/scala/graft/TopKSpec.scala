@@ -35,4 +35,31 @@ class TopKSpec extends SparkSpec {
       assert(cnt - err <= truth, s"$item lower bound ${cnt - err} > true $truth")
     }
   }
+
+  test("TopEdges keeps the lower id on a +0.0 / -0.0 score tie, as Spark's sort does") {
+    // TopEdgesState treats -0.0 as equal to 0.0 and breaks the tie by
+    // id ASC, whichever arrives first
+    def kept(in: Seq[(Double, Long)]): Long = {
+      val st = new graft.functions.TopEdgesState(1)
+      in.foreach { case (s, id) => st.add(s, id) }
+      assert(st.buf.size == 1)
+      st.buf.head._2
+    }
+    val tie = Seq((0.0, 5L), (-0.0, 3L))
+    assert(kept(tie) == 3L)
+    assert(kept(tie.reverse) == 3L)
+    // Spark's ORDER BY score DESC, id ASC — sort and row_number window,
+    // the formulation TopEdges replaces — compares -0.0 equal to 0.0
+    // too and keeps id 3; a raw java.lang.Double.compare would keep 5
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
+      .orderBy(desc("score"), asc("id"))
+    for (in <- Seq(tie, tie.reverse); parts <- Seq(1, 2)) {
+      val df = in.toDF("score", "id").repartition(parts)
+      assert(df.collect().exists(r => java.lang.Double.doubleToRawLongBits(r.getDouble(0)) ==
+        java.lang.Double.doubleToRawLongBits(-0.0)), "input lost its -0.0")
+      assert(df.orderBy(desc("score"), asc("id")).head().getLong(1) == 3L)
+      assert(df.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+        .head().getLong(1) == 3L)
+    }
+  }
 }
