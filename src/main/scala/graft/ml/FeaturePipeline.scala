@@ -5,7 +5,7 @@ import org.apache.spark.ml.feature.{ElementwiseProduct, HashingTF, VectorAssembl
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.param.{IntParam, Param, ParamMap, Params}
 import org.apache.spark.ml.stat.Summarizer
-import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
+import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -54,24 +54,15 @@ class TopKByAvgTFIDF(override val uid: String)
       .setInputCol($(termsCol)).setOutputCol("graft_tf")
       .setNumFeatures($(numFeatures))
     // ONE distributed pass: per-bucket document frequency is exactly
-    // numNonZeros over the tf vectors, and mean TF-IDF factors as
-    // idf_j · mean(tf_j) because idf_j is constant within a bucket —
-    // so a single Summarizer job replaces the old HashingTF-persist →
-    // IDF.fit → mean-TFIDF chain (three jobs and a cache).
+    // numNonZeros over the tf vectors, and mean TF-IDF needs only
+    // mean(tf) (see idfAndIndices).
     val row = tf.transform(ds)
       .select(Summarizer.metrics("mean", "numNonZeros", "count")
         .summary(col("graft_tf")).as("s"))
       .select(col("s.mean"), col("s.numNonZeros"), col("s.count"))
       .head()
-    val meanTf = row.getAs[Vector](0).toArray
-    val docFreq = row.getAs[Vector](1).toArray
-    val m = row.getLong(2)
-    // Spark ML IDF semantics: log((m+1)/(df+1)), zeroed below minDocFreq
-    val idf = Array.tabulate(meanTf.length) { j =>
-      if (docFreq(j) >= $(minDocFreq)) math.log((m + 1.0) / (docFreq(j) + 1.0)) else 0.0
-    }
-    val meanTfidf = Array.tabulate(meanTf.length)(j => meanTf(j) * idf(j))
-    val indices = TopKByAvgTFIDF.selectIndices(meanTfidf, $(topK))
+    val (idf, indices) = TopKByAvgTFIDF.idfAndIndices(row.getAs[Vector](0).toArray,
+      row.getAs[Vector](1).toArray, row.getLong(2), $(minDocFreq), $(topK))
     copyValues(new TopKByAvgTFIDFModel(uid, Vectors.dense(idf), indices).setParent(this))
   }
 
@@ -80,6 +71,19 @@ class TopKByAvgTFIDF(override val uid: String)
 }
 
 object TopKByAvgTFIDF {
+  /** The fit's rule from per-bucket mean tf, document frequency and
+    * document count `m`: Spark ML IDF semantics log((m+1)/(df+1)),
+    * zeroed below `minDocFreq`, then the top-k buckets of mean TF-IDF
+    * (idf_j · mean(tf_j), since idf_j is constant within a bucket).
+    * Shared by [[TopKByAvgTFIDF.fit]] and the in-task [[LocalGBT]]. */
+  def idfAndIndices(meanTf: Array[Double], docFreq: Array[Double], m: Long,
+      minDocFreq: Int, k: Int): (Array[Double], Array[Int]) = {
+    val idf = Array.tabulate(meanTf.length) { j =>
+      if (docFreq(j) >= minDocFreq) math.log((m + 1.0) / (docFreq(j) + 1.0)) else 0.0
+    }
+    (idf, selectIndices(Array.tabulate(meanTf.length)(j => meanTf(j) * idf(j)), k))
+  }
+
   /** The reference's selection rule (Transformer.scala:29-43):
     * findTopKThreshold takes k' = min(k, #non-zero values), threshold =
     * k'-th largest value; getGreaterIndices keeps every index >=
@@ -102,7 +106,7 @@ class TopKByAvgTFIDFModel(
     override val uid: String,
     val idf: Vector,
     val selectedIndices: Array[Int])
-    extends Model[TopKByAvgTFIDFModel] with TopKTFIDFParams with MLWritable {
+    extends Model[TopKByAvgTFIDFModel] with TopKTFIDFParams {
 
   override def transform(ds: Dataset[_]): DataFrame = {
     val tf = new HashingTF()
@@ -148,56 +152,5 @@ class TopKByAvgTFIDFModel(
     }
     out(selectedIndices.length) = locationNorm
     Vectors.dense(out)
-  }
-
-  override def write: MLWriter = new TopKByAvgTFIDFModel.Writer(this)
-}
-
-/** Persistence (the reference ships models to storage for the
-  * streaming scorer to load — emr/BuildAndSaveModels.scala,
-  * emr/Models2Object.scala): the idf weight vector is a one-row
-  * parquet at `$path/idf`; the selected indices and params ride a
-  * second one-row parquet at `$path/meta`. (This layout replaced an
-  * earlier nested-IDFModel format; models saved before the single-pass
-  * fit rewrite need re-fitting.) */
-object TopKByAvgTFIDFModel extends MLReadable[TopKByAvgTFIDFModel] {
-
-  private[ml] class Writer(instance: TopKByAvgTFIDFModel) extends MLWriter {
-    override protected def saveImpl(path: String): Unit = {
-      val spark = sparkSession
-      import spark.implicits._
-      Seq((instance.uid, instance.idf.toArray.toSeq))
-        .toDF("uid", "idf")
-        .write.mode("overwrite").parquet(s"$path/idf")
-      Seq((
-        instance.uid, instance.selectedIndices.toSeq,
-        instance.getOrDefault(instance.termsCol),
-        instance.getOrDefault(instance.locationCol),
-        instance.getOrDefault(instance.outputCol),
-        instance.getOrDefault(instance.numFeatures),
-        instance.getOrDefault(instance.minDocFreq),
-        instance.getOrDefault(instance.topK)))
-        .toDF("uid", "indices", "termsCol", "locationCol", "outputCol",
-          "numFeatures", "minDocFreq", "topK")
-        .write.mode("overwrite").parquet(s"$path/meta")
-    }
-  }
-
-  override def read: MLReader[TopKByAvgTFIDFModel] = new MLReader[TopKByAvgTFIDFModel] {
-    override def load(path: String): TopKByAvgTFIDFModel = {
-      val idf = Vectors.dense(
-        sparkSession.read.parquet(s"$path/idf").head()
-          .getAs[Seq[Double]]("idf").toArray)
-      val row = sparkSession.read.parquet(s"$path/meta").head()
-      val m = new TopKByAvgTFIDFModel(
-        row.getAs[String]("uid"), idf,
-        row.getAs[Seq[Int]]("indices").toArray)
-      m.set(m.termsCol, row.getAs[String]("termsCol"))
-        .set(m.locationCol, row.getAs[String]("locationCol"))
-        .set(m.outputCol, row.getAs[String]("outputCol"))
-        .set(m.numFeatures, row.getAs[Int]("numFeatures"))
-        .set(m.minDocFreq, row.getAs[Int]("minDocFreq"))
-        .set(m.topK, row.getAs[Int]("topK"))
-    }
   }
 }

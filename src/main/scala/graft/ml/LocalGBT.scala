@@ -2,8 +2,10 @@ package graft.ml
 
 import org.apache.spark.ml.linalg.Vector
 
-/** One hashed-feature candidate row routed to the in-task trainer. */
-case class TfRow(o_orderkey: Long, domain: String, tf: Vector,
+/** One hashed-feature candidate row routed to the in-task trainer.
+  * `page_id` keys the page (URL) the candidate came from: the 70/30
+  * split and the per-URL selection keep a page's candidates together. */
+case class TfRow(page_id: Long, domain: String, tf: Vector,
     location_norm: Double, label: Double)
 
 /** One domain's train+eval summary (q_gbt_train_eval output row,
@@ -14,9 +16,10 @@ case class GbtDomainRow(domain: String, n_train: Long, n_test: Long,
 
 /** A fitted in-task boosted ensemble: margin = f0 + Σ stepSize·treeₘ(x)
   * — the same boosting-margin confidence the distributed path reads off
-  * `rawPrediction` (reference Transformer.confidenceGBT). */
-final class LocalGBTModel(val f0: Double, val stepSize: Double,
-    val trees: Array[LocalGBT.Tree]) extends Serializable {
+  * `rawPrediction` (reference Transformer.confidenceGBT). A case class
+  * of arrays, so the model map stores it as one parquet struct column. */
+final case class LocalGBTModel(f0: Double, stepSize: Double,
+    trees: Array[LocalGBT.Tree]) {
   def margin(x: Array[Double]): Double = {
     var s = f0
     var i = 0
@@ -26,7 +29,9 @@ final class LocalGBTModel(val f0: Double, val stepSize: Double,
 }
 
 /** Executor-local gradient-boosted trees — the in-task trainer behind
-  * q_gbt_train_eval's small-domain path.
+  * q_gbt_train_eval's small-domain path and the only trainer of the
+  * streaming pipe's per-domain model map ([[ModelMap.trainAndSave]]):
+  * both call [[fitDomain]] inside one `groupByKey(domain)` job.
   *
   * The reference trains one GBT per web domain in a driver loop
   * (GBTDomainSuperParSelectCandid.scala:31-35 `list.par`); at thousands
@@ -52,9 +57,8 @@ object LocalGBT {
     * value; children at left(i)/right(i). Predicts on RAW feature
     * values (thresholds are bin upper edges), so test rows need no
     * binning. */
-  final class Tree(val feature: Array[Int], val threshold: Array[Double],
-      val left: Array[Int], val right: Array[Int],
-      val value: Array[Double]) extends Serializable {
+  final case class Tree(feature: Array[Int], threshold: Array[Double],
+      left: Array[Int], right: Array[Int], value: Array[Double]) {
     def predict(x: Array[Double]): Double = {
       var i = 0
       while (feature(i) >= 0)
@@ -73,7 +77,7 @@ object LocalGBT {
     val y = labels01.map(v => if (v > 0.5) 1.0 else -1.0)
     val yBar = math.max(-1 + 1e-6, math.min(1 - 1e-6, y.sum / math.max(n, 1)))
     val f0 = 0.5 * math.log((1 + yBar) / (1 - yBar))
-    if (n == 0) return new LocalGBTModel(f0, stepSize, Array.empty)
+    if (n == 0) return LocalGBTModel(f0, stepSize, Array.empty)
 
     // equi-depth bin thresholds per feature from the sorted training
     // values (deterministic quantile positions); bin = #thresholds ≤ x
@@ -108,7 +112,7 @@ object LocalGBT {
       while (i < n) { f(i) += stepSize * tree.predict(xs(i)); i += 1 }
       tree
     }.toArray
-    new LocalGBTModel(f0, stepSize, trees)
+    LocalGBTModel(f0, stepSize, trees)
   }
 
   /** One variance-gain regression tree on the pseudo-residuals, grown
@@ -177,49 +181,56 @@ object LocalGBT {
 
     val root = newNode()
     grow(root, Array.range(0, r.length), 0)
-    new Tree(feature.toArray, thr.toArray, left.toArray, right.toArray, value.toArray)
+    Tree(feature.toArray, thr.toArray, left.toArray, right.toArray, value.toArray)
+  }
+
+  /** Featurizer + boosted fit on one domain's training rows, which the
+    * caller has sorted (every accumulation then runs in a fixed order):
+    * [[TopKByAvgTFIDF.fit]]'s rule run locally (df = non-zero count,
+    * mean tf = sum / m), then [[fit]] over [[features]]. Returns the idf
+    * weights, the selected buckets and the model. */
+  def fitDomain(train: Array[TfRow], maxIter: Int, maxDepth: Int,
+      numFeatures: Int = 1000, minDocFreq: Int = 5,
+      topK: Int = 100): (Array[Double], Array[Int], LocalGBTModel) = {
+    val sumTf = new Array[Double](numFeatures)
+    val docFreq = new Array[Double](numFeatures)
+    train.foreach { r =>
+      r.tf.foreachActive { (j, v) =>
+        if (v != 0.0) { sumTf(j) += v; docFreq(j) += 1 }
+      }
+    }
+    val m = train.length
+    val (idf, indices) = TopKByAvgTFIDF.idfAndIndices(sumTf.map(_ / m), docFreq, m,
+      minDocFreq, topK)
+    (idf, indices, fit(train.map(features(idf, indices, _)), train.map(_.label), maxIter, maxDepth))
+  }
+
+  /** tf·idf over the selected buckets, the normalized location appended
+    * — [[TopKByAvgTFIDFModel.transformLocal]] on a pre-hashed row. */
+  private def features(idf: Array[Double], indices: Array[Int], r: TfRow): Array[Double] = {
+    val out = new Array[Double](indices.length + 1)
+    var i = 0
+    while (i < indices.length) { out(i) = r.tf(indices(i)) * idf(indices(i)); i += 1 }
+    out(indices.length) = r.location_norm
+    out
   }
 
   /** Full in-task pipeline for one domain: URL-grouped 70/30 split,
-    * featurizer fit mirroring [[TopKByAvgTFIDF.fit]] bucket-for-bucket
-    * (df = numNonZeros, mean TF-IDF = idf·mean(tf), top-k with ties),
-    * boosted fit, and the reference eval (confusion counts + per-URL
+    * [[fitDomain]], and the reference eval (confusion counts + per-URL
     * argmax-confidence selection). Rows are sorted first so every
     * accumulation is order-independent. */
   def trainEvalDomain(dom: String, rowsIn: Array[TfRow],
-      maxIter: Int, maxDepth: Int, numFeatures: Int = 1000,
-      minDocFreq: Int = 5, topK: Int = 100): GbtDomainRow = {
-    val rows = rowsIn.sortBy(r => (r.o_orderkey, r.location_norm))
-    val (train, test) = rows.partition(_.o_orderkey % 10 < 7)
+      maxIter: Int, maxDepth: Int): GbtDomainRow = {
+    val rows = rowsIn.sortBy(r => (r.page_id, r.location_norm))
+    val (train, test) = rows.partition(_.page_id % 10 < 7)
     val m = train.length
     if (m == 0)
       return GbtDomainRow(dom, 0L, test.length.toLong,
         0L, test.count(_.label == 0.0).toLong, 0L, test.count(_.label == 1.0).toLong,
-        test.map(_.o_orderkey).distinct.length.toLong, 0L, 1L)
+        test.map(_.page_id).distinct.length.toLong, 0L, 1L)
 
-    // featurizer fit (TopKByAvgTFIDF.fit, executed locally)
-    val meanTf = new Array[Double](numFeatures)
-    val docFreq = new Array[Double](numFeatures)
-    train.foreach { r =>
-      r.tf.foreachActive { (j, v) =>
-        if (v != 0.0) { meanTf(j) += v; docFreq(j) += 1 }
-      }
-    }
-    val idf = Array.tabulate(numFeatures) { j =>
-      if (docFreq(j) >= minDocFreq) math.log((m + 1.0) / (docFreq(j) + 1.0)) else 0.0
-    }
-    val meanTfidf = Array.tabulate(numFeatures)(j => meanTf(j) / m * idf(j))
-    val indices = TopKByAvgTFIDF.selectIndices(meanTfidf, topK)
-    def feat(r: TfRow): Array[Double] = {
-      val out = new Array[Double](indices.length + 1)
-      var i = 0
-      while (i < indices.length) { out(i) = r.tf(indices(i)) * idf(indices(i)); i += 1 }
-      out(indices.length) = r.location_norm
-      out
-    }
-
-    val model = fit(train.map(feat), train.map(_.label), maxIter, maxDepth)
-    val scored = test.map(r => (r.o_orderkey, r.label, model.margin(feat(r))))
+    val (idf, indices, model) = fitDomain(train, maxIter, maxDepth)
+    val scored = test.map(r => (r.page_id, r.label, model.margin(features(idf, indices, r))))
     var tp = 0L; var tn = 0L; var fp = 0L; var fn = 0L
     scored.foreach { case (_, label, mg) =>
       val pred = if (mg > 0) 1.0 else 0.0

@@ -131,7 +131,7 @@ object MLQueries {
       val smallResults = new org.apache.spark.ml.feature.HashingTF()
         .setInputCol("terms").setOutputCol("tf").setNumFeatures(1000)
         .transform(feats.filter(!col("domain").isin(largeDomains: _*)))
-        .select(col("o_orderkey"), col("domain"), col("tf"),
+        .select(col("o_orderkey").as("page_id"), col("domain"), col("tf"),
           col("location_norm"), col("label"))
         .as[TfRow]
         .groupByKey(_.domain)

@@ -2,32 +2,41 @@ package graft.ml
 
 import graft.functions.{CharGrams, PriceCandidates, Text}
 import graft.sources.Tables
-import org.apache.spark.ml.classification.{GBTClassificationModel, GBTClassifier}
-import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.ml.feature.HashingTF
+import org.apache.spark.ml.linalg.{Vector, Vectors}
+import org.apache.spark.ml.util.Identifiable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** One domain's trained scorer: the text featurizer fitted on that
-  * domain's training split plus its GBT — the per-domain tuple the
-  * reference ships to storage and broadcasts into the streaming pipe
-  * (um/re/streaming/Htmls2PredsPipe.scala:89-112 loads
+  * domain's training split plus its [[LocalGBT]] ensemble — the
+  * per-domain tuple the reference ships to storage and broadcasts into
+  * the streaming pipe (um/re/streaming/Htmls2PredsPipe.scala:89-112 loads
   * `HashMap[domain → (GBTModel, idf, selectedIndices)]`;
   * um/re/emr/BuildAndSaveModels.scala:36-44 builds and saves it).
   * Both members are Serializable, so the whole map broadcasts. */
-case class DomainModel(featurizer: TopKByAvgTFIDFModel, gbt: GBTClassificationModel)
+case class DomainModel(featurizer: TopKByAvgTFIDFModel, gbt: LocalGBTModel)
+
+/** One stored domain: its run and format tags, the featurizer's uid,
+  * idf weights and selected buckets, and the boosted trees as nested
+  * arrays (f0, step, and per tree the five flattened node arrays). */
+case class MapRow(domain: String, run_id: Long, version: Int, uid: String,
+    idf: Array[Double], indices: Array[Int], gbt: LocalGBTModel) {
+  def model: DomainModel =
+    DomainModel(new TopKByAvgTFIDFModel(uid, Vectors.dense(idf), indices), gbt)
+}
 
 /** The persisted per-domain model map and its lifecycle: train → save →
   * (merge) → load → broadcast → per-record scoring. A map trained in
   * this JVM is scored as trained; `load` serves only a map that is
   * already on disk.
   *
-  * Storage layout under a map root `path`:
-  * {{{
-  *   $path/meta                    one parquet row per domain:
-  *                                 (domain, run_id, version)
-  *   $path/domains/<dom>/featurizer  TopKByAvgTFIDFModel (ML write)
-  *   $path/domains/<dom>/gbt         GBTClassificationModel (native ML write)
-  * }}}
+  * Storage layout: the map root `path` is ONE parquet table of
+  * [[MapRow]]s, one row per domain, written in a single
+  * `coalesce(1)` write. That committed write is the marker that a whole
+  * map exists — there is no separate meta file, and a half-written
+  * table fails to read and is retrained.
   *
   * `merge` implements the reference's model-map refresh
   * (um/re/emr/MergedMapModels.scala): a new training run's per-domain
@@ -39,7 +48,7 @@ object ModelMap {
 
   /** Bump when the on-disk layout or the page/feature construction
     * changes — a version-mismatched map is retrained, never reused. */
-  private val FormatVersion = 2
+  private val FormatVersion = 3
 
   /** Event domains with trained models. `signup` deliberately has none
     * (exercises the missingModel path) and `error` pages carry no
@@ -189,111 +198,71 @@ object ModelMap {
 
   /** Train the per-domain scorers on the event pages' training split
     * (event_id-keyed 70%, whole pages together) and persist the map.
-    * The domain list here is the bounded event alphabet, so a short
-    * driver loop (concurrent fits, as the reference's `list.par`) is the
-    * right shape — the unbounded-domain training path is
-    * [[MLQueries.gbtTrainEval]]'s grouped executor-local trainer.
+    * ONE Spark job: the hashed candidates of the trained domains are
+    * grouped by domain and each group is fitted in-task by
+    * [[LocalGBT.fitDomain]] (the q_gbt_train_eval trainer), rows sorted
+    * by (event_id, location_norm) first so the fit is deterministic.
     * Returns the map as trained: the caller scores with these very
     * models, with no read back from `path`. */
   def trainAndSave(spark: SparkSession, dir: String, path: String,
       runId: Long): Map[String, DomainModel] = {
-    val data = labeledCandidates(syntheticPages(Tables.events(spark, dir)))
-      .filter(col("event_id") % 10 < 7)
-      .cache()
-    try {
-      data.count() // materialize the shared cache before the racing fits
-      val models = perDomain(TrainedDomains) { dom =>
-        val d = data.filter(col("domain") === dom)
-        val fpm = new TopKByAvgTFIDF().fit(d)
-        val gbt = new GBTClassifier()
-          .setMaxIter(5).setMaxDepth(3).setSeed(42L)
-          .setLabelCol("label").setFeaturesCol("features")
-          .fit(fpm.transform(d))
-        DomainModel(fpm, gbt)
-      }
-      save(spark, path, runId, models)
-      models
-    } finally data.unpersist()
-  }
-
-  /** Persist `models` under `path`. Each domain's featurizer and GBT are
-    * written concurrently; `meta` is written last, once every domain's
-    * files are complete, so its presence marks a whole map (the commit
-    * marker [[ensure]] checks). */
-  def save(spark: SparkSession, path: String, runId: Long,
-      models: Map[String, DomainModel]): Unit = {
     import spark.implicits._
-    perDomain(models.keys.toSeq) { dom =>
-      models(dom).featurizer.write.overwrite().save(s"$path/domains/$dom/featurizer")
-      models(dom).gbt.write.overwrite().save(s"$path/domains/$dom/gbt")
-    }
-    models.keys.toSeq.sorted.map(d => (d, runId, FormatVersion))
-      .toDF("domain", "run_id", "version")
-      .write.mode("overwrite").parquet(s"$path/meta")
+    val pages = syntheticPages(Tables.events(spark, dir))
+      .filter(col("domain").isin(TrainedDomains: _*) && col("event_id") % 10 < 7)
+    val rows = new HashingTF().setInputCol("terms").setOutputCol("tf").setNumFeatures(1000)
+      .transform(labeledCandidates(pages))
+      .select(col("event_id").as("page_id"), col("domain"), col("tf"),
+        col("location_norm"), col("label"))
+      .as[TfRow]
+      .groupByKey(_.domain)
+      .mapGroups { (dom, it) =>
+        val (idf, indices, gbt) = LocalGBT.fitDomain(
+          it.toArray.sortBy(r => (r.page_id, r.location_norm)), maxIter = 5, maxDepth = 3)
+        MapRow(dom, runId, FormatVersion, Identifiable.randomUID("topKByAvgTFIDF"), idf, indices, gbt)
+      }
+      .collect()
+    write(spark, path, rows.toSeq)
+    rows.map(r => r.domain -> r.model).toMap
   }
 
-  /** `f` over the domains, one pool thread each, keyed by domain. Returns
-    * only after every call has finished — a failed one is rethrown then,
-    * never while its siblings are still writing. */
-  private def perDomain[A](domains: Seq[String])(f: String => A): Map[String, A] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, domains.length))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val calls = domains.map(dom => dom -> Future(f(dom)))
-      calls.foreach { case (_, c) => Await.ready(c, Duration.Inf) }
-      calls.map { case (dom, c) => dom -> c.value.get.get }.toMap
-    } finally pool.shutdown()
+  /** Persist `models` under `path`, every domain tagged `runId`. */
+  def save(spark: SparkSession, path: String, runId: Long,
+      models: Map[String, DomainModel]): Unit =
+    write(spark, path, models.toSeq.map { case (dom, dm) =>
+      MapRow(dom, runId, FormatVersion, dm.featurizer.uid, dm.featurizer.idf.toArray,
+        dm.featurizer.selectedIndices, dm.gbt)
+    })
+
+  private def write(spark: SparkSession, path: String, rows: Seq[MapRow]): Unit = {
+    import spark.implicits._
+    rows.toDS().coalesce(1).write.mode("overwrite").parquet(path)
+  }
+
+  /** The stored rows; throws if absent or written by another format. */
+  private def read(spark: SparkSession, path: String): Array[MapRow] = {
+    import spark.implicits._
+    val rows = spark.read.parquet(path).as[MapRow].collect()
+    val vs = rows.map(_.version).distinct
+    require(vs.sameElements(Array(FormatVersion)),
+      s"model map at $path has version ${vs.mkString(",")}, expected $FormatVersion")
+    rows
   }
 
   /** Load the map; throws if absent or written by an older format. */
-  def load(spark: SparkSession, path: String): Map[String, DomainModel] = {
-    val meta = spark.read.parquet(s"$path/meta").collect()
-    val vs = meta.map(_.getAs[Int]("version")).distinct
-    require(vs.sameElements(Array(FormatVersion)),
-      s"model map at $path has version ${vs.mkString(",")}, expected $FormatVersion")
-    meta.map { r =>
-      val dom = r.getAs[String]("domain")
-      dom -> DomainModel(
-        TopKByAvgTFIDFModel.load(s"$path/domains/$dom/featurizer"),
-        GBTClassificationModel.load(s"$path/domains/$dom/gbt"))
-    }.toMap
-  }
+  def load(spark: SparkSession, path: String): Map[String, DomainModel] =
+    read(spark, path).map(r => r.domain -> r.model).toMap
 
   /** Per-domain run ids of a saved map (merge bookkeeping). */
   def runIds(spark: SparkSession, path: String): Map[String, Long] =
-    spark.read.parquet(s"$path/meta").collect()
-      .map(r => r.getAs[String]("domain") -> r.getAs[Long]("run_id")).toMap
+    read(spark, path).map(r => r.domain -> r.run_id).toMap
 
   /** Merge a new training run into a base map, newest run_id winning
-    * per domain (ties go to the new run) — MergedMapModels.scala's
-    * refresh. Models are re-saved through their ML writers, so the
+    * per domain (ties go to the new run: it comes first, and `maxBy`
+    * keeps the first maximum) — MergedMapModels.scala's refresh. The
     * merged map is self-contained wherever `out` points. */
-  def merge(spark: SparkSession, basePath: String, newPath: String, out: String): Unit = {
-    val base = runIds(spark, basePath)
-    val fresh = runIds(spark, newPath)
-    val winners: Map[String, (String, Long)] =
-      (base.keySet ++ fresh.keySet).map { dom =>
-        (base.get(dom), fresh.get(dom)) match {
-          case (Some(b), Some(n)) =>
-            dom -> (if (n >= b) (newPath, n) else (basePath, b))
-          case (Some(b), None) => dom -> (basePath, b)
-          case (None, Some(n)) => dom -> (newPath, n)
-          case (None, None) => sys.error(s"unreachable: $dom in neither map")
-        }
-      }.toMap
-    import spark.implicits._
-    winners.foreach { case (dom, (src, _)) =>
-      TopKByAvgTFIDFModel.load(s"$src/domains/$dom/featurizer")
-        .write.overwrite().save(s"$out/domains/$dom/featurizer")
-      GBTClassificationModel.load(s"$src/domains/$dom/gbt")
-        .write.overwrite().save(s"$out/domains/$dom/gbt")
-    }
-    winners.toSeq.sortBy(_._1).map { case (dom, (_, rid)) => (dom, rid, FormatVersion) }
-      .toDF("domain", "run_id", "version")
-      .write.mode("overwrite").parquet(s"$out/meta")
-  }
+  def merge(spark: SparkSession, basePath: String, newPath: String, out: String): Unit =
+    write(spark, out, (read(spark, newPath) ++ read(spark, basePath))
+      .groupBy(_.domain).values.map(_.maxBy(_.run_id)).toSeq)
 
   // ---------------------------------------------------------------------------
   // Ensure + in-process cache (bench runs the pipe repeatedly; the map
@@ -309,13 +278,13 @@ object ModelMap {
   def ensure(spark: SparkSession, dir: String): Map[String, DomainModel] = {
     val path = defaultPath(spark, dir)
     cache.getOrElseUpdate(path, this.synchronized {
-      val exists =
-        try {
-          spark.read.parquet(s"$path/meta").head()
-            .getAs[Int]("version") == FormatVersion
-        } catch { case _: Exception => false }
-      if (exists) load(spark, path)
-      else {
+      val root = new org.apache.hadoop.fs.Path(path)
+      // probe through the FileSystem: reading a missing path with
+      // spark.read logs a stack trace before it throws
+      val stored =
+        if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root)) None
+        else try Some(load(spark, path)) catch { case NonFatal(_) => None }
+      stored.getOrElse {
         val models = trainAndSave(spark, dir, path, runId = 1L)
         pruneStaleSiblings(spark, dir, keep = path)
         models
@@ -327,18 +296,9 @@ object ModelMap {
     * possibly after rewriting the corpus at the same dir). */
   def clearCache(): Unit = { cache.clear(); fpCache.clear() }
 
-  /** GBT boosting margin Σᵢ treeWeightᵢ·treePredᵢ — the reference's
+  /** GBT boosting margin f0 + Σ step·treeₘ(x) — the reference's
     * confidenceGBT (Transformer.scala), computed locally per candidate
     * from the broadcast model. Class-1 iff positive. */
-  def confidence(gbt: GBTClassificationModel, features: Vector): Double = {
-    val trees = gbt.trees
-    val weights = gbt.treeWeights
-    var s = 0.0
-    var i = 0
-    while (i < trees.length) {
-      s += weights(i) * trees(i).predict(features)
-      i += 1
-    }
-    s
-  }
+  def confidence(gbt: LocalGBTModel, features: Vector): Double =
+    gbt.margin(features.toArray)
 }

@@ -109,9 +109,10 @@ object StreamingQueries {
     * extraction (first price-shaped candidate), which grabs the decoy
     * on click/purchase pages — the model (anchored on the learned
     * "price" context) wins those conflicts, so every status of the
-    * decision machine is exercised by real model output. The GBT margin
-    * ranking is deterministic (seed 42, deterministic training split),
-    * so the query stays fully hash-oracled. */
+    * decision machine is exercised by real model output. The margin
+    * ranking is deterministic — [[graft.ml.LocalGBT]] has no random
+    * draw, and its training rows are a fixed split fitted in sorted
+    * order — so the query stays fully hash-oracled. */
   def streamPipe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import graft.ml.ModelMap
@@ -1664,9 +1665,10 @@ object StreamingQueries {
         |ORDER BY c_mktsegment, event_type""".stripMargin,
     // The oracle knows WHICH candidate the trained model selects: by
     // construction (disjoint anchor contexts + per-domain location), the
-    // GBT margin ranks the true-price candidate first on every trained
-    // domain — asserted per-page by StreamingSpec's selection test, so a
-    // model regression fails the spec before it could fail this oracle.
+    // LocalGBT margin ranks the true-price candidate first on every
+    // trained domain — asserted per-page by StreamingSpec's selection
+    // test, so a model regression fails the spec before it could fail
+    // this oracle.
     "q_stream_pipe" ->
       """WITH p AS (
         |  SELECT event_id, user_id, event_type,

@@ -95,8 +95,10 @@ private[graft] object TableSink {
     if (any == null || any.isEmpty) // empty stream wrote no batch
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         schema.add("batch", "long"))
-    else spark.read.option("basePath", dir).parquet(s"$dir/batch=*")
-      .withColumn("batch", col("batch").cast("long"))
+    // the table dir itself, not a `batch=*` glob: partition discovery
+    // yields the same `batch` column, and a glob path makes the reader
+    // log a stack trace while it probes for a stream-sink metadata dir
+    else spark.read.parquet(dir).withColumn("batch", col("batch").cast("long"))
   }
 
   /** Run `updates` (one row per changed key per trigger) into the

@@ -41,8 +41,17 @@ class ModelMapSpec extends SparkSpec {
           s"$dom: idf")
         assert(java.util.Arrays.equals(t.featurizer.selectedIndices,
           l.featurizer.selectedIndices), s"$dom: selectedIndices")
-        assert(java.util.Arrays.equals(t.gbt.treeWeights, l.gbt.treeWeights), s"$dom: treeWeights")
-        assert(t.gbt.trees.length == l.gbt.trees.length, s"$dom: tree count")
+        def bits(x: Double) = java.lang.Double.doubleToLongBits(x)
+        assert(bits(t.gbt.f0) == bits(l.gbt.f0), s"$dom: f0")
+        assert(bits(t.gbt.stepSize) == bits(l.gbt.stepSize), s"$dom: stepSize")
+        assert(t.gbt.trees.nonEmpty && t.gbt.trees.length == l.gbt.trees.length, s"$dom: tree count")
+        t.gbt.trees.zip(l.gbt.trees).zipWithIndex.foreach { case ((a, b), i) =>
+          assert(java.util.Arrays.equals(a.feature, b.feature), s"$dom tree $i: feature")
+          assert(java.util.Arrays.equals(a.threshold, b.threshold), s"$dom tree $i: threshold")
+          assert(java.util.Arrays.equals(a.left, b.left), s"$dom tree $i: left")
+          assert(java.util.Arrays.equals(a.right, b.right), s"$dom tree $i: right")
+          assert(java.util.Arrays.equals(a.value, b.value), s"$dom tree $i: value")
+        }
 
         val rows = cands.getOrElse(dom, Array.empty)
         assert(rows.nonEmpty, s"$dom has no price-shaped candidates")
@@ -52,7 +61,7 @@ class ModelMapSpec extends SparkSpec {
           val fl: Vector = l.featurizer.transformLocal(terms, loc)
           assert(java.util.Arrays.equals(ft.toArray, fl.toArray), s"$dom: transformLocal")
           val (ct, cl) = (ModelMap.confidence(t.gbt, ft), ModelMap.confidence(l.gbt, fl))
-          assert(java.lang.Double.doubleToLongBits(ct) == java.lang.Double.doubleToLongBits(cl),
+          assert(bits(ct) == bits(cl),
             s"$dom: confidence $ct (trained) vs $cl (loaded)")
         }
       }

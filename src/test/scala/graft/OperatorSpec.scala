@@ -1991,21 +1991,6 @@ class OperatorSpec extends SparkSpec {
     }
   }
 
-  test("TopKByAvgTFIDFModel round-trips through save/load") {
-    import spark.implicits._
-    val ds = (0 until 200).map { i =>
-      (i.toLong, Seq("alpha", "beta", s"tok$i"), 0.25, (i % 2).toDouble)
-    }.toDF("o_orderkey", "terms", "location_norm", "label")
-    val m = new graft.ml.TopKByAvgTFIDF().setTopK(5).fit(ds)
-    val dir = java.nio.file.Files.createTempDirectory("graft_model").toString
-    m.write.overwrite().save(s"$dir/fp")
-    val loaded = graft.ml.TopKByAvgTFIDFModel.load(s"$dir/fp")
-    assert(loaded.selectedIndices.toSeq == m.selectedIndices.toSeq)
-    val a = m.transform(ds).select("features").collect().map(_.get(0).toString)
-    val b = loaded.transform(ds).select("features").collect().map(_.get(0).toString)
-    assert(a.toSeq == b.toSeq)
-  }
-
   test("triangle counts match a brute-force check over the mutual graph") {
     val edges = run("q_knn_graph").select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
