@@ -1,6 +1,26 @@
 package graft.ml
 
+import graft.ml.ModelShape.{MaxDepth, MaxIter, NumFeatures, StepSize}
 import org.apache.spark.ml.linalg.Vector
+
+/** The per-domain model's fixed shape (PAPER.md §1, items 3–4): the
+  * featurizer's hashing, IDF and top-k sizes and the boosted
+  * ensemble's rounds, depth and shrinkage. Every trainer reads them
+  * here. */
+object ModelShape {
+  /** HashingTF bucket count. */
+  val NumFeatures = 1000
+  /** IDF minimum document frequency; rarer buckets get idf 0. */
+  val MinDocFreq = 5
+  /** Buckets kept by mean-TF-IDF rank (ties keep extras). */
+  val TopK = 100
+  /** Boosting rounds. */
+  val MaxIter = 5
+  /** Depth of each regression tree. */
+  val MaxDepth = 3
+  /** Shrinkage applied to every tree. */
+  val StepSize = 0.1
+}
 
 /** One hashed-feature candidate row routed to the in-task trainer.
   * `page_id` keys the page (URL) the candidate came from: the 70/30
@@ -14,10 +34,10 @@ case class GbtDomainRow(domain: String, n_train: Long, n_test: Long,
     tp: Long, tn: Long, fp: Long, fn: Long,
     n_urls: Long, top_label_hits: Long, n_features: Long)
 
-/** A fitted in-task boosted ensemble: margin = f0 + Σ stepSize·treeₘ(x)
-  * — the same boosting-margin confidence the distributed path reads off
-  * `rawPrediction` (reference Transformer.confidenceGBT). A case class
-  * of arrays, so the model map stores it as one parquet struct column. */
+/** A fitted in-task boosted ensemble: margin = f0 + Σ stepSize·treeₘ(x),
+  * the reference's boosting-margin confidence (Transformer
+  * .confidenceGBT). A case class of arrays, so the model map stores it
+  * as one parquet struct column. */
 final case class LocalGBTModel(f0: Double, stepSize: Double,
     trees: Array[LocalGBT.Tree]) {
   def margin(x: Array[Double]): Double = {
@@ -28,29 +48,28 @@ final case class LocalGBTModel(f0: Double, stepSize: Double,
   }
 }
 
-/** Executor-local gradient-boosted trees — the in-task trainer behind
-  * q_gbt_train_eval's small-domain path and the only trainer of the
-  * streaming pipe's per-domain model map ([[ModelMap.trainAndSave]]):
-  * both call [[fitDomain]] inside one `groupByKey(domain)` job.
+/** Executor-local gradient-boosted trees: the one per-domain trainer,
+  * behind q_gbt_train_eval and the streaming pipe's model map
+  * ([[ModelMap.trainAndSave]]). Both call [[fitDomain]] inside one
+  * `groupByKey(domain)` job.
   *
   * The reference trains one GBT per web domain in a driver loop
   * (GBTDomainSuperParSelectCandid.scala:31-35 `list.par`); at thousands
   * of domains that serializes ~N/pool distributed fits with per-fit
-  * scheduling overhead — the r6-flagged scale-killer. Here domains whose
-  * capped sample fits one task are instead trained INSIDE a single
-  * distributed job (`groupByKey(domain).flatMapGroups`), so the cluster
+  * scheduling overhead. Here every domain is trained INSIDE a single
+  * distributed job (`groupByKey(domain).mapGroups`), so the cluster
   * runs min(#domains, #cores) independent fits concurrently with zero
-  * per-fit job scheduling; only oversized domains fall back to
-  * distributed Spark ML fits.
+  * per-fit job scheduling. A domain's rows must fit one task: the
+  * largest q_gbt_train_eval domain has 17,388 rows at sf0.1 (PERF.md).
   *
   * Standard gradient boosting with logistic loss on y∈{-1,+1}
   * (L = log(1+e^(-2yF)), the loss family Spark ML's GBTClassifier
   * uses): depth-limited regression trees fit to pseudo-residuals
-  * 2y/(1+e^(2yF)) on equi-depth binned features, leaf value = mean
-  * residual, shrinkage 0.1. Deterministic by construction: callers
-  * pre-sort rows (accumulation order), bin thresholds come from exact
-  * sorted-sample quantile positions, and split ties break on the lowest
-  * (feature, bin). */
+  * 2y/(1+e^(2yF)) on equi-depth binned features, Newton-step leaves,
+  * shrinkage [[ModelShape.StepSize]]. Deterministic by construction:
+  * callers pre-sort rows (accumulation order), bin thresholds come from
+  * exact sorted-sample quantile positions, and split ties break on the
+  * lowest (feature, bin). */
 object LocalGBT {
 
   /** Flattened binary tree: node i has feature/threshold or a leaf
@@ -71,13 +90,13 @@ object LocalGBT {
   private val MinGain = 1e-12
 
   def fit(xs: Array[Array[Double]], labels01: Array[Double],
-      maxIter: Int, maxDepth: Int, stepSize: Double = 0.1): LocalGBTModel = {
+      maxIter: Int, maxDepth: Int): LocalGBTModel = {
     val n = xs.length
     val d = if (n == 0) 0 else xs(0).length
     val y = labels01.map(v => if (v > 0.5) 1.0 else -1.0)
     val yBar = math.max(-1 + 1e-6, math.min(1 - 1e-6, y.sum / math.max(n, 1)))
     val f0 = 0.5 * math.log((1 + yBar) / (1 - yBar))
-    if (n == 0) return LocalGBTModel(f0, stepSize, Array.empty)
+    if (n == 0) return LocalGBTModel(f0, StepSize, Array.empty)
 
     // equi-depth bin thresholds per feature from the sorted training
     // values (deterministic quantile positions); bin = #thresholds ≤ x
@@ -109,10 +128,10 @@ object LocalGBT {
       val r = Array.tabulate(n)(i => 2 * y(i) / (1 + math.exp(2 * y(i) * f(i))))
       val tree = fitTree(xs, bins, thresholds, r, maxDepth)
       var i = 0
-      while (i < n) { f(i) += stepSize * tree.predict(xs(i)); i += 1 }
+      while (i < n) { f(i) += StepSize * tree.predict(xs(i)); i += 1 }
       tree
     }.toArray
-    LocalGBTModel(f0, stepSize, trees)
+    LocalGBTModel(f0, StepSize, trees)
   }
 
   /** One variance-gain regression tree on the pseudo-residuals, grown
@@ -187,40 +206,27 @@ object LocalGBT {
   /** Featurizer + boosted fit on one domain's training rows, which the
     * caller has sorted (every accumulation then runs in a fixed order):
     * [[TopKByAvgTFIDF.fit]]'s rule run locally (df = non-zero count,
-    * mean tf = sum / m), then [[fit]] over [[features]]. Returns the idf
-    * weights, the selected buckets and the model. */
-  def fitDomain(train: Array[TfRow], maxIter: Int, maxDepth: Int,
-      numFeatures: Int = 1000, minDocFreq: Int = 5,
-      topK: Int = 100): (Array[Double], Array[Int], LocalGBTModel) = {
-    val sumTf = new Array[Double](numFeatures)
-    val docFreq = new Array[Double](numFeatures)
+    * mean tf = sum / m), then [[fit]] over the featurizer's
+    * [[TopKByAvgTFIDF.features]]. */
+  def fitDomain(train: Array[TfRow]): DomainModel = {
+    val sumTf = new Array[Double](NumFeatures)
+    val docFreq = new Array[Double](NumFeatures)
     train.foreach { r =>
       r.tf.foreachActive { (j, v) =>
         if (v != 0.0) { sumTf(j) += v; docFreq(j) += 1 }
       }
     }
     val m = train.length
-    val (idf, indices) = TopKByAvgTFIDF.idfAndIndices(sumTf.map(_ / m), docFreq, m,
-      minDocFreq, topK)
-    (idf, indices, fit(train.map(features(idf, indices, _)), train.map(_.label), maxIter, maxDepth))
-  }
-
-  /** tf·idf over the selected buckets, the normalized location appended
-    * — [[TopKByAvgTFIDFModel.transformLocal]] on a pre-hashed row. */
-  private def features(idf: Array[Double], indices: Array[Int], r: TfRow): Array[Double] = {
-    val out = new Array[Double](indices.length + 1)
-    var i = 0
-    while (i < indices.length) { out(i) = r.tf(indices(i)) * idf(indices(i)); i += 1 }
-    out(indices.length) = r.location_norm
-    out
+    val featurizer = TopKByAvgTFIDF.fromStats(sumTf.map(_ / m), docFreq, m)
+    DomainModel(featurizer, fit(train.map(r => featurizer.features(r.tf, r.location_norm)),
+      train.map(_.label), MaxIter, MaxDepth))
   }
 
   /** Full in-task pipeline for one domain: URL-grouped 70/30 split,
     * [[fitDomain]], and the reference eval (confusion counts + per-URL
     * argmax-confidence selection). Rows are sorted first so every
     * accumulation is order-independent. */
-  def trainEvalDomain(dom: String, rowsIn: Array[TfRow],
-      maxIter: Int, maxDepth: Int): GbtDomainRow = {
+  def trainEvalDomain(dom: String, rowsIn: Array[TfRow]): GbtDomainRow = {
     val rows = rowsIn.sortBy(r => (r.page_id, r.location_norm))
     val (train, test) = rows.partition(_.page_id % 10 < 7)
     val m = train.length
@@ -229,8 +235,9 @@ object LocalGBT {
         0L, test.count(_.label == 0.0).toLong, 0L, test.count(_.label == 1.0).toLong,
         test.map(_.page_id).distinct.length.toLong, 0L, 1L)
 
-    val (idf, indices, model) = fitDomain(train, maxIter, maxDepth)
-    val scored = test.map(r => (r.page_id, r.label, model.margin(features(idf, indices, r))))
+    val dm = fitDomain(train)
+    val scored = test.map(r =>
+      (r.page_id, r.label, dm.gbt.margin(dm.featurizer.features(r.tf, r.location_norm))))
     var tp = 0L; var tn = 0L; var fp = 0L; var fn = 0L
     scored.foreach { case (_, label, mg) =>
       val pred = if (mg > 0) 1.0 else 0.0
@@ -239,14 +246,13 @@ object LocalGBT {
       else if (label == 0.0 && pred == 1.0) fp += 1
       else fn += 1
     }
-    // per-URL argmax-confidence candidate (Transformer.scala:322-337),
-    // ties broken like the distributed path's (confidence desc, label
-    // desc) window
+    // per-URL argmax-confidence candidate (Transformer.scala:322-337);
+    // ties break on (confidence desc, label desc)
     val byUrl = scored.groupBy(_._1)
     val hits = byUrl.valuesIterator
       .map(_.maxBy { case (_, label, mg) => (mg, label) })
       .count(_._2 == 1.0)
     GbtDomainRow(dom, m.toLong, test.length.toLong, tp, tn, fp, fn,
-      byUrl.size.toLong, hits.toLong, indices.length + 1L)
+      byUrl.size.toLong, hits.toLong, dm.featurizer.selectedIndices.length + 1L)
   }
 }

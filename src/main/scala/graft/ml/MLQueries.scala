@@ -3,9 +3,7 @@ package graft.ml
 import graft.sources.Tables
 import org.apache.spark.ml.classification.{GBTClassifier, LinearSVC, RandomForestClassifier}
 import org.apache.spark.ml.feature.{PCA, VectorAssembler}
-import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** ML pipeline queries (SURVEY §2 rows 19-21), re-expressing the
@@ -21,13 +19,13 @@ import org.apache.spark.sql.functions._
   * q_gbt_train_eval follows um/re/domain/models/
   * GBTDomainSuperParSelectCandid.scala: per-domain GBT over TEXT
   * features — each extracted price candidate is featurized with the
-  * [[TopKByAvgTFIDF]] estimator (HashingTF(1000) → IDF(minDocFreq=5) →
+  * [[TopKByAvgTFIDF]] featurizer (HashingTF(1000) → IDF(minDocFreq=5) →
   * mean-TFIDF top-100 projection, location appended), fitted on that
   * domain's training split exactly as the reference does. URL-grouped
   * 70/30 split, per-URL argmax-confidence candidate selection, and the
-  * evaluateModel confusion metrics. Domains are bounded (reference
-  * trains one model per web domain), so the driver loops over domains
-  * while each fit/score runs distributed; at 100 TB the per-domain
+  * evaluateModel confusion metrics. Every domain (the reference trains
+  * one model per web domain) is fitted and scored by [[LocalGBT]]
+  * inside one Spark job, one task per domain; at 100 TB the per-domain
   * training sample is capped by a deterministic key-mod filter.
   *
   * q_model_zoo covers the remaining model families (RandomForest,
@@ -70,7 +68,7 @@ object MLQueries {
     * normalized by page length; label = isTrueCandid (candidate parses
     * to the page's true price). Deterministic ~5% URL sample cap keeps
     * the training job bounded at any corpus scale. */
-  private def candidateFeatures(spark: SparkSession, dir: String): DataFrame = {
+  private[graft] def candidateFeatures(spark: SparkSession, dir: String): DataFrame = {
     import graft.functions.{CharGrams, Text}
     val cand = graft.operators.Extraction.labeledCandidates(spark, dir)
       .filter(pmod(xxhash64(col("o_orderkey")), lit(20)) === 0)
@@ -104,117 +102,33 @@ object MLQueries {
 
   /** q_gbt_train_eval: per-domain GBT + per-URL argmax selection.
     * The reference trains numIterations=30 / maxDepth=5
-    * (GBTDomainSuperParSelectCandid.scala:63-64); the benchmark default
-    * is lighter — pass the reference values to reproduce its cost.
+    * (GBTDomainSuperParSelectCandid.scala:63-64); graft's model is
+    * lighter ([[ModelShape]]).
     *
-    * Scale shape (replacing the r6-flagged driver fit-loop): domains are
-    * routed by sample size. Any domain whose capped sample fits one task
-    * (≤ `localRowCap` rows) trains EXECUTOR-LOCAL inside a single
-    * `groupByKey(domain).flatMapGroups` job — at the reference's
-    * thousands of web domains that is min(#domains, #cores) concurrent
-    * in-task fits with zero per-fit job-scheduling overhead, instead of
-    * ~N/pool serialized distributed fits. Only oversized domains (rare:
-    * a giant retailer) fall back to the distributed Spark ML fit. The
-    * only driver-side collect is the 1-row-per-domain routing table. */
-  def gbtTrainEval(spark: SparkSession, dir: String,
-      maxIter: Int = 5, maxDepth: Int = 3, localRowCap: Long = 200000L): DataFrame = {
+    * Scale shape (replacing the reference's driver fit-loop): every
+    * domain trains EXECUTOR-LOCAL inside one
+    * `groupByKey(domain).mapGroups` job ([[LocalGBT.trainEvalDomain]])
+    * — at the reference's thousands of web domains that is
+    * min(#domains, #cores) concurrent in-task fits with zero per-fit
+    * job-scheduling overhead. The candidate sample is capped upstream,
+    * so a domain's rows fit one task; only the one summary row per
+    * domain is collected. */
+  def gbtTrainEval(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    // ONE cache of the expensive extraction+grams scan, shared by the
-    // routing count, the in-task path (HashingTF is map-only on top of
-    // it), and the distributed path — a large domain no longer triggers
-    // a second scan of the input
-    val feats = candidateFeatures(spark, dir).cache()
-    try {
-      val counts = feats.groupBy("domain").agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val largeDomains = counts.filter(_._2 > localRowCap).keys.toSeq.sorted
-      val smallResults = new org.apache.spark.ml.feature.HashingTF()
-        .setInputCol("terms").setOutputCol("tf").setNumFeatures(1000)
-        .transform(feats.filter(!col("domain").isin(largeDomains: _*)))
-        .select(col("o_orderkey").as("page_id"), col("domain"), col("tf"),
-          col("location_norm"), col("label"))
-        .as[TfRow]
-        .groupByKey(_.domain)
-        .flatMapGroups { (dom: String, it: Iterator[TfRow]) =>
-          Iterator.single(LocalGBT.trainEvalDomain(dom, it.toArray, maxIter, maxDepth))
-        }
-        .collect() // one row per domain
-      val largeResults = trainEvalDistributed(spark, feats, largeDomains, maxIter, maxDepth)
-      (smallResults ++ largeResults).toSeq
-        .map(r => (r.domain, r.n_train, r.n_test, r.tp, r.tn, r.fp, r.fn,
-          r.n_urls, r.top_label_hits, r.n_features))
-        .toDF("domain", "n_train", "n_test", "tp", "tn", "fp", "fn",
-          "n_urls", "top_label_hits", "n_features")
-        .withColumn("accuracy",
-          // floor-scale, not round(): keeps the column oracle-able the day
-          // this query gains a SQL oracle (round() on computed doubles
-          // diverges between engines on half-way cases)
-          floor((col("tp") + col("tn")) / (col("tp") + col("tn") + col("fp") + col("fn")) * 1e6 + 0.5) / 1e6)
-        .orderBy("domain")
-    } finally feats.unpersist()
-  }
-
-  /** The distributed Spark ML fit path, kept for domains whose capped
-    * sample exceeds one task (each fit is a cluster job; a bounded pool
-    * overlaps them, the reference's `list.par` shape). `feats` is the
-    * caller's already-cached candidateFeatures scan — filtered here,
-    * never re-read from disk. Returns one summary row per domain. */
-  private def trainEvalDistributed(spark: SparkSession, feats: DataFrame,
-      domains: Seq[String], maxIter: Int, maxDepth: Int): Seq[GbtDomainRow] = {
-    if (domains.isEmpty) return Nil
-    val data = feats.filter(col("domain").isin(domains: _*))
-    val splitCounts = data.groupBy("domain").agg(
-      sum(when(col("o_orderkey") % 10 < 7, 1L).otherwise(0L)).as("n_train"),
-      sum(when(col("o_orderkey") % 10 >= 7, 1L).otherwise(0L)).as("n_test"))
-      .collect()
-      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val pool = new scala.collection.parallel.ForkJoinTaskSupport(
-      new java.util.concurrent.ForkJoinPool(math.min(domains.length, 4)))
-    val parDomains = scala.collection.parallel.immutable.ParVector(domains.toIndexedSeq: _*)
-    parDomains.tasksupport = pool
-    try {
-      parDomains.map { dom =>
-        val d = data.filter(col("domain") === dom)
-        // URL-grouped split: whole pages go to train or test together
-        val train = d.filter(col("o_orderkey") % 10 < 7)
-        val test = d.filter(col("o_orderkey") % 10 >= 7)
-        // per-domain text featurization fitted on this domain's training
-        // split only (GBTDomainSuperParSelectCandid.scala:50-57):
-        // HashingTF(1000) → IDF(minDocFreq=5) → mean-TFIDF top-100
-        val fpm = new TopKByAvgTFIDF().fit(train)
-        val model = new GBTClassifier()
-          .setMaxIter(maxIter).setMaxDepth(maxDepth).setSeed(42L)
-          .setLabelCol("label").setFeaturesCol("features")
-          .fit(fpm.transform(train))
-        val scored = model.transform(fpm.transform(test))
-          .select(col("o_orderkey"), col("label"),
-            col("prediction"),
-            // confidence = the boosting margin Σᵢ treeWeightᵢ·treePredᵢ
-            // (Transformer.scala confidenceGBT); Spark ML surfaces it as
-            // rawPrediction = [-margin, margin]
-            element_at(vector_to_array(col("rawPrediction")), 2).as("confidence"))
-        // per-URL argmax-confidence candidate (Transformer.scala:322-337)
-        val w = Window.partitionBy("o_orderkey")
-          .orderBy(col("confidence").desc, col("label").desc)
-        val top = scored.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        // coalesce: sum() over an empty test split is null, not 0
-        val agg = scored.agg(
-          coalesce(sum(when(col("label") === 1.0 && col("prediction") === 1.0, 1L).otherwise(0L)), lit(0L)).as("tp"),
-          coalesce(sum(when(col("label") === 0.0 && col("prediction") === 0.0, 1L).otherwise(0L)), lit(0L)).as("tn"),
-          coalesce(sum(when(col("label") === 0.0 && col("prediction") === 1.0, 1L).otherwise(0L)), lit(0L)).as("fp"),
-          coalesce(sum(when(col("label") === 1.0 && col("prediction") === 0.0, 1L).otherwise(0L)), lit(0L)).as("fn"))
-          .collect()(0)
-        // one fused pass over the per-URL argmax rows (was count + count)
-        val topAgg = top.agg(
-          count(lit(1)).as("n_urls"),
-          coalesce(sum(when(col("label") === 1.0, 1L).otherwise(0L)), lit(0L)).as("hits"))
-          .collect()(0)
-        val (nTrain, nTest) = splitCounts(dom)
-        GbtDomainRow(dom, nTrain, nTest, agg.getLong(0), agg.getLong(1),
-          agg.getLong(2), agg.getLong(3), topAgg.getLong(0), topAgg.getLong(1),
-          fpm.selectedIndices.length + 1L)
-      }.seq
-    } finally pool.environment.shutdown()
+    TopKByAvgTFIDF.hashTerms(candidateFeatures(spark, dir), "tf")
+      .select(col("o_orderkey").as("page_id"), col("domain"), col("tf"),
+        col("location_norm"), col("label"))
+      .as[TfRow]
+      .groupByKey(_.domain)
+      .mapGroups((dom, it) => LocalGBT.trainEvalDomain(dom, it.toArray))
+      .collect() // one row per domain
+      .toSeq.toDF()
+      .withColumn("accuracy",
+        // floor-scale, not round(): keeps the column oracle-able the day
+        // this query gains a SQL oracle (round() on computed doubles
+        // diverges between engines on half-way cases)
+        floor((col("tp") + col("tn")) / (col("tp") + col("tn") + col("fp") + col("fn")) * 1e6 + 0.5) / 1e6)
+      .orderBy("domain")
   }
 
   /** q_gbt_validation: the sub-model sweep of models/ValidateModels
@@ -225,7 +139,7 @@ object MLQueries {
     * distributed pass computing the staged losses). Output: one row per
     * ensemble size with its test loss, best size flagged. Rows-only
     * (training path); the curve is deterministic given the seed. */
-  def gbtValidation(spark: SparkSession, dir: String, maxIter: Int = 6): DataFrame = {
+  def gbtValidation(spark: SparkSession, dir: String): DataFrame = {
     // halve candidateFeatures' 5% URL sample again (h%40==0 ⊂ h%20==0):
     // a validation curve needs far fewer points than the training job
     val data = candidateFeatures(spark, dir)
@@ -235,9 +149,9 @@ object MLQueries {
     try {
       val train = data.filter(col("o_orderkey") % 10 < 7)
       val test = data.filter(col("o_orderkey") % 10 >= 7)
-      val fpm = new TopKByAvgTFIDF().fit(train)
+      val fpm = TopKByAvgTFIDF.fit(train)
       val model = new GBTClassifier()
-        .setMaxIter(maxIter).setMaxDepth(2).setSeed(42L)
+        .setMaxIter(6).setMaxDepth(2).setSeed(42L)
         .setLabelCol("label").setFeaturesCol("features")
         .fit(fpm.transform(train))
       val losses = model.evaluateEachIteration(fpm.transform(test))
@@ -266,8 +180,8 @@ object MLQueries {
       }
       data.count() // materialize the shared cache before the racing fits
       // the four model families are independent — train them
-      // concurrently (same pattern as the per-domain GBT loop); each fit
-      // is a distributed job, so this trades idle executors for overlap
+      // concurrently; each fit is a distributed job, so this trades idle
+      // executors for overlap
       import scala.concurrent.{Await, ExecutionContext, Future}
       import scala.concurrent.duration.Duration
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)

@@ -2,9 +2,7 @@ package graft.ml
 
 import graft.functions.{CharGrams, PriceCandidates, Text}
 import graft.sources.Tables
-import org.apache.spark.ml.feature.HashingTF
-import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.ml.util.Identifiable
+import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
@@ -15,17 +13,14 @@ import scala.util.control.NonFatal
   * the streaming pipe (um/re/streaming/Htmls2PredsPipe.scala:89-112 loads
   * `HashMap[domain → (GBTModel, idf, selectedIndices)]`;
   * um/re/emr/BuildAndSaveModels.scala:36-44 builds and saves it).
-  * Both members are Serializable, so the whole map broadcasts. */
-case class DomainModel(featurizer: TopKByAvgTFIDFModel, gbt: LocalGBTModel)
+  * Both members are Serializable, so the whole map broadcasts, and
+  * both are case classes of arrays, so a stored domain is one struct. */
+case class DomainModel(featurizer: TopKByAvgTFIDF, gbt: LocalGBTModel)
 
-/** One stored domain: its run and format tags, the featurizer's uid,
-  * idf weights and selected buckets, and the boosted trees as nested
-  * arrays (f0, step, and per tree the five flattened node arrays). */
-case class MapRow(domain: String, run_id: Long, version: Int, uid: String,
-    idf: Array[Double], indices: Array[Int], gbt: LocalGBTModel) {
-  def model: DomainModel =
-    DomainModel(new TopKByAvgTFIDFModel(uid, Vectors.dense(idf), indices), gbt)
-}
+/** One stored domain: its run and format tags and its model (the
+  * featurizer's idf weights and selected buckets; the boosted trees as
+  * f0, step, and per tree the five flattened node arrays). */
+case class MapRow(domain: String, run_id: Long, version: Int, model: DomainModel)
 
 /** The persisted per-domain model map and its lifecycle: train → save →
   * (merge) → load → broadcast → per-record scoring. A map trained in
@@ -48,7 +43,7 @@ object ModelMap {
 
   /** Bump when the on-disk layout or the page/feature construction
     * changes — a version-mismatched map is retrained, never reused. */
-  private val FormatVersion = 3
+  private val FormatVersion = 4
 
   /** Event domains with trained models. `signup` deliberately has none
     * (exercises the missingModel path) and `error` pages carry no
@@ -209,16 +204,14 @@ object ModelMap {
     import spark.implicits._
     val pages = syntheticPages(Tables.events(spark, dir))
       .filter(col("domain").isin(TrainedDomains: _*) && col("event_id") % 10 < 7)
-    val rows = new HashingTF().setInputCol("terms").setOutputCol("tf").setNumFeatures(1000)
-      .transform(labeledCandidates(pages))
+    val rows = TopKByAvgTFIDF.hashTerms(labeledCandidates(pages), "tf")
       .select(col("event_id").as("page_id"), col("domain"), col("tf"),
         col("location_norm"), col("label"))
       .as[TfRow]
       .groupByKey(_.domain)
       .mapGroups { (dom, it) =>
-        val (idf, indices, gbt) = LocalGBT.fitDomain(
-          it.toArray.sortBy(r => (r.page_id, r.location_norm)), maxIter = 5, maxDepth = 3)
-        MapRow(dom, runId, FormatVersion, Identifiable.randomUID("topKByAvgTFIDF"), idf, indices, gbt)
+        MapRow(dom, runId, FormatVersion,
+          LocalGBT.fitDomain(it.toArray.sortBy(r => (r.page_id, r.location_norm))))
       }
       .collect()
     write(spark, path, rows.toSeq)
@@ -228,10 +221,7 @@ object ModelMap {
   /** Persist `models` under `path`, every domain tagged `runId`. */
   def save(spark: SparkSession, path: String, runId: Long,
       models: Map[String, DomainModel]): Unit =
-    write(spark, path, models.toSeq.map { case (dom, dm) =>
-      MapRow(dom, runId, FormatVersion, dm.featurizer.uid, dm.featurizer.idf.toArray,
-        dm.featurizer.selectedIndices, dm.gbt)
-    })
+    write(spark, path, models.toSeq.map { case (dom, dm) => MapRow(dom, runId, FormatVersion, dm) })
 
   private def write(spark: SparkSession, path: String, rows: Seq[MapRow]): Unit = {
     import spark.implicits._

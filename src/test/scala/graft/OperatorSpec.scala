@@ -875,31 +875,45 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("LocalGBT and the distributed GBTClassifier agree on the same domains") {
-    // same data through both trainer routes: localRowCap=MaxValue forces
-    // every domain through the in-task LocalGBT, 0 forces the Spark ML
-    // fit. The algorithms differ (Newton leaves / 32-bin histograms vs
-    // Spark's GBT), so metrics agree within tolerance, not bit-for-bit —
-    // this pins that tolerance so a localRowCap change can't silently
-    // route a domain to a much weaker trainer.
-    def byDomain(cap: Long) =
-      graft.ml.MLQueries.gbtTrainEval(spark, sf, localRowCap = cap)
-        .collect().map(r => r.getString(0) -> r).toMap
-    val local = byDomain(Long.MaxValue)
-    val dist = byDomain(0L)
-    assert(local.keySet == dist.keySet)
-    local.keys.foreach { dom =>
-      val (l, d) = (local(dom), dist(dom))
-      // the URL-grouped split is trainer-independent
-      assert(l.getAs[Long]("n_train") == d.getAs[Long]("n_train"), s"$dom n_train")
-      assert(l.getAs[Long]("n_test") == d.getAs[Long]("n_test"), s"$dom n_test")
-      val accL = l.getAs[Double]("accuracy")
-      val accD = d.getAs[Double]("accuracy")
-      // measured r9: both routes reach accuracy 1.0 on every domain at
-      // this sf (|Δ| = 0.0 exactly); 0.02 leaves room for a noisier
-      // corpus while still catching a materially weaker trainer
-      assert(math.abs(accL - accD) <= 0.02,
-        s"$dom: local accuracy $accL vs distributed $accD")
-    }
+    // q_gbt_train_eval trains every domain with the in-task LocalGBT.
+    // The reference trainer is Spark ML's GBTClassifier, fitted here on
+    // the same candidates, split and featurizer output, one model per
+    // domain. The algorithms differ (Newton leaves / 32-bin histograms
+    // vs Spark's GBT), so metrics agree within tolerance, not
+    // bit-for-bit — this pins that tolerance so a trainer change can't
+    // silently make the per-domain model much weaker.
+    import graft.ml.{MLQueries, ModelShape, TopKByAvgTFIDF}
+    val local = MLQueries.gbtTrainEval(spark, sf)
+      .collect().map(r => r.getString(0) -> r).toMap
+    val feats = MLQueries.candidateFeatures(spark, sf).cache()
+    try {
+      val domains = feats.select("domain").distinct().collect().map(_.getString(0)).toSet
+      assert(local.keySet == domains)
+      domains.foreach { dom =>
+        val d = feats.filter(col("domain") === dom)
+        // URL-grouped split: whole pages go to train or test together
+        val train = d.filter(col("o_orderkey") % 10 < 7)
+        val test = d.filter(col("o_orderkey") % 10 >= 7)
+        val fpm = TopKByAvgTFIDF.fit(train)
+        val scored = new org.apache.spark.ml.classification.GBTClassifier()
+          .setMaxIter(ModelShape.MaxIter).setMaxDepth(ModelShape.MaxDepth)
+          .setStepSize(ModelShape.StepSize).setSeed(42L)
+          .fit(fpm.transform(train))
+          .transform(fpm.transform(test))
+        val l = local(dom)
+        // the URL-grouped split is trainer-independent
+        assert(l.getAs[Long]("n_train") == train.count(), s"$dom n_train")
+        val nTest = scored.count()
+        assert(l.getAs[Long]("n_test") == nTest, s"$dom n_test")
+        val accL = l.getAs[Double]("accuracy")
+        val accD = scored.filter(col("label") === col("prediction")).count().toDouble / nTest
+        // measured r9: both trainers reach accuracy 1.0 on every domain at
+        // this sf (|Δ| = 0.0 exactly); 0.02 leaves room for a noisier
+        // corpus while still catching a materially weaker trainer
+        assert(math.abs(accL - accD) <= 0.02,
+          s"$dom: local accuracy $accL vs distributed $accD")
+      }
+    } finally feats.unpersist()
   }
 
   test("hhi equals a local brute-force concentration recompute") {
@@ -6007,7 +6021,7 @@ class OperatorSpec extends SparkSpec {
     val ds = (0 until 200).map { i =>
       (i.toLong, Seq("alpha", "beta", s"tok$i", "gamma", "delta"), 0.5, (i % 2).toDouble)
     }.toDF("o_orderkey", "terms", "location_norm", "label")
-    val m = new graft.ml.TopKByAvgTFIDF().setTopK(3).fit(ds)
+    val m = graft.ml.TopKByAvgTFIDF.fit(ds)
     assert(m.selectedIndices.nonEmpty)
     val v = m.transform(ds).select("features")
       .head.getAs[org.apache.spark.ml.linalg.Vector](0)

@@ -125,10 +125,16 @@ class StreamingSpec extends SparkSpec {
       "view.example.com" -> 1L, "purchase.example.com" -> 1L,
       "click.example.com" -> 2L))
     val merged = ModelMap.load(spark, out)
-    assert(merged("click.example.com").featurizer.uid == clickV2.featurizer.uid,
+    // a featurizer is its idf weights and selected buckets; compare them
+    // bit for bit (Arrays.equals on doubles compares their bits)
+    def same(a: graft.ml.TopKByAvgTFIDF, b: graft.ml.TopKByAvgTFIDF) =
+      java.util.Arrays.equals(a.idf, b.idf) &&
+        java.util.Arrays.equals(a.selectedIndices, b.selectedIndices)
+    assert(!same(models("click.example.com").featurizer, clickV2.featurizer),
+      "the stand-in model must be distinguishable from the one it replaces")
+    assert(same(merged("click.example.com").featurizer, clickV2.featurizer),
       "merged map serves the stale model for a re-trained domain")
-    assert(merged("view.example.com").featurizer.uid ==
-      models("view.example.com").featurizer.uid)
+    assert(same(merged("view.example.com").featurizer, models("view.example.com").featurizer))
   }
 
   test("model map path: rewritten corpus invalidates, same corpus reuses") {
