@@ -47,12 +47,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         children(0),
         intLiteral("word_shingles", "k", children(1)))))
     e.injectFunction((
-      org.apache.spark.sql.catalyst.FunctionIdentifier("char_grams"),
-      new ExpressionInfo(classOf[graft.functions.CharGrams].getName, "char_grams"),
-      (children: Seq[Expression]) => graft.functions.CharGrams(
-        children(0),
-        intLiteral("char_grams", "n", children(1)))))
-    e.injectFunction((
       org.apache.spark.sql.catalyst.FunctionIdentifier("heavy_hitters"),
       new ExpressionInfo(classOf[graft.functions.HeavyHitters].getName, "heavy_hitters"),
       (children: Seq[Expression]) => graft.functions.HeavyHitters(

@@ -1,16 +1,18 @@
 package graft.functions
 
-/** JVM-side text kernels for in-task (per-record) scoring — the local
-  * twins of the [[Text]] column functions, used where a broadcast model
-  * map scores candidates inside a `mapPartitions` (the streaming scorer,
-  * reference um/re/streaming/Htmls2PredsPipe.scala:89-112) and a column
-  * plan cannot express per-record argmax over a stream.
+/** JVM-side text kernels. `charGrams` and `tokenize` are the
+  * candidate featurizer's one kernel ([[graft.ml.TopKByAvgTFIDF.terms]]),
+  * run per record by training, eval and the streaming scorer alike;
+  * `parsePriceLocale` is the trainer's and the scorer's candidate
+  * keep rule.
   *
-  * Semantics must stay bit-identical to the Column versions — the
-  * differential parity is asserted by FidelitySpec/StreamingSpec, and
-  * the reference behaviors are the same ones [[Text]] documents:
-  * tokenazer (Utils.scala:57-59), gramsByN (Utils.scala:40-52),
-  * parseDouble (Utils.scala:123-129).
+  * Semantics are the reference's (um/re/utils/Utils.scala): tokenazer
+  * (Utils.scala:57-59), gramsByN (Utils.scala:40-52) and parseDouble
+  * (Utils.scala:123-129), over Java strings, so a char gram counts
+  * UTF-16 units as the reference does — a character outside the BMP
+  * is two units. `charGrams` has no Column twin; `tokenize` and
+  * `parsePriceLocale` must stay bit-identical to theirs in [[Text]]
+  * (FidelitySpec and StreamingSpec assert both).
   */
 object LocalText {
 

@@ -32,43 +32,6 @@ object ShingleOps {
   }
 }
 
-object CharGramOps {
-  /** Char n-grams with the reference's quirky bounds (Utils.scala:40-52
-    * gramsByN): 1-based start positions 2..len-n — the first char never
-    * starts a gram and the last gram stops one short, so gram count =
-    * len-n-1; strings shorter than n+2 yield no grams. */
-  def charGrams(text: UTF8String, n: Int): ArrayData = {
-    val len = text.numChars()
-    if (len < n + 2) new GenericArrayData(Array.empty[Any])
-    else {
-      val count = len - n - 1
-      val out = new Array[Any](count)
-      var i = 0
-      while (i < count) { out(i) = text.substringSQL(i + 2, n); i += 1 }
-      new GenericArrayData(out)
-    }
-  }
-}
-
-/** `char_grams(text, n)` → array<string>, codegen'd — replaces the
-  * interpreted transform(sequence(...), substr) higher-order pipeline
-  * in the candidate-featurization hot path (hundreds of grams per row
-  * × corpus size). n is fixed at plan time. */
-case class CharGrams(child: Expression, n: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullSafeEval(text: Any): Any =
-    CharGramOps.charGrams(text.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.CharGramOps.charGrams($c, $n)")
-  override protected def withNewChildInternal(c: Expression): CharGrams = copy(child = c)
-}
-
-object CharGrams {
-  def charGrams(c: Column, n: Int): Column =
-    org.apache.spark.sql.graft.ColumnBridge.column(
-      CharGrams(org.apache.spark.sql.graft.ColumnBridge.expression(c), n))
-}
-
 /** `word_shingles(text, k)` → array<string> as a native codegen'd
   * expression — replaces the interpreted transform/element_at
   * higher-order pipeline in the MinHash/Jaccard hot path (per-row

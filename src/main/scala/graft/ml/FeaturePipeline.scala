@@ -1,11 +1,12 @@
 package graft.ml
 
+import graft.functions.LocalText
 import graft.ml.ModelShape.{MinDocFreq, NumFeatures, TopK}
-import org.apache.spark.ml.feature.{ElementwiseProduct, HashingTF, VectorAssembler, VectorSlicer}
+import org.apache.spark.ml.feature.HashingTF
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.stat.Summarizer
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.functions.{col, udf}
 
 /** A fitted text featurizer mirroring the reference's candidate
   * pipeline (Transformer.scala:29-43 getTopTFIDFIndices /
@@ -19,28 +20,22 @@ import org.apache.spark.sql.functions.col
   * appended as the final feature, so a feature vector has
   * `selectedIndices.length + 1` components.
   *
+  * Every candidate reaches it through one path, in training, eval and
+  * the streaming scorer alike: [[TopKByAvgTFIDF.terms]] → the one term
+  * hasher → [[features]].
+  *
   * A plain value: the idf weights and the selected buckets. It is
   * Serializable, so the model map broadcasts it, and a case class of
   * arrays, so the model map stores it as one parquet struct. */
 final case class TopKByAvgTFIDF(idf: Array[Double], selectedIndices: Array[Int]) {
 
-  /** Appends `features` to a frame with `terms` and `location_norm`
-    * columns: pure column work (HashingTF → ·idf → slice → location
-    * assembled), no driver loop. The idf scaling is an
-    * [[ElementwiseProduct]], the same per-bucket tf·idf doubles an
-    * IDFModel would produce. */
-  def transform(df: DataFrame): DataFrame = {
-    val scale = new ElementwiseProduct()
-      .setScalingVec(Vectors.dense(idf))
-      .setInputCol("graft_tf").setOutputCol("graft_tfidf")
-    val slicer = new VectorSlicer()
-      .setInputCol("graft_tfidf").setOutputCol("graft_sel")
-      .setIndices(selectedIndices)
-    val asm = new VectorAssembler()
-      .setInputCols(Array("graft_sel", "location_norm"))
-      .setOutputCol("features")
-    asm.transform(slicer.transform(scale.transform(TopKByAvgTFIDF.hashTerms(df, "graft_tf"))))
-      .drop("graft_tf", "graft_tfidf", "graft_sel")
+  /** Appends `features` to a frame with `tf` and `location_norm`
+    * columns: [[features]] applied per row, as the vector
+    * `VectorAssembler` would emit. */
+  def transform(df: Dataset[_]): DataFrame = {
+    val featurize = udf((tf: Vector, locationNorm: Double) =>
+      Vectors.dense(features(tf, locationNorm)).compressed)
+    df.withColumn("features", featurize(col("tf"), col("location_norm")))
   }
 
   /** tf·idf over the selected buckets of one candidate's hashed term
@@ -58,39 +53,47 @@ final case class TopKByAvgTFIDF(idf: Array[Double], selectedIndices: Array[Int])
     out
   }
 
-  /** In-task (single-row) twin of [[transform]]: featurize one
-    * candidate's term bag + normalized location without a DataFrame —
-    * used by the broadcast-model-map streaming scorer, where the model
-    * is applied per record inside a `mapPartitions` (the reference's
-    * Htmls2PredsPipe shape). HashingTF counts, then [[features]]; the
-    * values equal `transform`'s (StreamingSpec asserts it). */
-  def transformLocal(terms: Iterable[String], locationNorm: Double): Vector = {
-    val tf = new Array[Double](NumFeatures)
-    terms.foreach(t => tf(TopKByAvgTFIDF.hasher.indexOf(t)) += 1.0)
-    Vectors.dense(features(Vectors.dense(tf), locationNorm))
-  }
+  /** One candidate's features straight from its terms, for the
+    * broadcast-model-map streaming scorer, which applies the model per
+    * record inside a `mapPartitions` (the reference's Htmls2PredsPipe
+    * shape). The counts stay dense: this is the scoring hot path. */
+  def transformLocal(terms: Iterable[String], locationNorm: Double): Vector =
+    Vectors.dense(features(Vectors.dense(TopKByAvgTFIDF.counts(terms)), locationNorm))
 }
 
 object TopKByAvgTFIDF {
-  /** Term hashing for [[TopKByAvgTFIDF.transformLocal]]; `indexOf`
-    * only reads the bucket count, so tasks share it. */
+  /** Term hashing; `indexOf` only reads the bucket count, so tasks
+    * share it. */
   private lazy val hasher = new HashingTF().setNumFeatures(NumFeatures)
 
-  /** `df` with the hashed counts of its `terms` column appended as
-    * `outputCol`. */
-  private[ml] def hashTerms(df: DataFrame, outputCol: String): DataFrame =
-    new HashingTF().setInputCol("terms").setOutputCol(outputCol)
-      .setNumFeatures(NumFeatures).transform(df)
+  /** A candidate's terms, the reference's gramsTFIDFParser
+    * (Transformer.scala:74-87): char 3-grams ++ char 4-grams ++ tokens
+    * of text_before + text_after + domain. */
+  def terms(textBefore: String, textAfter: String, domain: String): IndexedSeq[String] = {
+    val data = textBefore + textAfter + domain
+    LocalText.charGrams(data, 3) ++ LocalText.charGrams(data, 4) ++ LocalText.tokenize(data)
+  }
 
-  /** Fit on a frame with a `terms` column in ONE distributed pass:
+  private def counts(terms: Iterable[String]): Array[Double] = {
+    val tf = new Array[Double](NumFeatures)
+    terms.foreach(t => tf(hasher.indexOf(t)) += 1.0)
+    tf
+  }
+
+  /** The hashed term counts as `HashingTF` emits them: a sparse vector
+    * over the NumFeatures buckets, the `tf` that training reads. */
+  def termFrequencies(terms: Iterable[String]): Vector =
+    Vectors.dense(counts(terms)).toSparse
+
+  /** Fit on a frame with a `tf` column in ONE distributed pass:
     * per-bucket document frequency is exactly numNonZeros over the tf
     * vectors, and mean TF-IDF needs only mean(tf) (see [[fromStats]]).
     * Only the NumFeatures-length vectors reach the driver, so the fit is
     * one job regardless of corpus size. */
-  def fit(df: DataFrame): TopKByAvgTFIDF = {
-    val row = hashTerms(df, "graft_tf")
+  def fit(df: Dataset[_]): TopKByAvgTFIDF = {
+    val row = df
       .select(Summarizer.metrics("mean", "numNonZeros", "count")
-        .summary(col("graft_tf")).as("s"))
+        .summary(col("tf")).as("s"))
       .select(col("s.mean"), col("s.numNonZeros"), col("s.count"))
       .head()
     fromStats(row.getAs[Vector](0).toArray, row.getAs[Vector](1).toArray, row.getLong(2))

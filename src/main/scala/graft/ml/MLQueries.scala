@@ -1,9 +1,10 @@
 package graft.ml
 
+import graft.functions.Text
 import graft.sources.Tables
 import org.apache.spark.ml.classification.{GBTClassifier, LinearSVC, RandomForestClassifier}
 import org.apache.spark.ml.feature.{PCA, VectorAssembler}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** ML pipeline queries (SURVEY §2 rows 19-21), re-expressing the
@@ -21,7 +22,9 @@ import org.apache.spark.sql.functions._
   * features — each extracted price candidate is featurized with the
   * [[TopKByAvgTFIDF]] featurizer (HashingTF(1000) → IDF(minDocFreq=5) →
   * mean-TFIDF top-100 projection, location appended), fitted on that
-  * domain's training split exactly as the reference does. URL-grouped
+  * domain's training split exactly as the reference does. Its terms
+  * come from [[TopKByAvgTFIDF.terms]], the function the model map's
+  * trainer and the streaming scorer call too. URL-grouped
   * 70/30 split, per-URL argmax-confidence candidate selection, and the
   * evaluateModel confusion metrics. Every domain (the reference trains
   * one model per web domain) is fitted and scored by [[LocalGBT]]
@@ -62,27 +65,34 @@ object MLQueries {
         floor(col("mean_tfidf") * 1e6 + 0.5).cast("long").as("mean_tfidf_e6"))
   }
 
-  /** Labeled candidate text features — the reference's gramsTFIDFParser
-    * (Transformer.scala:74-87): data = text_before + text_after +
-    * domain; terms = char 3-grams ++ char 4-grams ++ tokens; location
-    * normalized by page length; label = isTrueCandid (candidate parses
-    * to the page's true price). Deterministic ~5% URL sample cap keeps
-    * the training job bounded at any corpus scale. */
-  private[graft] def candidateFeatures(spark: SparkSession, dir: String): DataFrame = {
-    import graft.functions.{CharGrams, Text}
-    val cand = graft.operators.Extraction.labeledCandidates(spark, dir)
-      .filter(pmod(xxhash64(col("o_orderkey")), lit(20)) === 0)
+  /** Labeled candidates, the reference's gramsTFIDFParser input
+    * (Transformer.scala:74-87): page, domain, snippets, location
+    * normalized by page length and label = isTrueCandid (candidate
+    * parses to the page's true price). Deterministic ~5% URL sample cap
+    * keeps the training job bounded at any corpus scale. */
+  private def sampledCandidates(spark: SparkSession, dir: String): DataFrame = {
     val domain = concat(lit("shop"), (col("o_custkey") % 3).cast("string"), lit(".example.com"))
-    val data = concat(col("text_before"), col("text_after"), domain)
-    cand.select(
-      col("o_orderkey"),
-      domain.as("domain"),
-      concat(CharGrams.charGrams(data, 3), CharGrams.charGrams(data, 4), Text.tokenize(data))
-        .as("terms"),
-      (col("location").cast("double") / col("page_len")).as("location_norm"),
-      coalesce((Text.parsePriceLocale(col("candidate")) === col("a_val"))
-        .cast("double"), lit(0.0)).as("label"))
+    graft.operators.Extraction.labeledCandidates(spark, dir)
+      .filter(pmod(xxhash64(col("o_orderkey")), lit(20)) === 0)
+      .select(col("o_orderkey"), domain.as("domain"), col("text_before"), col("text_after"),
+        (col("location").cast("double") / col("page_len")).as("location_norm"),
+        coalesce((Text.parsePriceLocale(col("candidate")) === col("a_val"))
+          .cast("double"), lit(0.0)).as("label"))
   }
+
+  /** Labeled candidates as the [[TfRow]]s every trainer reads: their
+    * [[TopKByAvgTFIDF.terms]], hashed. */
+  private def featurize(cands: DataFrame): Dataset[TfRow] = {
+    import cands.sparkSession.implicits._
+    cands.as[(Long, String, String, String, Double, Double)].map {
+      case (page, dom, before, after, loc, label) =>
+        TfRow(page, dom, TopKByAvgTFIDF.termFrequencies(TopKByAvgTFIDF.terms(before, after, dom)),
+          loc, label)
+    }
+  }
+
+  private[graft] def candidateFeatures(spark: SparkSession, dir: String): Dataset[TfRow] =
+    featurize(sampledCandidates(spark, dir))
 
   private def featurized(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
@@ -115,10 +125,7 @@ object MLQueries {
     * domain is collected. */
   def gbtTrainEval(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    TopKByAvgTFIDF.hashTerms(candidateFeatures(spark, dir), "tf")
-      .select(col("o_orderkey").as("page_id"), col("domain"), col("tf"),
-        col("location_norm"), col("label"))
-      .as[TfRow]
+    candidateFeatures(spark, dir)
       .groupByKey(_.domain)
       .mapGroups((dom, it) => LocalGBT.trainEvalDomain(dom, it.toArray))
       .collect() // one row per domain
@@ -140,15 +147,15 @@ object MLQueries {
     * ensemble size with its test loss, best size flagged. Rows-only
     * (training path); the curve is deterministic given the seed. */
   def gbtValidation(spark: SparkSession, dir: String): DataFrame = {
-    // halve candidateFeatures' 5% URL sample again (h%40==0 ⊂ h%20==0):
+    // halve the candidates' 5% URL sample again (h%40==0 ⊂ h%20==0):
     // a validation curve needs far fewer points than the training job
-    val data = candidateFeatures(spark, dir)
+    val data = featurize(sampledCandidates(spark, dir)
       .filter(col("domain") === "shop0.example.com" &&
-        pmod(xxhash64(col("o_orderkey")), lit(40)) === 0)
+        pmod(xxhash64(col("o_orderkey")), lit(40)) === 0))
       .cache()
     try {
-      val train = data.filter(col("o_orderkey") % 10 < 7)
-      val test = data.filter(col("o_orderkey") % 10 >= 7)
+      val train = data.filter(col("page_id") % 10 < 7)
+      val test = data.filter(col("page_id") % 10 >= 7)
       val fpm = TopKByAvgTFIDF.fit(train)
       val model = new GBTClassifier()
         .setMaxIter(6).setMaxDepth(2).setSeed(42L)

@@ -1,9 +1,9 @@
 package graft.ml
 
-import graft.functions.{CharGrams, PriceCandidates, Text}
+import graft.functions.{LocalText, PriceCandidates, Text}
 import graft.sources.Tables
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.util.control.NonFatal
 
@@ -22,10 +22,22 @@ case class DomainModel(featurizer: TopKByAvgTFIDF, gbt: LocalGBTModel)
   * f0, step, and per tree the five flattened node arrays). */
 case class MapRow(domain: String, run_id: Long, version: Int, model: DomainModel)
 
+/** One extracted price candidate: the [[PriceCandidates]] struct. */
+case class Candidate(candidate: String, text_before: String,
+    text_after: String, location: Int)
+
+/** A training page with its true price and extracted candidates. */
+case class TrainPage(event_id: Long, domain: String, a_val: Double,
+    page_len: Int, cands: Seq[Candidate])
+
 /** The persisted per-domain model map and its lifecycle: train → save →
   * (merge) → load → broadcast → per-record scoring. A map trained in
   * this JVM is scored as trained; `load` serves only a map that is
-  * already on disk.
+  * already on disk. The trainer and the streaming scorer keep a page's
+  * candidates by one rule ([[keptCandidates]]) and featurize them
+  * through one path ([[TopKByAvgTFIDF.terms]] → hashed counts →
+  * [[TopKByAvgTFIDF.features]]), so a candidate is scored on the very
+  * terms it would have been trained on.
   *
   * Storage layout: the map root `path` is ONE parquet table of
   * [[MapRow]]s, one row per domain, written in a single
@@ -43,7 +55,7 @@ object ModelMap {
 
   /** Bump when the on-disk layout or the page/feature construction
     * changes — a version-mismatched map is retrained, never reused. */
-  private val FormatVersion = 4
+  private val FormatVersion = 5
 
   /** Event domains with trained models. `signup` deliberately has none
     * (exercises the missingModel path) and `error` pages carry no
@@ -115,9 +127,10 @@ object ModelMap {
   }
 
   // ---------------------------------------------------------------------------
-  // Synthetic page construction (shared verbatim by the batch training
-  // job and the streaming scorer — pure column expressions, so the same
-  // code runs on a batch DataFrame and a streaming one).
+  // Synthetic pages and the candidate keep rule (shared verbatim by the
+  // batch training job and the streaming scorer; the pages are pure
+  // column expressions, so the same code runs on a batch DataFrame and
+  // a streaming one).
   // ---------------------------------------------------------------------------
 
   /** ≥50 chars of neutral filler between a decoy mention and the true
@@ -167,24 +180,34 @@ object ModelMap {
       .withColumn("a_val", Text.parsePriceLocale(fmt2(trueRaw(col("value")))))
   }
 
-  /** Page → labeled per-candidate feature rows, the gramsTFIDFParser
-    * shape (Transformer.scala:74-87): terms = char 3-grams ++ 4-grams ++
-    * tokens of text_before+text_after+domain; location normalized by
-    * page length; label = candidate parses to the page's true price. */
-  private def labeledCandidates(pages: DataFrame): DataFrame = {
-    val data = concat(col("c.text_before"), col("c.text_after"), col("domain"))
+  /** The pipe's candidate keep rule, shared by the trainer and the
+    * streaming scorer: price-shaped (contains . or ,) and
+    * locale-parseable. Each kept candidate comes with its price. */
+  def keptCandidates(cands: Seq[Candidate]): Seq[(Candidate, Double)] =
+    cands.flatMap { c =>
+      if (c.candidate.contains(".") || c.candidate.contains(","))
+        LocalText.parsePriceLocale(c.candidate).map(v => (c, v))
+      else None
+    }
+
+  /** Page → labeled per-candidate training rows, the gramsTFIDFParser
+    * shape (Transformer.scala:74-87): the kept candidates' hashed
+    * [[TopKByAvgTFIDF.terms]], location normalized by page length,
+    * label = candidate parses to the page's true price. */
+  private[graft] def trainingRows(pages: DataFrame): Dataset[TfRow] = {
+    import pages.sparkSession.implicits._
     pages
       .select(col("event_id"), col("domain"), col("a_val"),
         length(col("html")).as("page_len"),
-        explode(PriceCandidates.priceCandidates(col("html"))).as("c"))
-      .filter(col("c.candidate").contains(".") || col("c.candidate").contains(","))
-      .withColumn("parsed", Text.parsePriceLocale(col("c.candidate")))
-      .filter(col("parsed").isNotNull)
-      .select(col("event_id"), col("domain"),
-        concat(CharGrams.charGrams(data, 3), CharGrams.charGrams(data, 4),
-          Text.tokenize(data)).as("terms"),
-        (col("c.location").cast("double") / col("page_len")).as("location_norm"),
-        (col("parsed") === col("a_val")).cast("double").as("label"))
+        PriceCandidates.priceCandidates(col("html")).as("cands"))
+      .as[TrainPage]
+      .flatMap { p =>
+        keptCandidates(p.cands).map { case (c, v) =>
+          TfRow(p.event_id, p.domain, TopKByAvgTFIDF.termFrequencies(
+            TopKByAvgTFIDF.terms(c.text_before, c.text_after, p.domain)),
+            c.location.toDouble / p.page_len, if (v == p.a_val) 1.0 else 0.0)
+        }
+      }
   }
 
   // ---------------------------------------------------------------------------
@@ -193,7 +216,7 @@ object ModelMap {
 
   /** Train the per-domain scorers on the event pages' training split
     * (event_id-keyed 70%, whole pages together) and persist the map.
-    * ONE Spark job: the hashed candidates of the trained domains are
+    * ONE Spark job: the [[trainingRows]] of the trained domains are
     * grouped by domain and each group is fitted in-task by
     * [[LocalGBT.fitDomain]] (the q_gbt_train_eval trainer), rows sorted
     * by (event_id, location_norm) first so the fit is deterministic.
@@ -204,10 +227,7 @@ object ModelMap {
     import spark.implicits._
     val pages = syntheticPages(Tables.events(spark, dir))
       .filter(col("domain").isin(TrainedDomains: _*) && col("event_id") % 10 < 7)
-    val rows = TopKByAvgTFIDF.hashTerms(labeledCandidates(pages), "tf")
-      .select(col("event_id").as("page_id"), col("domain"), col("tf"),
-        col("location_norm"), col("label"))
-      .as[TfRow]
+    val rows = trainingRows(pages)
       .groupByKey(_.domain)
       .mapGroups { (dom, it) =>
         MapRow(dom, runId, FormatVersion,

@@ -23,13 +23,9 @@ import org.apache.spark.sql.types._
   * carries a watermark so state is bounded; the stateful query keys by
   * user and keeps O(1) state per key.
   */
-/** One extracted candidate of a streamed page (scanner struct shape). */
-case class StreamCand(candidate: String, text_before: String,
-    text_after: String, location: Int)
-
 /** A streamed page with its extracted candidates, ready for scoring. */
 case class StreamPage(event_id: Long, user_id: Long, domain: String,
-    page_len: Int, cands: Seq[StreamCand])
+    page_len: Int, cands: Seq[graft.ml.Candidate])
 
 /** Per-record scorer output: the pattern price and the model's price
   * (with the reference's -1 allFalseCandids / -2 missingModel
@@ -100,13 +96,16 @@ object StreamingQueries {
     * [[graft.ml.ModelMap.ensure]] trains and persists the map on first
     * use (the BuildAndSaveModels step) and hands back the map it trained,
     * or loads one already persisted; the stream broadcasts that map
-    * once, and every record's candidates are featurized and
-    * margin-scored in-task — `mapPartitions` is justified here because
+    * once, and every record's candidates are kept, featurized and
+    * margin-scored in-task by the trainer's own rule and path
+    * ([[graft.ml.ModelMap.keptCandidates]], [[graft.ml.TopKByAvgTFIDF.terms]]),
+    * so a candidate is scored on the terms it would have been trained
+    * on — `mapPartitions` is justified here because
     * the per-page argmax over a broadcast model's candidate scores is
     * per-record imperative work no streaming window can express (row
     * windows are unsupported on streams), exactly the reference's
     * per-message loop. The pattern price is the naive positional
-    * extraction (first price-shaped candidate), which grabs the decoy
+    * extraction (first kept candidate), which grabs the decoy
     * on click/purchase pages — the model (anchored on the learned
     * "price" context) wins those conflicts, so every status of the
     * decision machine is exercised by real model output. The margin
@@ -115,7 +114,7 @@ object StreamingQueries {
     * order — so the query stays fully hash-oracled. */
   def streamPipe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    import graft.ml.ModelMap
+    import graft.ml.{ModelMap, TopKByAvgTFIDF}
     val bcModels = spark.sparkContext.broadcast(ModelMap.ensure(spark, dir))
     // repartition the narrow event rows before page synthesis — the
     // heaviest per-row map in the streaming family (html synthesis +
@@ -131,23 +130,14 @@ object StreamingQueries {
       .mapPartitions { it =>
         val models = bcModels.value
         it.map { p =>
-          // the reference's candidate keep-rule for the pipe: price-shaped
-          // (contains . or ,) and locale-parseable
-          val parsed = p.cands.flatMap { c =>
-            if (c.candidate.contains(".") || c.candidate.contains(","))
-              graft.functions.LocalText.parsePriceLocale(c.candidate).map(v => (c, v))
-            else None
-          }
+          val parsed = ModelMap.keptCandidates(p.cands)
           val updated = parsed.headOption.map(_._2).getOrElse(0.0)
           val model = models.get(p.domain) match {
             case None => -2.0 // missingModel sentinel
             case Some(dm) =>
               val margins = parsed.map { case (c, v) =>
-                val data = c.text_before + c.text_after + p.domain
-                val terms = graft.functions.LocalText.charGrams(data, 3) ++
-                  graft.functions.LocalText.charGrams(data, 4) ++
-                  graft.functions.LocalText.tokenize(data)
-                val feat = dm.featurizer.transformLocal(terms,
+                val feat = dm.featurizer.transformLocal(
+                  TopKByAvgTFIDF.terms(c.text_before, c.text_after, p.domain),
                   c.location.toDouble / p.page_len)
                 (v, c.candidate, ModelMap.confidence(dm.gbt, feat))
               }

@@ -23,9 +23,10 @@ import org.apache.spark.sql.streaming.{OutputMode, Trigger}
   * Read path: newest-wins per key — one `row_number` over (key) by
   * batch id descending, i.e. Cassandra's read-repair merge as a plan.
   * Merge cost ∝ accumulated updates; a production table bounds that
-  * with periodic compaction (rewrite the merged view as `batch=<max>`,
-  * drop older partitions — the same maintenance Cassandra amortizes
-  * into its compaction threads). Partition pruning keeps a point query
+  * with periodic compaction ([[compactTo]]: rewrite the merged view as
+  * one partition above every id it folds, drop the folded partitions —
+  * the same maintenance Cassandra amortizes into its compaction
+  * threads). Partition pruning keeps a point query
   * from touching compacted-away history.
   *
   * The table lives under /tmp and is wiped when the SAME query starts
@@ -47,15 +48,17 @@ private[graft] object TableSink {
   private[graft] def sinkDir(tag: String, src: String): String =
     s"/tmp/graft_table_sink/${tag}_${Integer.toHexString(src.hashCode)}"
 
+  /** Delete a file or a directory tree. */
+  private def rm(f: java.io.File): Unit = {
+    val kids = f.listFiles()
+    if (kids != null) kids.foreach(rm)
+    f.delete(): Unit
+  }
+
   /** One table directory per (query tag, source dir), wiped at the
     * start of each run: this run's stream owns the table. */
   private def freshDir(tag: String, src: String): String = {
     val d = new java.io.File(sinkDir(tag, src))
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
     rm(d)
     d.mkdirs()
     d.getAbsolutePath
@@ -140,11 +143,6 @@ private[graft] object TableSink {
   private[graft] def compactTo(spark: SparkSession, dir: String,
       keys: Seq[String], schema: org.apache.spark.sql.types.StructType,
       target: Long): Unit = {
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
     val stale = new java.io.File(s"$dir/batch=$target")
     if (stale.exists()) rm(stale)
     merged(spark, dir, keys, schema)
@@ -153,36 +151,5 @@ private[graft] object TableSink {
     if (live != null)
       live.filter(_.getName.startsWith("batch="))
         .filter(_.getName.drop(6).toLong < target).foreach(rm)
-  }
-
-  /** Compaction — the maintenance pass that bounds the merge cost the
-    * scaladoc above promises (Cassandra's compaction thread, scheduled
-    * instead of continuous): rewrite the merged newest-wins view as a
-    * single partition ABOVE every live batch id, then drop the
-    * compacted-away history. Readers are correct at every point:
-    * before the swap they merge the old log; after, `merged`'s
-    * newest-wins rule makes the compacted partition win ties against
-    * any stale survivor (it carries the max batch id), so a crash
-    * between write and cleanup only costs disk, never answers. The
-    * stream keeps appending batch ids from its checkpoint counter,
-    * which stays above old ids — compaction never rewinds the order.
-    * Returns the compacted batch id. */
-  private[graft] def compact(spark: SparkSession, dir: String,
-      keys: Seq[String], schema: org.apache.spark.sql.types.StructType): Long = {
-    val live = new java.io.File(dir).listFiles()
-    val ids = if (live == null) Array.empty[Long]
-      else live.filter(_.getName.startsWith("batch=")).map(_.getName.drop(6).toLong)
-    val next = if (ids.isEmpty) 0L else ids.max + 1
-    merged(spark, dir, keys, schema)
-      .write.mode("overwrite").parquet(s"$dir/batch=$next")
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
-    if (live != null)
-      live.filter(_.getName.startsWith("batch="))
-        .filter(_.getName.drop(6).toLong < next).foreach(rm)
-    next
   }
 }

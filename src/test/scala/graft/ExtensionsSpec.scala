@@ -27,16 +27,11 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(rows == Seq("a b c", "b c d"))
   }
 
-  test("char_grams is callable from SQL and rejects non-literal n") {
+  test("word_shingles rejects a non-literal k") {
     import spark.implicits._
-    Seq((1L, "abcdef")).toDF("id", "text").createOrReplaceTempView("cg_docs")
-    // reference bounds: first char never starts a gram, last gram stops
-    // one short — "abcdef" with n=3 yields positions 2..3 only
-    val rows = spark.sql("SELECT explode(char_grams(text, 3)) AS g FROM cg_docs")
-      .collect().map(_.getString(0)).toSeq
-    assert(rows == Seq("bcd", "cde"))
+    Seq((1L, "a b c d")).toDF("id", "text").createOrReplaceTempView("ws_docs")
     val err = intercept[Throwable] {
-      spark.sql("SELECT char_grams(text, id) FROM cg_docs").collect()
+      spark.sql("SELECT word_shingles(text, id) FROM ws_docs").collect()
     }
     val messages = Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
       .map(_.getMessage).mkString(" | ")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CharGrams, Text}
+import graft.functions.{LocalText, Text}
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
@@ -59,11 +59,15 @@ class FidelitySpec extends SparkSpec {
         if (i + n < s.length) grams = s.substring(i, i + n) :: grams
       grams
     }
-    val ins = randomStrings(300, 40)
-    val got = runCol(ins, c => concat_ws("≬", CharGrams.charGrams(c, 3)))
-    ins.zip(got).foreach { case (s, g) =>
-      val mine = if (g.isEmpty) Nil else g.split("≬").toList
-      assert(mine == refGrams(s, 3).reverse, s"input=$s")
+    // supplementary characters count as two UTF-16 units, as in the
+    // reference: "a😀bcdefg" is 9 units long and yields 5 3-grams, the
+    // first two of them holding half of the surrogate pair
+    val nonBmp = Seq("a😀bcdefg", "😀😀😀", "price 😀 $12.34 now", "ab😀cd😀")
+    assert(LocalText.charGrams("a😀bcdefg", 3).size == 5)
+    (randomStrings(300, 40) ++ nonBmp).foreach { s =>
+      Seq(3, 4).foreach { n =>
+        assert(LocalText.charGrams(s, n).toList == refGrams(s, n).reverse, s"input=$s n=$n")
+      }
     }
   }
 

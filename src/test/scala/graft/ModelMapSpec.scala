@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.{CharGrams, PriceCandidates, Text}
-import graft.ml.ModelMap
+import graft.functions.{LocalText, PriceCandidates, Text}
+import graft.ml.{ModelMap, ModelShape, TopKByAvgTFIDF}
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.functions._
 
@@ -21,16 +21,13 @@ class ModelMapSpec extends SparkSpec {
 
       // every price-shaped candidate of the trained-domain pages, as the
       // pipe keeps them: contains . or , and parses as a locale price
-      val data = concat(col("c.text_before"), col("c.text_after"), col("domain"))
       val cands = ModelMap.syntheticPages(graft.sources.Tables.events(spark, sf))
         .filter(col("domain").isin(ModelMap.TrainedDomains: _*))
         .select(col("domain"), length(col("html")).as("page_len"),
           explode(PriceCandidates.priceCandidates(col("html"))).as("c"))
         .filter((col("c.candidate").contains(".") || col("c.candidate").contains(",")) &&
           Text.parsePriceLocale(col("c.candidate")).isNotNull)
-        .select(col("domain"),
-          concat(CharGrams.charGrams(data, 3), CharGrams.charGrams(data, 4),
-            Text.tokenize(data)).as("terms"),
+        .select(col("domain"), col("c.text_before"), col("c.text_after"),
           (col("c.location").cast("double") / col("page_len")).as("location_norm"))
         .collect()
         .groupBy(_.getString(0))
@@ -56,7 +53,8 @@ class ModelMapSpec extends SparkSpec {
         val rows = cands.getOrElse(dom, Array.empty)
         assert(rows.nonEmpty, s"$dom has no price-shaped candidates")
         rows.foreach { r =>
-          val (terms, loc) = (r.getSeq[String](1), r.getDouble(2))
+          val (terms, loc) = (TopKByAvgTFIDF.terms(r.getString(1), r.getString(2), dom),
+            r.getDouble(3))
           val ft: Vector = t.featurizer.transformLocal(terms, loc)
           val fl: Vector = l.featurizer.transformLocal(terms, loc)
           assert(java.util.Arrays.equals(ft.toArray, fl.toArray), s"$dom: transformLocal")
@@ -66,5 +64,41 @@ class ModelMapSpec extends SparkSpec {
         }
       }
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
+
+  test("a non-BMP snippet gives the trainer's row and the scorer the same terms") {
+    import spark.implicits._
+    // U+1F600 is two UTF-16 units. The reference's gramsByN counts both,
+    // a code-point kernel counts one, so a second kernel on either side
+    // would hash this candidate's grams differently.
+    val dom = "view.example.com"
+    val html = "<div>😀 sale <span class=\"price\">$12.34</span> 😀 now</div>"
+    val pages = Seq((7L, 0L, dom, html, 12.34)).toDF("event_id", "user_id", "domain", "html", "a_val")
+    val rows = ModelMap.trainingRows(pages).collect()
+    assert(rows.length == 1)
+    val row = rows.head
+    assert(row.label == 1.0)
+
+    // the scorer's side: its page decoding, keep rule and terms
+    val page = pages.select(col("event_id"), col("user_id"), col("domain"),
+        length(col("html")).as("page_len"),
+        PriceCandidates.priceCandidates(col("html")).as("cands"))
+      .as[graft.streaming.StreamPage].head()
+    val kept = ModelMap.keptCandidates(page.cands)
+    assert(kept.length == 1)
+    val c = kept.head._1
+    val data = c.text_before + c.text_after + dom
+    assert(data.codePointCount(0, data.length) < data.length, "no non-BMP char in the snippet")
+    val terms = TopKByAvgTFIDF.terms(c.text_before, c.text_after, dom)
+
+    // every bucket selected with idf 1: the features are the raw counts
+    val identity = TopKByAvgTFIDF(Array.fill(ModelShape.NumFeatures)(1.0),
+      Array.range(0, ModelShape.NumFeatures))
+    val scored = identity.transformLocal(terms, c.location.toDouble / page.page_len).toArray
+    assert(java.util.Arrays.equals(identity.features(row.tf, row.location_norm), scored),
+      "the trainer's row and the scorer hash different terms")
+    // ... and they count the reference's UTF-16 grams
+    assert(row.tf.toArray.sum == LocalText.charGrams(data, 3).size +
+      LocalText.charGrams(data, 4).size + LocalText.tokenize(data).length)
   }
 }

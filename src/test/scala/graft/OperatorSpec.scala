@@ -892,8 +892,8 @@ class OperatorSpec extends SparkSpec {
       domains.foreach { dom =>
         val d = feats.filter(col("domain") === dom)
         // URL-grouped split: whole pages go to train or test together
-        val train = d.filter(col("o_orderkey") % 10 < 7)
-        val test = d.filter(col("o_orderkey") % 10 >= 7)
+        val train = d.filter(col("page_id") % 10 < 7)
+        val test = d.filter(col("page_id") % 10 >= 7)
         val fpm = TopKByAvgTFIDF.fit(train)
         val scored = new org.apache.spark.ml.classification.GBTClassifier()
           .setMaxIter(ModelShape.MaxIter).setMaxDepth(ModelShape.MaxDepth)
@@ -6019,8 +6019,9 @@ class OperatorSpec extends SparkSpec {
   test("TopKByAvgTFIDF selects buckets and appends the location feature") {
     import spark.implicits._
     val ds = (0 until 200).map { i =>
-      (i.toLong, Seq("alpha", "beta", s"tok$i", "gamma", "delta"), 0.5, (i % 2).toDouble)
-    }.toDF("o_orderkey", "terms", "location_norm", "label")
+      (i.toLong, graft.ml.TopKByAvgTFIDF.termFrequencies(
+        Seq("alpha", "beta", s"tok$i", "gamma", "delta")), 0.5, (i % 2).toDouble)
+    }.toDF("o_orderkey", "tf", "location_norm", "label")
     val m = graft.ml.TopKByAvgTFIDF.fit(ds)
     assert(m.selectedIndices.nonEmpty)
     val v = m.transform(ds).select("features")

@@ -88,24 +88,23 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("featurizer transformLocal matches the DataFrame transform") {
-    import graft.ml.ModelMap
+    import graft.ml.{ModelMap, TopKByAvgTFIDF}
     val fpm = ModelMap.ensure(spark, sf)("view.example.com").featurizer
-    val data = concat(col("c.text_before"), col("c.text_after"), col("domain"))
     val cand = ModelMap.syntheticPages(graft.sources.Tables.events(spark, sf))
       .filter(col("domain") === "view.example.com").limit(25)
       .select(col("domain"), length(col("html")).as("page_len"),
         explode(graft.functions.PriceCandidates.priceCandidates(col("html"))).as("c"))
-      .select(
-        concat(graft.functions.CharGrams.charGrams(data, 3),
-          graft.functions.CharGrams.charGrams(data, 4),
-          graft.functions.Text.tokenize(data)).as("terms"),
+      .select(col("c.text_before"), col("c.text_after"), col("domain"),
         (col("c.location").cast("double") / col("page_len")).as("location_norm"))
-    val rows = fpm.transform(cand)
-      .select("terms", "location_norm", "features").collect()
+      .as[(String, String, String, Double)].collect()
+      .map { case (before, after, dom, loc) => (TopKByAvgTFIDF.terms(before, after, dom), loc) }
+    val tfs = cand.map { case (terms, loc) => (TopKByAvgTFIDF.termFrequencies(terms), loc) }
+      .toSeq.toDF("tf", "location_norm")
+    val rows = cand.zip(fpm.transform(tfs).select("features").collect())
     assert(rows.nonEmpty)
-    rows.foreach { r =>
-      val local = fpm.transformLocal(r.getSeq[String](0), r.getDouble(1)).toArray
-      val viaDf = r.getAs[org.apache.spark.ml.linalg.Vector](2).toArray
+    rows.foreach { case ((terms, loc), r) =>
+      val local = fpm.transformLocal(terms, loc).toArray
+      val viaDf = r.getAs[org.apache.spark.ml.linalg.Vector](0).toArray
       assert(java.util.Arrays.equals(local, viaDf), "local/DataFrame featurization diverged")
     }
   }
@@ -158,18 +157,18 @@ class StreamingSpec extends SparkSpec {
   test("LocalText kernels match their Column twins") {
     val samples = Seq("", " ", "a", "price $1,234.56 now", "x  y\tz",
       "<span class=\"price\">$99.10</span>", "9.99 ship", ",5", "-3.5x",
-      "no digits", ".75 cents", "12,34,5.6tail")
+      "no digits", ".75 cents", "12,34,5.6tail",
+      // characters outside the BMP (two UTF-16 units each)
+      "a😀bcdefg", "😀 $12.34 😀", "12.5😀", "price😀tag 9,99")
     val df = samples.toDF("s").select(
       col("s"),
       graft.functions.Text.tokenize(col("s")).as("tok"),
-      graft.functions.CharGrams.charGrams(col("s"), 3).as("g3"),
       graft.functions.Text.parsePriceLocale(col("s")).as("p"))
     df.collect().foreach { r =>
       val s = r.getString(0)
       assert(r.getSeq[String](1) == graft.functions.LocalText.tokenize(s).toSeq, s"tokenize($s)")
-      assert(r.getSeq[String](2) == graft.functions.LocalText.charGrams(s, 3), s"charGrams($s)")
       val local = graft.functions.LocalText.parsePriceLocale(s)
-      val viaDf = if (r.isNullAt(3)) None else Some(r.getDouble(3))
+      val viaDf = if (r.isNullAt(2)) None else Some(r.getDouble(2))
       assert(local == viaDf, s"parsePriceLocale($s)")
     }
   }
@@ -905,8 +904,7 @@ class StreamingSpec extends SparkSpec {
     // compaction: same merged answer from ONE partition; history gone;
     // a later trigger still wins against the compacted row
     val schema = Seq.empty[(Long, String)].toDF("k", "v").schema
-    val cid = graft.streaming.TableSink.compact(spark, dir, Seq("k"), schema)
-    assert(cid == 2L)
+    graft.streaming.TableSink.compactTo(spark, dir, Seq("k"), schema, target = 2L)
     val parts = new java.io.File(dir).listFiles()
       .map(_.getName).filter(_.startsWith("batch=")).toSet
     assert(parts == Set("batch=2"), s"history not dropped: $parts")

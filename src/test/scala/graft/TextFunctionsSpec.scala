@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CharGrams, Text}
+import graft.functions.{LocalText, Text}
 import org.apache.spark.sql.functions._
 
 /** Unit checks for the reference text utilities, pinned to the quirky
@@ -21,12 +21,8 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("charGrams follows the reference bounds (first char skipped, one short)") {
     // "abcdef", n=3 → reference grams: bcd, cde (i=1,2 0-based; i+3<6)
-    val got = Seq("abcdef").toDF("s")
-      .select(CharGrams.charGrams(col("s"), 3).as("g")).collect()(0).getSeq[String](0)
-    assert(got == Seq("bcd", "cde"))
-    val short = Seq("abcd").toDF("s")
-      .select(CharGrams.charGrams(col("s"), 3).as("g")).collect()(0).getSeq[String](0)
-    assert(short.isEmpty)
+    assert(LocalText.charGrams("abcdef", 3) == Seq("bcd", "cde"))
+    assert(LocalText.charGrams("abcd", 3).isEmpty)
   }
 
   test("getDomain strips www and survives broken scheme") {
