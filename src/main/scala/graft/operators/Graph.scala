@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * that appear in the same order are linked — the co-purchase graph
   * every recommender bootstrap builds from order lines).
   *
-  * Companion to Dedup's connected-components (pointer-jumping): this
+  * Companion to Dedup's connected-components (hook-and-shortcut): this
   * family holds the FIXED-ITERATION message-passing algorithms, whose
   * Spark-first shape is k rounds of (join ranks to edges) → two-phase
   * aggregate by destination — shuffle ∝ edges per round, never
@@ -89,10 +89,11 @@ object Graph {
       .orderBy("bin")
 
   def pagerank(spark: SparkSession, dir: String): DataFrame = {
-    val edges = coOrderEdges(spark, dir)
-    // degrees + edge set materialize ONCE via localCheckpoint (re-joined
-    // every round otherwise) and auto-release on GC — cache() would pin
-    // both in the CacheManager for the session lifetime
+    // edges, degrees and the degree-joined edge set materialize ONCE via
+    // localCheckpoint (the edge build would otherwise run for deg and
+    // again for ed) and auto-release on GC — cache() would pin them in
+    // the CacheManager for the session lifetime
+    val edges = coOrderEdges(spark, dir).localCheckpoint()
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
     val ed = edges.join(deg, "src").localCheckpoint()
     var ranks = deg.select(col("src").as("node"), lit(1000000L).as("r"))
@@ -184,7 +185,7 @@ object Graph {
     * Scale shape: the classic Pregel reduction — each round joins the
     * node-sized frontier to the edge set (shuffle ∝ edges), unions the
     * previous distances and min-aggs by node; localCheckpoint caps the
-    * lineage exactly as in [[pagerank]] / Dedup's pointer-jumping CC.
+    * lineage exactly as in [[pagerank]] / Dedup's hook-and-shortcut CC.
     * Seeds come from a TakeOrderedAndProject over the degree table
     * (never a full sort); the final census is a ≤(rounds+2)-row agg. */
   def bfsHops(spark: SparkSession, dir: String): DataFrame = {
@@ -443,7 +444,7 @@ object Graph {
     * (the q_pagerank loop discipline). The seed derivation is one
     * TakeOrdered(1) over the degree table. */
   def ppr(spark: SparkSession, dir: String): DataFrame = {
-    val edges = coOrderEdges(spark, dir)
+    val edges = coOrderEdges(spark, dir).localCheckpoint() // read by deg and ed
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
     val ed = edges.join(deg, "src").localCheckpoint()
     val seed = deg.orderBy(col("deg").desc, col("src").asc).limit(1)

@@ -482,9 +482,9 @@ object Similarity {
     * allocates budget across clusters, and mutual-kNN + CC is the
     * standard way to get those clusters without a centroid fit.
     *
-    * Scale shape: the CC loop is Dedup.componentLabels — min-label
-    * propagation + pointer jumping over the MUTUAL-edge node set only
-    * (≤ |nodes|·K edges by the top-K cap, O(log diameter) rounds),
+    * Scale shape: the CC loop is Dedup.componentLabels — hook-and-
+    * shortcut over the MUTUAL-edge node set only (≤ |nodes|·K edges by
+    * the top-K cap, O(log n) rounds),
     * with embeddings that formed no mutual edge rejoining at the end
     * as singleton clusters, exactly like q_dedup_clusters' singleton
     * docs. At corpus scale the edges come from the LSH/IVF candidate
@@ -2737,26 +2737,30 @@ object Similarity {
   private val KnnOracleChunks = 8
 
   /** CC labels over the mutual edges of whatever directed `top` list
-    * the prelude built — the SQL mirror of Dedup.componentLabels fed
-    * by [[mutualEdges]]; composed (under WITH RECURSIVE, harmlessly —
+    * the prelude built — the oracle for Dedup.componentLabels fed by
+    * [[mutualEdges]]; composed (under WITH RECURSIVE, harmlessly —
     * nothing recurses any more) with [[knnTopSql]] by the exact
     * cluster-family oracles and with [[forestTopSql]] by their
     * forest-fed siblings, so each pair shares its tail verbatim.
     *
     * The closure is UNROLLED min-label propagation WITH POINTER
-    * JUMPING — the same algorithm the Spark side runs — because the
-    * old `reach` transitive-closure CTE materializes node×|component|
-    * pairs: at sf1 the exact mutual-kNN graph percolates into ONE
-    * 19,999-node component, i.e. 4·10⁸ reach rows per iteration, and
-    * the oracle exhausted the sandbox's spill disk. Each round here
-    * is (neighbor-min over the edge list) then (label := label of
-    * label) — ROUND-FOR-ROUND the Dedup.componentLabels iteration, and
-    * [[CcRounds]] = its maxIter. Spark throws rather than return labels
-    * that have not converged within maxIter rounds, so whenever it
-    * returns, its labels are the fixpoint and the oracle's remaining
-    * rounds are no-ops on it. Cost per round ∝ nodes + edges — linear,
-    * like the engine. */
-  private val CcRounds = 30 // = Dedup.componentLabels maxIter — keep in sync
+    * JUMPING, because the old `reach` transitive-closure CTE
+    * materializes node×|component| pairs: at sf1 the exact mutual-kNN
+    * graph percolates into ONE 19,999-node component, i.e. 4·10⁸ reach
+    * rows per iteration, and the oracle exhausted the spill disk. Each
+    * round here is (neighbor-min over the edge list) then (label :=
+    * label of label). This is NOT the rule the Spark side runs
+    * (hook-and-shortcut over a parent table): it is an independent
+    * rule with the same fixpoint, every node labelled with its
+    * component minimum, so the two agree only on converged labels.
+    * Spark throws rather than return labels that have not converged;
+    * this rule has no such check, so [[CcRounds]] must stay above the
+    * most rounds it needs on any consumer's graph (14, on the
+    * forest-fed cluster graphs at sf0.1; PERF.md has the per-consumer
+    * table). A graph that needs more leaves some labels above their
+    * minimum and fails the comparison loudly. Cost per round ∝ nodes +
+    * edges — linear, like the engine. */
+  private val CcRounds = 30 // > the most rounds this rule needs on any consumer (PERF.md)
 
   /** The unrolled rounds over an `<edgesName>(src, dst)` CTE, ending
     * in lab(vec_id, cluster_id) — shared by [[ccLabSql]] and the

@@ -101,4 +101,31 @@ class ModelMapSpec extends SparkSpec {
     assert(row.tf.toArray.sum == LocalText.charGrams(data, 3).size +
       LocalText.charGrams(data, 4).size + LocalText.tokenize(data).length)
   }
+
+  test("the trained map's raw bits match their pinned digest") {
+    // MLValueSpec's pins do not move when the featurizer changes (with the
+    // 4-grams dropped every one of them still passes), so this digest of
+    // every number the trainer produces is the featurizer's own pin.
+    val tmp = java.nio.file.Files.createTempDirectory("graft_mm_digest")
+    try {
+      val map = ModelMap.trainAndSave(spark, sf, tmp.resolve("map").toString, runId = 1L)
+      val buf = java.nio.ByteBuffer.allocate(1 << 22)
+      def doubles(xs: Array[Double]): Unit = { buf.putInt(xs.length); xs.foreach(buf.putDouble) }
+      def ints(xs: Array[Int]): Unit = { buf.putInt(xs.length); xs.foreach(buf.putInt) }
+      map.toSeq.sortBy(_._1).foreach { case (dom, m) =>
+        buf.put(dom.getBytes("UTF-8"))
+        doubles(m.featurizer.idf.toArray)
+        ints(m.featurizer.selectedIndices)
+        doubles(Array(m.gbt.f0, m.gbt.stepSize))
+        m.gbt.trees.foreach { t =>
+          ints(t.feature); doubles(t.threshold); ints(t.left); ints(t.right); doubles(t.value)
+        }
+      }
+      val digest = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(java.util.Arrays.copyOf(buf.array, buf.position))
+        .map("%02x".format(_)).mkString
+      assert(digest == "26c4e00e4ebc5503218961feb864bd3fab7d0ebf3f5912ece087d3a6d2edbeb5",
+        s"the trained model map changed: digest $digest")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
+  }
 }

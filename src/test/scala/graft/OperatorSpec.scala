@@ -671,9 +671,9 @@ class OperatorSpec extends SparkSpec {
   }
 
   test("connected components: a chain that outruns maxIter throws, the default labels it") {
-    // 64 nodes whose ids rise along the chain: min-label propagation
-    // with pointer jumping needs 7 rounds (6 to reach the fixpoint, one
-    // more to see the label sum hold)
+    // 64 nodes whose ids rise along the chain: hook-and-shortcut needs
+    // 6 rounds (5 to reach the fixpoint, one more to see the label sum
+    // hold)
     import spark.implicits._
     val pairs = (1L until 64L).map(i => (i - 1, i)).toDF("id_a", "id_b")
     val e = intercept[IllegalStateException](
@@ -683,6 +683,28 @@ class OperatorSpec extends SparkSpec {
     val labels = graft.operators.Dedup.componentLabels(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels == (0L until 64L).map(_ -> 0L).toMap)
+  }
+
+  test("connected components: a 1000-node chain over random ids converges within maxIter") {
+    // the case plain min-label propagation crawls: with the ids in random
+    // order along the chain, min-label propagation with pointer jumping
+    // needs 455 rounds on this one, far past maxIter = 30;
+    // hook-and-shortcut needs 9
+    import spark.implicits._
+    val ids = new scala.util.Random(42).shuffle((0L until 100000L).toVector).take(1000)
+    val pairs = (1 until ids.size).map(i => (ids(i - 1), ids(i))).toDF("id_a", "id_b")
+    val labels = graft.operators.Dedup.componentLabels(pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels == ids.map(_ -> ids.min).toMap)
+  }
+
+  test("connected components leave the session serializable") {
+    // q_model_zoo's models keep the session in their training summary, and
+    // their UDFs ship it to tasks; a CC call run first in the same session
+    // must not leave a field there that cannot be serialized
+    import spark.implicits._
+    graft.operators.Dedup.componentLabels(Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")).collect()
+    new java.io.ObjectOutputStream(java.io.OutputStream.nullOutputStream()).writeObject(spark)
   }
 
   test("minhash hot-bucket cap bounds an identical-content flood") {

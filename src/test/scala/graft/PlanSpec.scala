@@ -215,4 +215,47 @@ class PlanSpec extends SparkSpec {
     assert("ReusedExchange \\[doc_id#\\d+L, sum#".r.findAllIn(sim).length >= 2,
       s"q_dedup_simhash: the vote-aggregate shuffle is not reused by both consumers:\n$sim")
   }
+
+  test("connected components broadcast no edge list") {
+    // The CC loop's edge list is a localCheckpoint whose size estimate is
+    // unreliable, and an estimate-driven planner broadcast it in every
+    // round; the node-sized parent table must be the build side. Every
+    // plan one componentLabels call executes is captured, the final
+    // collect's included.
+    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val ids = new scala.util.Random(7).shuffle((0L until 10000L).toVector).take(300)
+    val pairs = ((1 until 200).map(i => (ids(i - 1), ids(i))) ++
+      (201 until 300).map(i => (ids(200), ids(i)))).toDF("id_a", "id_b")
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(funcName -> qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.operators.Dedup.componentLabels(pairs).collect()
+      // listener events arrive in order, asynchronously: the collect's is last
+      val deadline = System.nanoTime + 60L * 1000000000L
+      while (!plans.asScala.exists(_._1 == "collect") && System.nanoTime < deadline)
+        Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.asScala.exists(_._1 == "collect"), "the final collect's plan was not seen")
+    object Plans extends AdaptiveSparkPlanHelper
+    def edgeScan(p: SparkPlan): Boolean = Plans.find(p) {
+      case s: RDDScanExec => s.output.map(_.name) == Seq("src", "dst")
+      case _ => false
+    }.isDefined
+    val rounds = plans.asScala.count { case (_, p) => edgeScan(p) }
+    assert(rounds >= 3, s"only $rounds captured plans read the edge list")
+    val offenders = plans.asScala.toSeq.flatMap { case (f, p) =>
+      Plans.collect(p) { case b: BroadcastExchangeExec if edgeScan(b.child) => s"$f: $b" }
+    }
+    assert(offenders.isEmpty, s"a CC plan broadcasts the edge list:\n${offenders.mkString("\n")}")
+  }
 }
