@@ -173,6 +173,14 @@ object MLQueries {
     } finally data.unpersist()
   }
 
+  /** A fitted model without its training summary: a copy keeps the
+    * params and weights but not the summary, whose frames hold the
+    * SparkSession. `transform` ships the model to tasks inside a UDF, so
+    * the original would ship the session, and any state the session
+    * cannot serialize (an `Observation`'s manager) fails the query. */
+  private def sessionFree[M <: org.apache.spark.ml.Model[M]](m: M): M =
+    m.copy(org.apache.spark.ml.param.ParamMap.empty)
+
   /** q_model_zoo: RF / LinearSVC / PCA summary rows. */
   def modelZoo(spark: SparkSession, dir: String): DataFrame = {
     val data = featurized(spark, dir).cache()
@@ -197,32 +205,32 @@ object MLQueries {
         val rf = new RandomForestClassifier()
           .setNumTrees(10).setMaxDepth(4).setSeed(42L)
           .setLabelCol("label").setFeaturesCol("features")
-        acc(rf.fit(train).transform(test))
+        acc(sessionFree(rf.fit(train)).transform(test))
       }
       val fSvc = Future {
         val svc = new LinearSVC().setMaxIter(5).setRegParam(0.01)
           .setLabelCol("label").setFeaturesCol("features")
-        acc(svc.fit(train).transform(test))
+        acc(sessionFree(svc.fit(train)).transform(test))
       }
       val fPca = Future {
         val pca = new PCA().setK(2).setInputCol("features").setOutputCol("pca")
-        val pcaModel = pca.fit(train)
+        val pcaModel = sessionFree(pca.fit(train))
         // PCA→GBT chain (um/re/models/PCA2GBT.scala): boost on the
         // projected component space, not the raw features
         val pcaGbt = new GBTClassifier()
           .setMaxIter(5).setMaxDepth(3).setSeed(42L)
           .setLabelCol("label").setFeaturesCol("pca")
         val chained = acc(
-          pcaGbt.fit(pcaModel.transform(train)).transform(pcaModel.transform(test)))
+          sessionFree(pcaGbt.fit(pcaModel.transform(train))).transform(pcaModel.transform(test)))
         (pcaModel.explainedVariance.toArray.take(2).sum, chained)
       }
       val fLda = Future {
         // LDA over the document corpus (um/re/models/LDA.scala analog)
         val docs = Tables.documents(spark, dir)
           .select(col("doc_id"), split(col("text"), " ").as("toks"))
-        val cv = new org.apache.spark.ml.feature.CountVectorizer()
+        val cv = sessionFree(new org.apache.spark.ml.feature.CountVectorizer()
           .setInputCol("toks").setOutputCol("features").setVocabSize(64)
-          .fit(docs)
+          .fit(docs))
         val corpus = cv.transform(docs).cache()
         try {
           val lda = new org.apache.spark.ml.clustering.LDA()

@@ -4,7 +4,6 @@ import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Deduplication operators over `documents` (SURVEY §2 rows 22-25):
   * exact content-hash, MinHash-LSH near-dup candidates, SimHash
@@ -412,58 +411,45 @@ object Dedup {
     * component minimum. Rounds are O(log n) (8–9 on a 1000-node chain
     * over random ids, where plain min-label propagation needs hundreds).
     *
-    * Plan: the symmetric edge list, with one self-loop per node, is
-    * deduplicated and materialized once; the self-loop lets one
-    * group-by over dst yield both c(v) and p(v). A localCheckpoint
-    * taken under AQE reports no partitioning, so pre-partitioning the
-    * edges by src would not spare the per-round shuffle. The node-sized
-    * parent table is the build side of every join (an estimate-driven
-    * plan broadcasts the checkpointed edge list). Each round ends in one
-    * eager `localCheckpoint` that also observes the label sum, so the
-    * convergence test costs no job of its own. A graph that has not
+    * Plan: a [[Pregel]] loop. The symmetric edge list with one
+    * self-loop per node becomes the adjacency N[v] (v and its
+    * neighbours), grouped and hash-partitioned by node once, so the
+    * start p(v) = min N[v] is narrow. A round is one job over four
+    * message shuffles, none of them the edge list: c(v) (each node
+    * sends p(v) over N[v]), the hook, the shortcut's ask to h(v), and
+    * its answer back to v. The job also returns the label sum, so the
+    * convergence test costs nothing extra. A graph that has not
     * converged after `maxIter` rounds throws: its labels would not yet
     * be component minima. */
   private[graft] def componentLabels(pairs: DataFrame, maxIter: Int = 30): DataFrame = {
-    def edge(src: String, dst: String): Column = struct(col(src).as("src"), col(dst).as("dst"))
-    val edges = pairs
-      .select(explode(array(edge("id_a", "id_b"), edge("id_b", "id_a"),
-        edge("id_a", "id_a"), edge("id_b", "id_b"))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .distinct()
-      .localCheckpoint()
-    var parent = edges.groupBy(col("src").as("id")).agg(min("dst").as("p"))
-    var prevSum = BigDecimal(-1)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val hooked = edges
-        .join(parent.select(col("id").as("src"), col("p").as("pu")).hint("shuffle_hash"), "src")
-        // c(v) over v's neighbours and its self-loop, which also carries p(v)
-        .groupBy(col("dst").as("id"))
-        .agg(min("pu").as("c"), max(when(col("src") === col("dst"), col("pu"))).as("p"))
-        // hook: c(v) to v and to p(v)
-        .select(explode(array(col("id"), col("p"))).as("id"), col("c"))
-        .groupBy("id").agg(min("c").as("p"))
-      // shortcut: p(v) ← min(p(v), p(p(v)))
-      val next = hooked
-        .join(hooked.select(col("id").as("p"), col("p").as("pp")).hint("shuffle_hash"),
-          Seq("p"), "left")
-        .select(col("id"), least(col("p"), coalesce(col("pp"), col("p"))).as("p"))
-        .observe("label_sum", sum(col("p").cast(DecimalType(38, 0))).as("s"))
-      parent = next.localCheckpoint()
-      // The checkpoint ran `next`'s own plan, so its metrics hold the sum.
-      // Not an Observation: that starts the session's ObservationManager,
-      // which cannot be serialized, and q_model_zoo's models capture the
-      // session. sum() over no rows (a graph with no pairs) is null.
-      val curSum = Option(next.queryExecution.observedMetrics("label_sum").getDecimal(0))
-        .fold(BigDecimal(0))(BigDecimal(_))
-      converged = curSum == prevSum
-      prevSum = curSum
-      i += 1
+    import pairs.sparkSession.implicits._
+    val (ids, part) = Pregel.pairs(pairs.select(col("id_a").cast("long"), col("id_b").cast("long")))
+    val edges = ids.flatMap { case (a, b) => Iterator((a, b), (b, a), (a, a), (b, b)) }
+    def converged(sums: Seq[BigInt]): Boolean =
+      sums.length >= 2 && sums(sums.length - 1) == sums(sums.length - 2)
+    val parent = Pregel.withAdjacency(edges, part) { adj =>
+      val (p, sums) = Pregel.iterate(adj.mapValues(_.min), maxIter)({ (p, _) =>
+        // c(v) = the least p over N[v]
+        val c = Pregel.scan(adj, p)((_, ns, x) => ns.iterator.map((_, x)))
+          .reduceByKey(part, math.min(_, _))
+        // hook: c(v) to v and to p(v); each keeps the least it receives
+        val hooked = Pregel.zipByNode(c, p) { (rows, pv) =>
+          rows.flatMap { case (v, cv) => Iterator((v, cv), (pv(v), cv)) }
+        }.reduceByKey(part, math.min(_, _))
+        // shortcut: p(v) ← min(h(v), h(h(v))), asked at w = h(v), answered to v
+        val asks = hooked.map(_.swap).partitionBy(part)
+        Pregel.zipByNode(asks, hooked) { (rows, h) =>
+          rows.map { case (w, v) => (v, math.min(w, h.getOrElse(w, w))) }
+        }.partitionBy(part)
+      })(_.foldLeft(BigInt(0))(_ + _._2))(_ + _, converged)
+      if (!converged(sums)) {
+        p.unpersist(blocking = false)
+        throw new IllegalStateException(
+          s"connected components did not converge in ${sums.length} rounds (maxIter = $maxIter)")
+      }
+      p
     }
-    if (!converged) throw new IllegalStateException(
-      s"connected components did not converge in $i rounds (maxIter = $maxIter)")
-    parent.select(col("id"), col("p").as("label"))
+    parent.toDF("id", "label")
   }
 
   /** Chunk width (words) for q_chunk_dedup. */

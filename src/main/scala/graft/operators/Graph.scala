@@ -1,19 +1,23 @@
 package graft.operators
 
 import graft.sources.Tables
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 /** Iterative graph analytics over the co-order product graph (parts
   * that appear in the same order are linked — the co-purchase graph
   * every recommender bootstrap builds from order lines).
   *
-  * Companion to Dedup's connected-components (hook-and-shortcut): this
-  * family holds the FIXED-ITERATION message-passing algorithms, whose
-  * Spark-first shape is k rounds of (join ranks to edges) → two-phase
-  * aggregate by destination — shuffle ∝ edges per round, never
-  * node-pair-quadratic, the standard Pregel-on-DataFrames reduction.
+  * Companion to Dedup's connected components (hook-and-shortcut): this
+  * family holds the FIXED-ITERATION message-passing algorithms. Every
+  * loop runs on [[Pregel]]: the edge list is grouped into an adjacency
+  * hash-partitioned by node once, vertex state shares that
+  * partitioning, and each round is a narrow adjacency⋈state zip that
+  * builds the messages, one shuffle of the messages by receiver, and
+  * one job that stores the new state — shuffle ∝ messages per round,
+  * never the edge list again, never node-pair-quadratic.
   */
 object Graph {
 
@@ -31,12 +35,33 @@ object Graph {
     *
     * Scale shape: edges = per-order self-join of DISTINCT (order,
     * part) — fan-out bounded by lines-per-order², a constant (≤ ~7 in
-    * TPC-H-shaped data); degrees and each round's re-rank are
-    * two-phase aggs; each of the [[PrIters]] rounds is one join on the
-    * edge src key + one shuffle by dst. The edge set is cached across
-    * rounds (rebuilt 3× otherwise). The oracle unrolls the same three
-    * rounds as nested CTEs — recursion-free, so it runs on any engine
-    * that bans aggregates in recursive terms. */
+    * TPC-H-shaped data). Each of the [[PrIters]] rounds is one
+    * [[Pregel]] round: contributions built narrowly from the
+    * co-partitioned adjacency and ranks, one shuffle of them by dst,
+    * one job. The state carries each node's degree, so the result
+    * needs no join. The oracle unrolls the same three rounds as nested
+    * CTEs — recursion-free, so it runs on any engine that bans
+    * aggregates in recursive terms. */
+  def pagerank(spark: SparkSession, dir: String): DataFrame =
+    pagerankOf(coOrderEdges(spark, dir))
+
+  /** [[pagerank]] over an edge set (src, dst). */
+  private[graft] def pagerankOf(edges: DataFrame): DataFrame = {
+    import edges.sparkSession.implicits._
+    val (e, part) = Pregel.pairs(edges)
+    val ranks = Pregel.withAdjacency(e, part) { adj =>
+      // state: node → (deg, r)
+      Pregel.rounds(adj.mapValues(ds => (ds.length.toLong, 1000000L)), PrIters) { (st, _) =>
+        val sums = Pregel.scan(adj, st) { case (_, ds, (deg, r)) =>
+          val c = r / deg
+          ds.iterator.map((_, c))
+        }.reduceByKey(part, _ + _)
+        Pregel.scan(adj, sums)((u, ds, s) => Some((u, (ds.length.toLong, 150000L + PrDampE3 * s / 1000))))
+      }
+    }
+    ranks.map { case (n, (d, r)) => (n, d, r) }.toDF("node", "deg", "pr_e6").orderBy("node")
+  }
+
   /** Directed co-order edge set (both directions) — shared by
     * [[pagerank]] and [[degreeDist]].
     *
@@ -88,34 +113,6 @@ object Graph {
         min("deg").as("min_deg"), max("deg").as("max_deg"))
       .orderBy("bin")
 
-  def pagerank(spark: SparkSession, dir: String): DataFrame = {
-    // edges, degrees and the degree-joined edge set materialize ONCE via
-    // localCheckpoint (the edge build would otherwise run for deg and
-    // again for ed) and auto-release on GC — cache() would pin them in
-    // the CacheManager for the session lifetime
-    val edges = coOrderEdges(spark, dir).localCheckpoint()
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
-    val ed = edges.join(deg, "src").localCheckpoint()
-    var ranks = deg.select(col("src").as("node"), lit(1000000L).as("r"))
-    (1 to PrIters).foreach { _ =>
-      // localCheckpoint truncates the growing rank lineage (the
-      // dedup_clusters pattern): each round's plan reads the
-      // materialized edge set + last round's MATERIALIZED ranks
-      // (∝ nodes, tiny) — never re-deriving the source scans round
-      // after round.
-      ranks = ed.join(ranks, ed("src") === ranks("node"))
-        .select(col("dst"), expr("r div deg").as("contrib"))
-        .groupBy("dst").agg(sum("contrib").as("s"))
-        .select(col("dst").as("node"),
-          (lit(150000L) + expr(s"($PrDampE3 * s) div 1000")).as("r"))
-        .localCheckpoint()
-    }
-    ranks
-      .join(deg.select(col("src").as("node"), col("deg")), "node")
-      .select(col("node"), col("deg"), col("r").as("pr_e6"))
-      .orderBy("node")
-  }
-
   /** Link-prediction hub cap: 2-hop candidate generation explodes as
     * Σ deg(z)² over intermediaries z, so hubs above this degree are
     * excluded — semantically principled (a hub's 1/deg contribution is
@@ -147,15 +144,15 @@ object Graph {
       .select(col("src").as("z"), col("deg").as("deg_z"))
     val hopIn = edges.select(col("src").as("part_a"), col("dst").as("z"))
     val hopOut = edges.select(col("src").as("z"), col("dst").as("part_b"))
-    // deliberate sort-merge on all three joins (kcore's note: the
-    // checkpointed edge list's size estimate is unreliable, and the
-    // estimate-driven plan here broadcast BOTH edge projections AND
+    // deliberate sort-merge on all three joins: a checkpointed frame
+    // keeps its source plan's size estimate, which is unreliable, and
+    // the estimate-driven plan here broadcast BOTH edge projections AND
     // the anti-join's full edge list — a 2.4M-row HashedRelation
-    // built three times at sf0.1, and a driver hazard at scale).
-    // shuffle_hash was measured 0.2-0.3 s BEHIND merge on this shape
-    // (r14: both sides here are edge-sized, so there is no small
-    // build side for SHJ to exploit); merge spills gracefully at any
-    // scale, which is the property this plan pin is buying.
+    // built three times at sf0.1, and a driver hazard at scale.
+    // shuffle_hash measured 0.2-0.3 s BEHIND merge on this shape (both
+    // sides are edge-sized, so there is no small build side for SHJ to
+    // exploit); merge spills gracefully at any scale, which is the
+    // property this plan pin is buying.
     hopIn.join(thru.hint("merge"), "z")
       .join(hopOut.hint("merge"), "z")
       .filter(col("part_a") < col("part_b"))
@@ -182,32 +179,33 @@ object Graph {
     * "how far is the catalog from its hubs" diagnostic that sizes
     * any graph-propagation job before it runs.
     *
-    * Scale shape: the classic Pregel reduction — each round joins the
-    * node-sized frontier to the edge set (shuffle ∝ edges), unions the
-    * previous distances and min-aggs by node; localCheckpoint caps the
-    * lineage exactly as in [[pagerank]] / Dedup's hook-and-shortcut CC.
-    * Seeds come from a TakeOrderedAndProject over the degree table
-    * (never a full sort); the final census is a ≤(rounds+2)-row agg. */
+    * Scale shape: [[Pregel]] rounds over the co-partitioned adjacency;
+    * the state holds every node's distance (unreached until a message
+    * lands), only the last round's frontier sends, and one min-shuffle
+    * by receiver plus one job per round. Seeds are one takeOrdered over
+    * the degrees (never a full sort); the final census is a
+    * ≤(rounds+2)-row agg. */
   def bfsHops(spark: SparkSession, dir: String): DataFrame = {
-    val edges = coOrderEdges(spark, dir).localCheckpoint()
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val seeds = deg.orderBy(col("deg").desc, col("src")).limit(BfsSeeds)
-      .select(col("src").as("node"), lit(0L).as("dist"))
-    var reach = seeds.localCheckpoint()
-    (1 to BfsRounds).foreach { k =>
-      // build side = the node-sized frontier (see kcore's note on the
-      // checkpointed edge list's unreliable size estimate)
-      reach = reach.hint("shuffle_hash")
-        .join(edges, reach("node") === edges("src"))
-        .select(col("dst").as("node"), lit(k.toLong).as("dist"))
-        .union(reach)
-        .groupBy("node").agg(min("dist").as("dist"))
-        .localCheckpoint()
+    val edges = coOrderEdges(spark, dir)
+    import spark.implicits._
+    val (e, part) = Pregel.pairs(edges)
+    val dist = Pregel.withAdjacency(e, part) { adj =>
+      val seeds = adj.map { case (v, ds) => (-ds.length.toLong, v) }
+        .takeOrdered(BfsSeeds).map(_._2).toSet
+      val init = adj.mapPartitions(_.map { case (v, _) =>
+        (v, if (seeds(v)) 0L else Long.MaxValue) }, preservesPartitioning = true)
+      Pregel.rounds(init, BfsRounds) { (st, k) =>
+        val hop = k.toLong
+        val reached = Pregel.scan(adj, st) { (_, ds, d) =>
+          if (d == hop - 1) ds.iterator.map((_, hop)) else Iterator.empty
+        }.reduceByKey(part, math.min(_, _))
+        Pregel.zipByNode(st, reached) { (rows, r) =>
+          rows.map { case (v, d) => (v, math.min(d, r.getOrElse(v, d))) }
+        }
+      }
     }
-    deg.select(col("src").as("node"))
-      .join(reach, Seq("node"), "left")
-      .select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
+    dist.map { case (v, d) => (v, if (d == Long.MaxValue) -1L else d) }
+      .toDF("node", "dist")
       .groupBy("dist")
       .agg(count(lit(1)).as("n_nodes"),
         min("node").as("min_node"), max("node").as("max_node"))
@@ -218,6 +216,9 @@ object Graph {
     * oracle. */
   private[graft] val HitsRounds = 2
 
+  /** s·10⁶ div m, exact where s·10⁶ overflows a Long. */
+  private def e6Share(s: Long, m: Long): Long = (BigInt(s) * 1000000L / m).toLong
+
   /** q_hits: Kleinberg's HITS (hubs & authorities, JACM 1999) over
     * the DIRECTED bipartite purchase graph customer → part — the
     * mutual-reinforcement ranking PageRank can't express on a
@@ -227,19 +228,21 @@ object Graph {
     * graph is symmetric, so HITS would degenerate there; the bipartite
     * edge set is where the two scores genuinely differ.
     *
-    * All-integer: scores at e6, each half-round is one exact
-    * decimal(38,0) sum along edges followed by a value-normalization
-    * (score·10⁶ div max — max is a VALUE, so no tie-pinning needed,
-    * and every score lands in (0, 10⁶]). No sqrt-of-sum L2 norm: max
-    * norm is the standard power-iteration alternative and keeps the
-    * fixpoint integer-exact cross-engine.
+    * All-integer: scores at e6, each half-round is one exact sum along
+    * edges followed by a value-normalization (score·10⁶ div max — max
+    * is a VALUE, so no tie-pinning needed, and every score lands in
+    * (0, 10⁶]). No sqrt-of-sum L2 norm: max norm is the standard
+    * power-iteration alternative and keeps the fixpoint integer-exact
+    * cross-engine.
     *
     * Scale shape: edges = one orders⋈lineitem equi-join de-duplicated
-    * to (cust, part); each half-round is one edge-key equi-join + a
-    * two-phase agg (shuffle ∝ edges, the Pregel reduction), with the
-    * 1-row max broadcast back; per-round localCheckpoint truncates
-    * lineage exactly as in [[pagerank]]. */
+    * to (cust, part), grouped into two [[Pregel]] adjacencies (by cust
+    * and by part) on one partitioner. Each half-round is one narrow
+    * zip, one shuffle of the sums to the other side, and one job whose
+    * figure is the max the next half-round normalizes by; a side's
+    * state carries (deg, unnormalized sum). */
   def hits(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
     val edges = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(spark, dir)
@@ -247,34 +250,40 @@ object Graph {
         Seq("o_orderkey"))
       .select(col("o_custkey").as("cust"), col("l_partkey").as("part"))
       .distinct()
-      .localCheckpoint() // read 2× per round + both degree tables
-    var hub = edges.select("cust").distinct()
-      .select(col("cust"), lit(1000000L).as("h"))
-    var auth = edges.select("part").distinct()
-      .select(col("part"), lit(0L).as("a")) // overwritten in round 1
-    (1 to HitsRounds).foreach { _ =>
-      val a0 = edges.join(hub, Seq("cust")).groupBy("part")
-        .agg(sum(expr("cast(h as decimal(38,0))")).as("s"))
-      auth = a0.crossJoin(broadcast(a0.agg(max("s").as("m"))))
-        .select(col("part"),
-          expr("cast((s * 1000000) div m as bigint)").as("a"))
-        .localCheckpoint()
-      val h0 = edges.join(auth, Seq("part")).groupBy("cust")
-        .agg(sum(expr("cast(a as decimal(38,0))")).as("s"))
-      hub = h0.crossJoin(broadcast(h0.agg(max("s").as("m"))))
-        .select(col("cust"),
-          expr("cast((s * 1000000) div m as bigint)").as("h"))
-        .localCheckpoint()
+    val (e, part) = Pregel.pairs(edges)
+    // a side: node → (deg, unnormalized score), and the max it is
+    // normalized by (score·10⁶ div max)
+    type Side = (RDD[(Long, (Long, Long))], Long)
+    val rows = Pregel.withAdjacency(e, part) { byCust =>
+      Pregel.withAdjacency(e.map(_.swap), part) { byPart =>
+        // sums `from`'s scores along `along` into the side `to` indexes
+        def half(along: Pregel.Adjacency, to: Pregel.Adjacency, from: Side): Side = {
+          val (st, m) = from
+          val sums = Pregel.scan(along, st) { case (_, ds, (_, s)) =>
+            val x = e6Share(s, m)
+            ds.iterator.map((_, x))
+          }.reduceByKey(part, Math.addExact(_, _))
+          val next = Pregel.scan(to, sums)((u, ds, s) => Some((u, (ds.length.toLong, s))))
+          (next, Pregel.materialize(next)(_.foldLeft(0L)(_ max _._2._2))(_ max _))
+        }
+        var hub: Side = (byCust.mapValues(ds => (ds.length.toLong, 1L)), 1L)
+        var auth: Side = null
+        (1 to HitsRounds).foreach { _ =>
+          val a = half(byCust, byPart, hub)
+          if (auth != null) auth._1.unpersist(blocking = false)
+          auth = a
+          val h = half(byPart, byCust, auth)
+          hub._1.unpersist(blocking = false)
+          hub = h
+        }
+        def out(role: String, side: Side): RDD[(String, Long, Long, Long)] = {
+          val m = side._2
+          side._1.map { case (v, (d, s)) => (role, v, d, e6Share(s, m)) }
+        }
+        out("hub", hub).union(out("authority", auth))
+      }
     }
-    val cdeg = edges.groupBy("cust").agg(count(lit(1)).as("deg"))
-    val pdeg = edges.groupBy("part").agg(count(lit(1)).as("deg"))
-    hub.join(cdeg, Seq("cust"))
-      .select(lit("hub").as("role"), col("cust").as("node"),
-        col("deg"), col("h").as("score_e6"))
-      .unionByName(auth.join(pdeg, Seq("part"))
-        .select(lit("authority").as("role"), col("part").as("node"),
-          col("deg"), col("a").as("score_e6")))
-      .orderBy("role", "node")
+    rows.toDF("role", "node", "deg", "score_e6").orderBy("role", "node")
   }
 
   /** q_assortativity: Newman's degree assortativity of the co-order
@@ -301,8 +310,8 @@ object Graph {
   def assortativity(spark: SparkSession, dir: String): DataFrame = {
     val edges = coOrderEdges(spark, dir)
     val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-    // build side = the node-sized degree table (see kcore's note on
-    // the edge list's unreliable size estimate)
+    // build side = the node-sized degree table: the edge list's size
+    // estimate is unreliable, and an estimate-driven plan may broadcast it
     val stats = edges
       .join(deg.select(col("src"), col("deg").as("dx"))
         .hint("shuffle_hash"), "src")
@@ -355,70 +364,56 @@ object Graph {
     * quantile rungs use the shared whole-bin histogram formula
     * (cum·den ≥ n·num), so no interpolation anywhere.
     *
-    * Scale shape: the ladder peels all three rungs IN ONE PLAN — the
-    * alive set is keyed (frac, node) and each round is edges ⋈ alive
-    * (src) ⋈ alive (frac, dst) → two-phase count → filter ≥ k, i.e.
-    * shuffle ∝ 3·surviving edges per round, never node-quadratic;
-    * alive sets are localCheckpoint'd per round (the pagerank lineage
-    * pattern). Round censuses are rung-sized aggs; the zero-fill
-    * grid join is constant. No driver collect anywhere — the
-    * data-derived rungs stay in the plan as a 3-row broadcast. */
-  def kcore(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val edges = coOrderEdges(spark, dir).localCheckpoint()
-    val deg0 = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val ntot = deg0.agg(count(lit(1)).as("n_nodes"))
-    val cum = deg0.groupBy("deg").agg(count(lit(1)).as("c"))
-      .withColumn("cum", sum("c").over(
-        org.apache.spark.sql.expressions.Window.orderBy("deg")
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)))
-      .crossJoin(broadcast(ntot))
-    val ks = broadcast(KcoreRungs.toDF("frac", "num", "den"))
-      .join(cum, expr("cum * den >= n_nodes * num"))
-      .groupBy("frac").agg(min("deg").as("k"))
-      .localCheckpoint() // 3 rows; every round + the grid reuse it
-    var alive = deg0.select(col("src").as("node"))
-      .crossJoin(broadcast(ks.select("frac", "k")))
-      .localCheckpoint()
-    val rounds = scala.collection.mutable.ArrayBuffer(
-      alive.groupBy("frac").agg(count(lit(1)).as("n_alive"))
-        .withColumn("round", lit(0L)))
-    var r = 1
-    var drained = false
-    while (r <= KcoreRounds && !drained) {
-      // shuffle_hash with the node-sized alive set as build side — a
-      // DELIBERATE strategy (guide §3.1): the checkpointed edge list's
-      // size estimate is unreliable (LogicalRDD inherits the original
-      // plan's estimate), and an estimate-driven planner here chose to
-      // BROADCAST the edge set every round (measured 4.5 s/round at
-      // sf0.1 vs 2.2 s with SHJ); alive is ∝ nodes and hash-builds per
-      // partition, spill-safe at any scale
-      alive = edges
-        .join(alive.select(col("frac"), col("k"), col("node").as("src"))
-          .hint("shuffle_hash"), "src")
-        .join(alive.select(col("frac"), col("node").as("dst"))
-          .hint("shuffle_hash"), Seq("frac", "dst"))
-        .groupBy("frac", "k", "src").agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") >= col("k"))
-        .select(col("frac"), col("k"), col("src").as("node"))
-        .localCheckpoint()
-      rounds += alive.groupBy("frac").agg(count(lit(1)).as("n_alive"))
-        .withColumn("round", lit(r.toLong))
-      // early exit once every rung's core has unraveled: the zero-fill
-      // grid emits the remaining rounds as 0 survivors, so the output
-      // is IDENTICAL — this just skips scheduling empty peel jobs
-      // (the CC loop's driver-side convergence-check precedent; the
-      // emptiness probe reads the already-materialized checkpoint)
-      drained = alive.isEmpty
-      r += 1
+    * Scale shape: the rungs come from a degree histogram reduced by
+    * key (one row per distinct degree) and cut on the driver. The
+    * ladder peels all three rungs in ONE [[Pregel]] loop: a node's
+    * state is the bit set of rungs it is alive in, each alive node
+    * sends that set to its neighbours, one aggregateByKey counts alive
+    * neighbours per rung, and a narrow zip with the old state keeps
+    * the bits whose count reaches K — shuffle ∝ surviving edges per
+    * round, never node-quadratic. The round's job returns its per-rung
+    * census, so the loop stops as soon as every rung has unraveled
+    * (the census then reads 0 for the remaining rounds). */
+  def kcore(spark: SparkSession, dir: String): DataFrame = kcoreOf(coOrderEdges(spark, dir))
+
+  /** [[kcore]] over a symmetric edge set (src, dst). */
+  private[graft] def kcoreOf(edges: DataFrame): DataFrame = {
+    import edges.sparkSession.implicits._
+    val (e, part) = Pregel.pairs(edges)
+    val census = Pregel.withAdjacency(e, part) { adj =>
+      val hist = adj.map { case (_, ds) => (ds.length.toLong, 1L) }
+        .reduceByKey(_ + _).collect().sortBy(_._1)
+      val n = hist.map(_._2).sum
+      val cum = hist.map(_._1).zip(hist.scanLeft(0L)(_ + _._2).tail)
+      // the least degree whose cumulative count reaches num/den of the nodes
+      val rungs = KcoreRungs.flatMap { case (lbl, num, den) =>
+        cum.find { case (_, c) => c * den >= n * num }.map { case (d, _) => (lbl, d) }
+      }
+      val ks = rungs.map(_._2).toArray
+      val (last, alive) = Pregel.iterate(
+          adj.mapValues(_ => (1 << ks.length) - 1), if (ks.isEmpty) 0 else KcoreRounds)({ (st, _) =>
+        val counts = Pregel.scan(adj, st)((_, ds, m) => ds.iterator.map((_, m)))
+          .aggregateByKey(new Array[Long](ks.length), part)(
+          { (c, m) => var j = 0; while (j < c.length) { if ((m >> j & 1) != 0) c(j) += 1; j += 1 }; c },
+          { (a, b) => a.indices.foreach(j => a(j) += b(j)); a })
+        Pregel.zipByNode(st, counts) { (rows, c) =>
+          rows.flatMap { case (v, m) =>
+            c.get(v).map(cs => (v, ks.indices.foldLeft(0) { (k, j) =>
+              if ((m >> j & 1) != 0 && cs(j) >= ks(j)) k | 1 << j else k
+            })).filter(_._2 != 0)
+          }
+        }
+      })(_.foldLeft(new Array[Long](ks.length)) { (c, vm) =>
+        c.indices.foreach(j => if ((vm._2 >> j & 1) != 0) c(j) += 1); c
+      })((a, b) => a.indices.map(j => a(j) + b(j)).toArray,
+        fs => fs.nonEmpty && fs.last.forall(_ == 0L))
+      last.unpersist(blocking = false)
+      for {
+        ((lbl, k), j) <- rungs.zipWithIndex
+        r <- 0 to KcoreRounds
+      } yield (lbl, k, r.toLong, if (r == 0) n else alive.lift(r - 1).fold(0L)(_(j)))
     }
-    val grid = ks.crossJoin(
-      spark.range(0, KcoreRounds + 1).select(col("id").as("round")))
-    grid.join(rounds.reduce(_ unionAll _), Seq("frac", "round"), "left")
-      .na.fill(0L, Seq("n_alive"))
-      .select(col("frac"), col("k"), col("round"), col("n_alive"))
-      .orderBy("frac", "round")
+    census.toDF("frac", "k", "round", "n_alive").orderBy("frac", "round")
   }
 
   /** PPR iterations — shares [[PrDampE3]] with q_pagerank so the two
@@ -438,37 +433,36 @@ object Graph {
     * would not show anyway).
     *
     * Scale shape: the frontier grows from ONE node, so early rounds
-    * touch only the seed's neighborhood — each round is one join on
-    * the materialized edge set ∝ edges OUT OF the current frontier,
-    * never the whole graph; rank lineage localCheckpoints per round
-    * (the q_pagerank loop discipline). The seed derivation is one
-    * TakeOrdered(1) over the degree table. */
+    * touch only the seed's neighborhood — each [[Pregel]] round sends
+    * only from ranked nodes (∝ edges OUT OF the current frontier, never
+    * the whole graph), shuffles the contributions by dst once, and
+    * stores the ranks with their degrees in one job. The seed is one
+    * takeOrdered(1) over the degrees. */
   def ppr(spark: SparkSession, dir: String): DataFrame = {
-    val edges = coOrderEdges(spark, dir).localCheckpoint() // read by deg and ed
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
-    val ed = edges.join(deg, "src").localCheckpoint()
-    val seed = deg.orderBy(col("deg").desc, col("src").asc).limit(1)
-      .select(col("src").as("node"))
-      .localCheckpoint()
-    var ranks = seed.select(col("node"), lit(1000000L).as("r"))
-    (1 to PprIters).foreach { _ =>
-      ranks = ed.join(ranks, ed("src") === ranks("node"))
-        .select(col("dst"), expr("r div deg").as("contrib"))
-        .groupBy("dst").agg(sum("contrib").as("s"))
-        .select(col("dst").as("node"),
-          expr(s"($PrDampE3 * s) div 1000").as("r"))
-        .join(seed.select(col("node"), lit(150000L).as("restart")),
-          Seq("node"), "full")
-        .select(col("node"),
-          (coalesce(col("r"), lit(0L)) + coalesce(col("restart"), lit(0L)))
-            .as("r"))
-        .filter(col("r") > 0)
-        .localCheckpoint()
+    val edges = coOrderEdges(spark, dir)
+    import spark.implicits._
+    val (e, part) = Pregel.pairs(edges)
+    val ranks = Pregel.withAdjacency(e, part) { adj =>
+      adj.map { case (v, ds) => (-ds.length.toLong, v) }.takeOrdered(1).headOption
+        .fold(adj.sparkContext.emptyRDD[(Long, (Long, Long))]) { case (_, seed) =>
+          // state: node → (deg, r), ranked nodes only
+          val init = adj.filter(_._1 == seed).mapValues(ds => (ds.length.toLong, 1000000L))
+          Pregel.rounds(init, PprIters) { (st, _) =>
+            val sums = Pregel.scan(adj, st) { case (v, ds, (deg, r)) =>
+              val c = r / deg
+              // the seed (ranked in every round: it keeps its restart)
+              // also sends itself a zero, so its restart lands even
+              // with no inflow
+              (if (v == seed) Iterator((v, 0L)) else Iterator.empty) ++ ds.iterator.map((_, c))
+            }.reduceByKey(part, _ + _)
+            Pregel.scan(adj, sums) { (u, ds, s) =>
+              val r = PrDampE3 * s / 1000 + (if (u == seed) 150000L else 0L)
+              if (r > 0) Some((u, (ds.length.toLong, r))) else None
+            }
+          }
+        }
     }
-    ranks
-      .join(deg.select(col("src").as("node"), col("deg")), "node")
-      .select(col("node"), col("deg"), col("r").as("ppr_e6"))
-      .orderBy("node")
+    ranks.map { case (n, (d, r)) => (n, d, r) }.toDF("node", "deg", "ppr_e6").orderBy("node")
   }
 
   /** Label-propagation rounds for [[labelProp]]. */
@@ -486,28 +480,42 @@ object Graph {
     * communities a merchandiser can read; q_graph_modularity is the
     * quality score for exactly this kind of partition.
     *
-    * Scale shape: each round is ONE join of the label table onto the
-    * materialized edge set (∝ edges), one (dst, label) two-phase
-    * count, and one per-node rank window (cardinality = nodes);
-    * labels localCheckpoint per round. The classic Pregel reduction —
-    * nothing is ever node-pair-quadratic. */
-  def labelProp(spark: SparkSession, dir: String): DataFrame = {
-    val edges = coOrderEdges(spark, dir).localCheckpoint()
-    var lab = edges.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint()
-    (1 to LpaRounds).foreach { _ =>
-      val w = Window.partitionBy("dst")
-        .orderBy(col("cnt").desc, col("label").asc)
-      // build side = the node-sized label table (see kcore's note on
-      // the checkpointed edge list's unreliable size estimate)
-      lab = edges.join(lab.hint("shuffle_hash"), edges("src") === lab("node"))
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") === 1)
-        .select(col("dst").as("node"), col("label"))
-        .localCheckpoint()
-    }
+    * Scale shape: each [[Pregel]] round sends every node's label to
+    * its neighbours (∝ edges), gathers each receiver's votes map-side
+    * into one primitive array per node, shuffles those by node once,
+    * and picks the winner from the sorted votes, already aligned with
+    * the adjacency — no window, no (node, label) shuffle key. The classic Pregel reduction — nothing is
+    * ever node-pair-quadratic. */
+  def labelProp(spark: SparkSession, dir: String): DataFrame =
+    labelPropOf(coOrderEdges(spark, dir))
+
+  /** [[labelProp]] over an edge set (src, dst). */
+  private[graft] def labelPropOf(edges: DataFrame): DataFrame = {
+    import edges.sparkSession.implicits._
+    val (e, part) = Pregel.pairs(edges)
+    val lab = Pregel.withAdjacency(e, part) { adj =>
+      val init = adj.mapPartitions(_.map { case (v, _) => (v, v) }, preservesPartitioning = true)
+      Pregel.rounds(init, LpaRounds) { (st, _) =>
+        // each node's votes, gathered map-side into one primitive array
+        Pregel.scan(adj, st)((_, ds, l) => ds.iterator.map((_, l)))
+          .combineByKey[mutable.ArrayBuilder.ofLong](
+            new mutable.ArrayBuilder.ofLong += _, _ += _, (a, b) => a.addAll(b.result()), part)
+          .mapValues { votes =>
+            // the (cnt desc, label asc) winner: the first longest run of
+            // the sorted labels
+            val ls = votes.result()
+            java.util.Arrays.sort(ls)
+            var (best, bestCnt, i) = (ls(0), 0, 0)
+            while (i < ls.length) {
+              var j = i
+              while (j < ls.length && ls(j) == ls(i)) j += 1
+              if (j - i > bestCnt) { best = ls(i); bestCnt = j - i }
+              i = j
+            }
+            best
+          }
+      }
+    }.toDF("node", "label")
     val sizes = lab.groupBy("label").agg(count(lit(1)).as("community_size"))
     lab.join(sizes, Seq("label"))
       .select(col("node"), col("label").as("community"),

@@ -41,4 +41,29 @@ class MLValueSpec extends SparkSpec {
       Seq("pca_var_top2", 0.999999, 1955L, 869L),
       Seq("random_forest", 0.649022, 1955L, 869L)))
   }
+
+  test("a fitted model's copy carries no training summary") {
+    // q_model_zoo transforms with copies: a summary's frames hold the session
+    import org.apache.spark.ml.classification.{LinearSVC, RandomForestClassifier}
+    import org.apache.spark.ml.linalg.Vectors
+    import org.apache.spark.ml.param.ParamMap
+    import spark.implicits._
+    val df = (0 until 20).map(i => (i % 2.0, Vectors.dense(i.toDouble, (i % 2).toDouble)))
+      .toDF("label", "features")
+    val rf = new RandomForestClassifier().setNumTrees(2).setSeed(1L).fit(df)
+    val svc = new LinearSVC().setMaxIter(2).fit(df)
+    assert(rf.hasSummary && !rf.copy(ParamMap.empty).hasSummary)
+    assert(svc.hasSummary && !svc.copy(ParamMap.empty).hasSummary)
+  }
+
+  test("q_model_zoo runs on a session with a live Observation") {
+    // an Observation starts its session's ObservationManager, which
+    // cannot be serialized; no task of q_model_zoo may carry the session
+    import org.apache.spark.sql.functions.{count, lit}
+    val session = spark.newSession()
+    val obs = new org.apache.spark.sql.Observation("probe")
+    session.range(3).observe(obs, count(lit(1)).as("n")).collect()
+    assert(obs.get("n") == 3L)
+    assert(SparkEntry.queries("q_model_zoo")(session, sf).collect().length == 5)
+  }
 }

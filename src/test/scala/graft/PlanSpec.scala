@@ -216,46 +216,55 @@ class PlanSpec extends SparkSpec {
       s"q_dedup_simhash: the vote-aggregate shuffle is not reused by both consumers:\n$sim")
   }
 
-  test("connected components broadcast no edge list") {
-    // The CC loop's edge list is a localCheckpoint whose size estimate is
-    // unreliable, and an estimate-driven planner broadcast it in every
-    // round; the node-sized parent table must be the build side. Every
-    // plan one componentLabels call executes is captured, the final
-    // collect's included.
-    import org.apache.spark.sql.execution.{QueryExecution, RDDScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
-    import org.apache.spark.sql.util.QueryExecutionListener
+  test("graph loops shuffle their edge list once") {
+    // Each loop groups its edge list into an adjacency hash-partitioned
+    // by node once. A round must read it narrowly, in the same stage as
+    // the stored state it zips with; a stage that holds the adjacency
+    // but no state is one that shuffles the adjacency again. Every job
+    // of one call is captured; a round's job is the one whose last stage
+    // stores an RDD named "state", and its stages carry that state's
+    // lineage (a stage holds an RDD and its narrow ancestors). Round 1
+    // zips with a start derived from the adjacency itself, so the check
+    // starts at round 2.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
     import scala.jdk.CollectionConverters._
     import spark.implicits._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[StageInfo]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.stageInfos)
+    }
+    def rounds(call: => Any): Seq[Seq[StageInfo]] = {
+      jobs.clear()
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        call
+        // the bus delivers in order: once this job is seen, so are the call's
+        spark.sparkContext.parallelize(Seq(1), 1).setName("barrier").count()
+        val deadline = System.nanoTime + 60L * 1000000000L
+        while (!jobs.asScala.exists(_.exists(_.rddInfos.exists(_.name == "barrier"))) &&
+          System.nanoTime < deadline) Thread.sleep(20)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      jobs.asScala.toSeq.filter(_.maxBy(_.stageId).rddInfos.headOption.exists(_.name == "state"))
+    }
     val ids = new scala.util.Random(7).shuffle((0L until 10000L).toVector).take(300)
     val pairs = ((1 until 200).map(i => (ids(i - 1), ids(i))) ++
       (201 until 300).map(i => (ids(200), ids(i)))).toDF("id_a", "id_b")
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(funcName -> qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    val calls: Seq[(String, () => Any)] = Seq(
+      "pagerank" -> (() => graft.operators.Graph.pagerank(spark, sf).collect()),
+      "kcore" -> (() => graft.operators.Graph.kcore(spark, sf).collect()),
+      "labelProp" -> (() => graft.operators.Graph.labelProp(spark, sf).collect()),
+      "componentLabels" -> (() => graft.operators.Dedup.componentLabels(pairs).collect()))
+    calls.foreach { case (name, call) =>
+      val rs = rounds(call())
+      assert(rs.length >= 2, s"$name: only ${rs.length} round jobs seen")
+      val adj = rs.map(_.flatMap(_.rddInfos).filter(_.name == "adjacency").map(_.id).distinct)
+      assert(adj.forall(_.size == 1) && adj.flatten.distinct.size == 1,
+        s"$name: rounds do not all read one adjacency: $adj")
+      val adjId = adj.head.head
+      for ((stages, r) <- rs.zipWithIndex.drop(1); st <- stages if st.rddInfos.exists(_.id == adjId))
+        assert(st.rddInfos.exists(_.name == "state"),
+          s"$name round ${r + 1}: stage ${st.stageId} reads the adjacency without a state: " +
+            st.rddInfos.map(i => s"${i.id}:${i.name}<-${i.parentIds.mkString(",")}").mkString(" "))
     }
-    spark.listenerManager.register(listener)
-    try {
-      graft.operators.Dedup.componentLabels(pairs).collect()
-      // listener events arrive in order, asynchronously: the collect's is last
-      val deadline = System.nanoTime + 60L * 1000000000L
-      while (!plans.asScala.exists(_._1 == "collect") && System.nanoTime < deadline)
-        Thread.sleep(20)
-    } finally spark.listenerManager.unregister(listener)
-    assert(plans.asScala.exists(_._1 == "collect"), "the final collect's plan was not seen")
-    object Plans extends AdaptiveSparkPlanHelper
-    def edgeScan(p: SparkPlan): Boolean = Plans.find(p) {
-      case s: RDDScanExec => s.output.map(_.name) == Seq("src", "dst")
-      case _ => false
-    }.isDefined
-    val rounds = plans.asScala.count { case (_, p) => edgeScan(p) }
-    assert(rounds >= 3, s"only $rounds captured plans read the edge list")
-    val offenders = plans.asScala.toSeq.flatMap { case (f, p) =>
-      Plans.collect(p) { case b: BroadcastExchangeExec if edgeScan(b.child) => s"$f: $b" }
-    }
-    assert(offenders.isEmpty, s"a CC plan broadcasts the edge list:\n${offenders.mkString("\n")}")
   }
 }
