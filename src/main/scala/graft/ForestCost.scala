@@ -4,11 +4,10 @@ package graft
   * candidate volume and the wall cost of its two stages — candidate
   * build (probe join + canonical dedup) vs vector-attach scoring — so
   * scale-rung exponents can be stated against measured CANDIDATES
-  * rather than rows (r13 verdict item 4: the ceil-log₂ occupancy
-  * sawtooth moves candidate volume ×5 between adjacent rungs by
-  * construction; the engine's actual claim is that cost PER CANDIDATE
-  * stays flat, and this makes that a measured number instead of
-  * prose). One JSON line per run; pass runs ≥ 2 and read the later
+  * rather than rows (the ceil-log₂ occupancy sawtooth moves candidate
+  * volume ×5 between adjacent rungs by construction; the engine's
+  * actual claim is that cost PER CANDIDATE stays flat, and this makes
+  * that a measured number instead of prose). One JSON line per run; pass runs ≥ 2 and read the later
   * runs as the warm figure.
   *
   * Usage: sbt "runMain graft.ForestCost <sfDir> [runs]"

@@ -174,7 +174,7 @@ case class TopEdges(
   override def dataType: DataType = TopEdges.resultType
 
   // update() casts with asInstanceOf, so misuse must fail at ANALYSIS
-  // time, not as a mid-task ClassCastException (r14 advice)
+  // time, not as a mid-task ClassCastException
   override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
     if (idChild.dataType == LongType && scoreChild.dataType == DoubleType)
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess

@@ -98,16 +98,8 @@ object ModelMap {
         .take(8).map("%02x".format(_)).mkString
     })
 
-  /** Collision-proof tag for the corpus dir (md5 prefix, not
-    * String.hashCode — [[pruneStaleSiblings]] deletes by this tag, and
-    * a hashCode collision between two live corpus dirs would make them
-    * delete each other's maps on every retrain). */
-  private def dirTag(dir: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-
   def defaultPath(spark: SparkSession, dir: String): String =
-    s"/tmp/graft_model_map_v${FormatVersion}_${dirTag(dir)}" +
+    s"/tmp/graft_model_map_v${FormatVersion}_${Tables.dirTag(dir)}" +
       s"_${corpusFingerprint(spark, dir)}"
 
   /** Delete older persisted maps for the same corpus dir (any version,
@@ -116,7 +108,7 @@ object ModelMap {
     * accumulate under /tmp forever. */
   private def pruneStaleSiblings(spark: SparkSession, dir: String, keep: String): Unit = {
     val glob = new org.apache.hadoop.fs.Path(
-      s"/tmp/graft_model_map_v*_${dirTag(dir)}_*")
+      s"/tmp/graft_model_map_v*_${Tables.dirTag(dir)}_*")
     val fs = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val stale = try fs.globStatus(glob) catch { case _: Exception => null }
     if (stale != null)

@@ -160,21 +160,26 @@ object Analytics {
       .orderBy("o_custkey")
   }
 
-  /** Domain-analysis chain: parts sold by ≥ minDomains distinct suppliers,
-    * then suppliers carrying ≥ minProds such parts.
+  /** q_dom_analysis's two "hot" floors: suppliers per part, hot parts
+    * per supplier. */
+  private val DomMinDomains = 4
+  private val DomMinProds = 10
+
+  /** Domain-analysis chain: parts sold by ≥ [[DomMinDomains]] distinct
+    * suppliers, then suppliers carrying ≥ [[DomMinProds]] such parts.
     * Reference: analysis/DomAnalysisFull.scala:18-25 (domain=supplier,
     * product=part). Semi-join keeps the fact scan single-pass; the two
     * "hot lists" are tiny and broadcast. */
-  def domAnalysis(spark: SparkSession, dir: String, minDomains: Int = 4, minProds: Int = 10): DataFrame = {
+  def domAnalysis(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir).select("l_partkey", "l_suppkey")
     val domProd = li.distinct()
     val hotParts = domProd.groupBy("l_partkey")
       .agg(countDistinct("l_suppkey").as("n_domains"))
-      .filter(col("n_domains") >= minDomains)
+      .filter(col("n_domains") >= DomMinDomains)
     val hotPairs = domProd.join(broadcast(hotParts), Seq("l_partkey"))
     val hotSupps = hotPairs.groupBy("l_suppkey")
       .agg(countDistinct("l_partkey").as("n_hot_parts"))
-      .filter(col("n_hot_parts") >= minProds)
+      .filter(col("n_hot_parts") >= DomMinProds)
     hotPairs.join(broadcast(hotSupps.select("l_suppkey")), Seq("l_suppkey"))
       .select("l_suppkey", "l_partkey", "n_domains")
       .orderBy("l_suppkey", "l_partkey")
@@ -265,6 +270,10 @@ object Analytics {
       .orderBy("l_partkey", "l_suppkey")
   }
 
+  /** q_prodxstore_pivot's report owner and its competitor columns. */
+  private val PivotOwner = "st0"
+  private val PivotCompetitors = Seq("st1", "st2", "st3", "st4")
+
   /** q_prodxstore_pivot: the per-user product×store comparison report —
     * the reference's Kafka2ProdXStoreReport (analytics/
     * Kafka2ProdXStoreReport.scala:79-128): rows are (condition, sku,
@@ -279,8 +288,7 @@ object Analytics {
     * is on (product, condition). Prices pivot as integer cents so every
     * cell is exact. Condition mapping mirrors the reference's
     * details-string sniffing (Refurbished→Refurb, Used→Used, else New). */
-  def prodXStorePivot(spark: SparkSession, dir: String,
-      user: String = "st0", competitors: Seq[String] = Seq("st1", "st2", "st3", "st4")): DataFrame = {
+  def prodXStorePivot(spark: SparkSession, dir: String): DataFrame = {
     val li = Tables.lineitem(spark, dir)
       .select(
         col("l_partkey"), col("l_suppkey"),
@@ -300,13 +308,13 @@ object Analytics {
         col("p_name").as("title"))
     offers
       .groupBy("l_partkey", "condition_")
-      .pivot("store", user +: competitors)
+      .pivot("store", PivotOwner +: PivotCompetitors)
       .agg(min("cell"))
       // the report covers only products the owner's store carries
-      .filter(col(user).isNotNull)
+      .filter(col(PivotOwner).isNotNull)
       .join(broadcast(p), col("l_partkey") === col("p_partkey"))
       .select(Seq(col("condition_"), col("sku"), col("title")) ++
-        competitors.map(c => coalesce(col(c), lit("NA<<>>NA")).as(c)): _*)
+        PivotCompetitors.map(c => coalesce(col(c), lit("NA<<>>NA")).as(c)): _*)
       .orderBy("sku", "condition_")
   }
 
@@ -346,16 +354,19 @@ object Analytics {
       .orderBy("store_prod_id")
   }
 
+  private val SeedMinFreq = 20
+
   /** Seed frequency fill: emit each product with its order frequency,
     * keeping products above a minimum support — the reference pushes the
     * most-frequent product URLs to the scraper seed topic.
     * Reference: streaming/FillSeedsByProdFreq.scala,
-    * emr/SeedsDistinctS3ToKafka.scala (distinct + frequency). */
-  def seedFreq(spark: SparkSession, dir: String, minFreq: Int = 20): DataFrame =
+    * emr/SeedsDistinctS3ToKafka.scala (distinct + frequency). The
+    * minimum support is [[SeedMinFreq]] lineitems. */
+  def seedFreq(spark: SparkSession, dir: String): DataFrame =
     Tables.lineitem(spark, dir)
       .groupBy("l_partkey")
       .agg(count(lit(1)).as("freq"), countDistinct("l_orderkey").as("n_orders"))
-      .filter(col("freq") >= minFreq)
+      .filter(col("freq") >= SeedMinFreq)
       .orderBy(col("freq").desc, col("l_partkey").asc)
 
   /** Profile spec: (column, repr kind). Reprs are monotone, so
@@ -8781,32 +8792,32 @@ object Analytics {
          |FROM e ASOF LEFT JOIN p ON e.k = p.k AND e.t_ms >= p.t_ms
          |ORDER BY event_id""".stripMargin,
     "q_profile_table" -> s"$profileOracle\nORDER BY col_name",
-    "q_prodxstore_pivot" ->
-      """WITH li AS (
-        |  SELECT l_partkey,
-        |    'st' || CAST(l_suppkey % 7 AS VARCHAR) AS store,
-        |    CASE WHEN l_returnflag = 'R' THEN 'Refurb'
-        |         WHEN l_returnflag = 'A' THEN 'Used' ELSE 'New' END AS condition_,
-        |    CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
-        |  FROM lineitem),
-        |offers AS (
-        |  SELECT l_partkey, condition_, store,
-        |    CAST(MIN(cents) AS VARCHAR) || '<<>>http://' || store
-        |      || '.example.com/p/' || CAST(l_partkey AS VARCHAR) AS cell
-        |  FROM li GROUP BY l_partkey, condition_, store),
-        |piv AS (
-        |  SELECT l_partkey, condition_,
-        |    MIN(CASE WHEN store = 'st0' THEN cell END) AS own,
-        |    COALESCE(MIN(CASE WHEN store = 'st1' THEN cell END), 'NA<<>>NA') AS st1,
-        |    COALESCE(MIN(CASE WHEN store = 'st2' THEN cell END), 'NA<<>>NA') AS st2,
-        |    COALESCE(MIN(CASE WHEN store = 'st3' THEN cell END), 'NA<<>>NA') AS st3,
-        |    COALESCE(MIN(CASE WHEN store = 'st4' THEN cell END), 'NA<<>>NA') AS st4
-        |  FROM offers GROUP BY l_partkey, condition_)
-        |SELECT condition_, 'sku' || CAST(p_partkey AS VARCHAR) AS sku,
-        |  p_name AS title, st1, st2, st3, st4
-        |FROM piv JOIN part ON l_partkey = p_partkey
-        |WHERE own IS NOT NULL
-        |ORDER BY sku, condition_""".stripMargin,
+    "q_prodxstore_pivot" -> {
+      val cols = PivotCompetitors.map(c =>
+        s"    COALESCE(MIN(CASE WHEN store = '$c' THEN cell END), 'NA<<>>NA') AS $c")
+      s"""WITH li AS (
+         |  SELECT l_partkey,
+         |    'st' || CAST(l_suppkey % 7 AS VARCHAR) AS store,
+         |    CASE WHEN l_returnflag = 'R' THEN 'Refurb'
+         |         WHEN l_returnflag = 'A' THEN 'Used' ELSE 'New' END AS condition_,
+         |    CAST(floor(l_extendedprice * 100 + 0.5) AS BIGINT) AS cents
+         |  FROM lineitem),
+         |offers AS (
+         |  SELECT l_partkey, condition_, store,
+         |    CAST(MIN(cents) AS VARCHAR) || '<<>>http://' || store
+         |      || '.example.com/p/' || CAST(l_partkey AS VARCHAR) AS cell
+         |  FROM li GROUP BY l_partkey, condition_, store),
+         |piv AS (
+         |  SELECT l_partkey, condition_,
+         |    MIN(CASE WHEN store = '$PivotOwner' THEN cell END) AS own,
+         |${cols.mkString(",\n")}
+         |  FROM offers GROUP BY l_partkey, condition_)
+         |SELECT condition_, 'sku' || CAST(p_partkey AS VARCHAR) AS sku,
+         |  p_name AS title, ${PivotCompetitors.mkString(", ")}
+         |FROM piv JOIN part ON l_partkey = p_partkey
+         |WHERE own IS NOT NULL
+         |ORDER BY sku, condition_""".stripMargin
+    },
     "q1_agg" ->
       """SELECT l_returnflag, l_linestatus,
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
@@ -8895,19 +8906,19 @@ object Analytics {
         |GROUP BY o_custkey
         |ORDER BY o_custkey""".stripMargin,
     "q_dom_analysis" ->
-      """WITH domprod AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-        |hotparts AS (
-        |  SELECT l_partkey, COUNT(DISTINCT l_suppkey) AS n_domains
-        |  FROM domprod GROUP BY l_partkey HAVING COUNT(DISTINCT l_suppkey) >= 4),
-        |hotpairs AS (
-        |  SELECT d.l_suppkey, d.l_partkey, h.n_domains
-        |  FROM domprod d JOIN hotparts h USING (l_partkey)),
-        |hotsupps AS (
-        |  SELECT l_suppkey FROM hotpairs
-        |  GROUP BY l_suppkey HAVING COUNT(DISTINCT l_partkey) >= 10)
-        |SELECT p.l_suppkey, p.l_partkey, p.n_domains
-        |FROM hotpairs p JOIN hotsupps USING (l_suppkey)
-        |ORDER BY l_suppkey, l_partkey""".stripMargin,
+      s"""WITH domprod AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+         |hotparts AS (
+         |  SELECT l_partkey, COUNT(DISTINCT l_suppkey) AS n_domains
+         |  FROM domprod GROUP BY l_partkey HAVING COUNT(DISTINCT l_suppkey) >= $DomMinDomains),
+         |hotpairs AS (
+         |  SELECT d.l_suppkey, d.l_partkey, h.n_domains
+         |  FROM domprod d JOIN hotparts h USING (l_partkey)),
+         |hotsupps AS (
+         |  SELECT l_suppkey FROM hotpairs
+         |  GROUP BY l_suppkey HAVING COUNT(DISTINCT l_partkey) >= $DomMinProds)
+         |SELECT p.l_suppkey, p.l_partkey, p.n_domains
+         |FROM hotpairs p JOIN hotsupps USING (l_suppkey)
+         |ORDER BY l_suppkey, l_partkey""".stripMargin,
     "q_eval_metrics" ->
       """WITH rows_ AS (
         |  SELECT l_returnflag, l_orderkey,
@@ -8988,8 +8999,8 @@ object Analytics {
         |  ON c.store_id = m.store_id AND c.store_prod_title = m.sys_prod_title
         |ORDER BY store_prod_id""".stripMargin,
     "q_seed_freq" ->
-      """SELECT l_partkey, COUNT(*) AS freq, COUNT(DISTINCT l_orderkey) AS n_orders
-        |FROM lineitem
-        |GROUP BY l_partkey HAVING COUNT(*) >= 20
-        |ORDER BY freq DESC, l_partkey ASC""".stripMargin)
+      s"""SELECT l_partkey, COUNT(*) AS freq, COUNT(DISTINCT l_orderkey) AS n_orders
+         |FROM lineitem
+         |GROUP BY l_partkey HAVING COUNT(*) >= $SeedMinFreq
+         |ORDER BY freq DESC, l_partkey ASC""".stripMargin)
 }

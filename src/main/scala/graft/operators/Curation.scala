@@ -49,10 +49,10 @@ object Curation {
     * `broadcast` hint and this becomes the plain shingle equi-join.)
     * Every training doc is reported (hit or not); the contaminated
     * flag is what a filter stage would consume. */
-  def decontaminate(spark: SparkSession, dir: String, k: Int = DecontamK): DataFrame = {
+  def decontaminate(spark: SparkSession, dir: String): DataFrame = {
     val shingled = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(array_distinct(
-        graft.functions.WordShingles.wordShingles(col("text"), k))).as("sh"))
+        graft.functions.WordShingles.wordShingles(col("text"), DecontamK))).as("sh"))
     val evalPairs = shingled.filter(isEval(col("doc_id")))
       .select(col("sh"), col("doc_id").as("eval_doc_id"))
     shingled.filter(!isEval(col("doc_id")))
@@ -553,10 +553,10 @@ object Curation {
     * cheap enough to run inline. Fully value-oracled: DuckDB rebuilds
     * the identical position set, and "all j bits set" is exactly
     * "all j positions present" (set-bit set == position set). */
-  def bloomDecontam(spark: SparkSession, dir: String, k: Int = DecontamK): DataFrame = {
+  def bloomDecontam(spark: SparkSession, dir: String): DataFrame = {
     val shingled = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(array_distinct(
-        graft.functions.WordShingles.wordShingles(col("text"), k))).as("sh"))
+        graft.functions.WordShingles.wordShingles(col("text"), DecontamK))).as("sh"))
     val posArr = array(bloomPositions(col("sh")): _*)
     // distributed bitset build: ≤ m/64 longs reach the driver
     val packed = shingled.filter(isEval(col("doc_id")))

@@ -211,6 +211,9 @@ object Dedup {
   private val SimBits = 60 // md5 hex prefix → 60-bit token hash
   private val SimChunks = 4
   private val ChunkBits = SimBits / SimChunks // 15 → 2^15 values/chunk
+  /** Near-dup radius: the pigeonhole over [[SimChunks]] chunks holds
+    * for any hamming distance below [[SimChunks]]. */
+  private val SimMaxHamming = 3
 
   /** q_dedup_simhash: 60-bit SimHash per doc (md5-derived token hashes,
     * per-bit majority vote); near-dup mate counts within hamming ≤ 3.
@@ -222,7 +225,7 @@ object Dedup {
     * distinct bucket keys, with the exact hamming filter applied only
     * inside buckets. Hash-oracled end-to-end (md5 → DuckDB rebuilds the
     * identical bit votes). */
-  def dedupSimhash(spark: SparkSession, dir: String, maxHamming: Int = 3): DataFrame = {
+  def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
     // distributed per-bit majority vote: explode distinct tokens, hash
     // once, then 60 partial-aggregable sums — one shuffle on doc_id
     val tokRows = Tables.widened(Tables.documents(spark, dir))
@@ -259,7 +262,7 @@ object Dedup {
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
         col("a.simhash").as("sim_a"), col("b.simhash").as("sim_b"))
       .distinct() // a pair may agree on several chunks
-      .filter(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= maxHamming)
+      .filter(bit_count(col("sim_a").bitwiseXOR(col("sim_b"))) <= SimMaxHamming)
     val cnt = near.select(col("id_a").as("doc_id"))
       .unionAll(near.select(col("id_b").as("doc_id")))
       .groupBy("doc_id").agg(count(lit(1)).as("n_near"))
@@ -379,11 +382,8 @@ object Dedup {
     * corpus — and no component is ever collected; singleton docs never
     * enter the loop and rejoin at the end as their own clusters. */
   def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
-    val labels = componentLabels(minhashPairs(spark, dir).select("id_a", "id_b"))
-    val lab = Tables.documents(spark, dir)
-      .select(col("doc_id"))
-      .join(labels.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("label"), col("doc_id")).as("cluster_id"))
+    val lab = labelEveryNode(Tables.documents(spark, dir).select(col("doc_id")),
+      "doc_id", minhashPairs(spark, dir).select("id_a", "id_b"))
     val sizes = lab.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     lab
       .join(sizes, Seq("cluster_id"))
@@ -451,6 +451,17 @@ object Dedup {
     }
     parent.toDF("id", "label")
   }
+
+  /** Every row of `nodes` with its component label as `cluster_id`:
+    * [[componentLabels]] over `pairs`, left-joined back on the node id
+    * column `id`, so a node in no pair is its own cluster. The one
+    * "label every node" tail of the connected-components consumers;
+    * `nodes` must not carry a column named `label`. */
+  private[graft] def labelEveryNode(nodes: DataFrame, id: String,
+      pairs: DataFrame): DataFrame =
+    nodes.join(componentLabels(pairs).withColumnRenamed("id", id), Seq(id), "left")
+      .select(nodes.columns.toIndexedSeq.map(col) :+
+        coalesce(col("label"), col(id)).as("cluster_id"): _*)
 
   /** Chunk width (words) for q_chunk_dedup. */
   private[graft] val ChunkWords = 20
@@ -1218,7 +1229,7 @@ object Dedup {
          |  FROM chunks a JOIN chunks b
          |    ON a.c = b.c AND a.cv = b.cv AND a.doc_id < b.doc_id),
          |near AS (
-         |  SELECT id_a, id_b FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3),
+         |  SELECT id_a, id_b FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= $SimMaxHamming),
          |cnt AS (
          |  SELECT doc_id, COUNT(*) AS n_near
          |  FROM (SELECT id_a AS doc_id FROM near

@@ -97,28 +97,34 @@ object Extraction {
         concat(col("text_before"), col("candidate"), col("text_after"))))
       .orderBy("o_orderkey", "location")
 
-  /** q_pattern_locate: literal(.*?)literal pattern → (0-based group
-    * start, extracted value, ±L-char extended snippet). First-occurrence
-    * semantics via `locate`, fully declarative.
+  /** q_pattern_locate's anchors around the price group and its
+    * snippet half-width. Neither anchor contains a single quote, so both
+    * sit inside SQL string literals as they are. */
+  private val LocateBefore = "\"price\">$"
+  private val LocateAfter = "</span>"
+  private val LocateSnippet = 12
+
+  /** q_pattern_locate: [[LocateBefore]](.*?)[[LocateAfter]] pattern →
+    * (0-based group start, extracted value, ±[[LocateSnippet]]-char
+    * extended snippet). First-occurrence semantics via `locate`, fully
+    * declarative.
     * Reference: um/re/utils/Utils.scala:216-249 (allPatterns /
     * extPatternLocationPair / skipSpecialCharsInPattern). */
-  def patternLocate(spark: SparkSession, dir: String,
-      before: String = "\"price\">$", after: String = "</span>", L: Int = 12): DataFrame = {
-    val sqlBefore = before.replace("'", "''")
-    val sqlAfter = after.replace("'", "''")
+  def patternLocate(spark: SparkSession, dir: String): DataFrame =
     withHtml(spark, dir)
-      .withColumn("pos_b", expr(s"locate('$sqlBefore', html)")) // 1-based, 0 if absent
-      .withColumn("g1s", col("pos_b") + before.length - 1) // 0-based group start
-      .withColumn("g1e", expr(s"locate('$sqlAfter', html, pos_b + ${before.length}) - 1"))
+      .withColumn("pos_b", expr(s"locate('$LocateBefore', html)")) // 1-based, 0 if absent
+      .withColumn("g1s", col("pos_b") + LocateBefore.length - 1) // 0-based group start
+      .withColumn("g1e",
+        expr(s"locate('$LocateAfter', html, pos_b + ${LocateBefore.length}) - 1"))
       .filter(col("pos_b") > 0 && col("g1e") >= 0)
       .select(
         col("o_orderkey"),
         expr(s"substring(html, g1s + 1, g1e - g1s)").as("price_str"),
         col("g1s").cast("int").as("location"),
-        expr(s"substring(html, greatest(g1s - $L, 0) + 1, " +
-          s"least(g1e + $L, length(html)) - greatest(g1s - $L, 0))").as("ext"))
+        expr(s"substring(html, greatest(g1s - $LocateSnippet, 0) + 1, " +
+          s"least(g1e + $LocateSnippet, length(html)) - greatest(g1s - $LocateSnippet, 0))")
+          .as("ext"))
       .orderBy("o_orderkey")
-  }
 
   /** q_build_patterns: derive each domain's extraction pattern from
     * candidate agreement — the pattern-building job
@@ -128,8 +134,11 @@ object Extraction {
     * price); per domain, keep the dominant pattern with its page
     * support and coverage. Shuffles only on (domain, pattern) and
     * domain — the window partitions by domain (high cardinality at
-    * scale), and the per-domain totals join broadcast. */
-  def buildPatterns(spark: SparkSession, dir: String, trim: Int = 12): DataFrame = {
+    * scale), and the per-domain totals join broadcast. Anchors are
+    * trimmed to [[PatternTrim]] chars. */
+  private val PatternTrim = 12
+
+  def buildPatterns(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cand = labeledCandidates(spark, dir)
       .withColumn("domain",
@@ -137,8 +146,8 @@ object Extraction {
     val tru = cand
       .filter(graft.functions.Text.parsePriceLocale(col("candidate")) === col("a_val"))
       .select(col("domain"), col("o_orderkey"),
-        expr(s"right(text_before, $trim)").as("pat_before"),
-        expr(s"left(text_after, $trim)").as("pat_after"))
+        expr(s"right(text_before, $PatternTrim)").as("pat_before"),
+        expr(s"left(text_after, $PatternTrim)").as("pat_after"))
     val counts = tru.groupBy("domain", "pat_before", "pat_after")
       .agg(countDistinct("o_orderkey").as("n_pages"))
     // per-domain page totals come straight from orders — every page
@@ -238,8 +247,8 @@ object Extraction {
          |  JOIN locs l ON s.o_orderkey = l.o_orderkey),
          |tru AS (
          |  SELECT domain, o_orderkey,
-         |    right(text_before, 12) AS pat_before,
-         |    left(text_after, 12) AS pat_after
+         |    right(text_before, $PatternTrim) AS pat_before,
+         |    left(text_after, $PatternTrim) AS pat_after
          |  FROM pats
          |  WHERE CAST(replace(candidate, ',', '') AS DOUBLE)
          |      = CAST(replace(a_str, ',', '') AS DOUBLE)),
@@ -264,19 +273,19 @@ object Extraction {
       s"""WITH $baseSql,
          |pat AS (
          |  SELECT o_orderkey, html,
-         |    strpos(html, '"price">$$') AS pos_b
+         |    strpos(html, '$LocateBefore') AS pos_b
          |  FROM locs),
          |g AS (
          |  SELECT o_orderkey, html,
-         |    pos_b + 9 - 1 AS g1s,
-         |    strpos(substr(html, pos_b + 9), '</span>') + pos_b + 9 - 2 AS g1e
+         |    pos_b + ${LocateBefore.length} - 1 AS g1s,
+         |    strpos(substr(html, pos_b + ${LocateBefore.length}), '$LocateAfter') + pos_b + ${LocateBefore.length} - 2 AS g1e
          |  FROM pat WHERE pos_b > 0),
          |res AS (
          |  SELECT o_orderkey,
          |    substr(html, g1s + 1, g1e - g1s) AS price_str,
          |    CAST(g1s AS INT) AS location,
-         |    substr(html, greatest(g1s - 12, 0) + 1,
-         |      least(g1e + 12, len(html)) - greatest(g1s - 12, 0)) AS ext
+         |    substr(html, greatest(g1s - $LocateSnippet, 0) + 1,
+         |      least(g1e + $LocateSnippet, len(html)) - greatest(g1s - $LocateSnippet, 0)) AS ext
          |  FROM g WHERE g1e >= 0)
          |SELECT * FROM res
          |ORDER BY o_orderkey""".stripMargin)

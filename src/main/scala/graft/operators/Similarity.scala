@@ -230,7 +230,7 @@ object Similarity {
     * A true mutual edge can only be LOST by the candidate cut, never
     * demoted: restricting a node's ranking to a candidate subset can
     * only improve (shrink) a surviving neighbor's rank — so edge
-    * recall equals the pair-collision probability, and the radius-1
+    * recall equals the pair-collision probability, and the one-flip
     * multiprobe (single-bit XOR is symmetric, so the candidate set
     * stays symmetric) is what lifts that collision rate, exactly as
     * in the search path.
@@ -240,9 +240,8 @@ object Similarity {
     * q_dedup_embedding bound, NEVER |nodes|²; pair dedup happens on
     * 16-byte id pairs before vectors are fetched (one key join each
     * side). Everything downstream is ∝ candidates. */
-  def knnGraphApprox(spark: SparkSession, dir: String, planes: Int = 0,
-      tables: Int = LshTables): DataFrame =
-    mutualEdges(forestScored(spark, dir, planes, tables), KnnK)
+  def knnGraphApprox(spark: SparkSession, dir: String): DataFrame =
+    mutualEdges(forestScored(spark, dir), KnnK)
       .select(col("id_a"), col("id_b"),
         (floor(col("cos_raw") * 1e6 + 0.5) / 1e6).as("cosine"),
         col("rank").as("rank_ab"), col("rank_ba"))
@@ -255,9 +254,7 @@ object Similarity {
     * deduped multiprobe candidate pairs with their exact cosine — the
     * same pinned-fold IEEE tree as [[allPairsScored]], restricted to
     * pairs colliding in the forest. */
-  private def forestScored(spark: SparkSession, dir: String,
-      planes: Int = 0, tables: Int = LshTables,
-      radius: Int = 1): DataFrame = {
+  private def forestScored(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.widened(Tables.embeddings(spark, dir))
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
@@ -267,18 +264,16 @@ object Similarity {
       col("nrm").as("nb"))
     val cos = dot(col("va"), col("vb")) / (col("na") * col("nb"))
     // ONE parquet-metadata count feeds both the planes dial and the
-    // size gate (each used to count independently — two scheduled
-    // jobs per substrate call doing identical work)
+    // size gate
     val n = Tables.embeddings(spark, dir).count()
-    val p = if (planes > 0) planes else occupancyPlanes(n)
-    val fan = if (radius >= 1) p + 1 else 1
+    val p = occupancyPlanes(n)
     val large =
-      n.toDouble * fan * tables * ForestTargetOccupancy > ForestSliceThreshold
+      n.toDouble * (p + 1) * LshTables * ForestTargetOccupancy > ForestSliceThreshold
     if (!large)
       // small corpus: one direct symmetric join — the slice/mirror
       // machinery below costs more in per-branch job overhead than
       // the whole frame costs to score
-      forestPairs(spark, dir, p, tables, radius)
+      forestPairs(spark, dir, p)
         .join(a, Seq("id_a")).join(b, Seq("id_b"))
         .select(col("id_a"), col("id_b"), cos.as("cos_raw"))
     else {
@@ -286,13 +281,12 @@ object Similarity {
       // products commute, the fold walks the same index order, the
       // norm product commutes), so each undirected pair is scored
       // ONCE in canonical orientation — half the vector-attached
-      // volume — and the 24-byte scored rows mirror afterwards. The
-      // r12 sf3 probe's RAM cliff lived exactly here: both 64-dim
-      // vectors attached to every DIRECTED pair (~80 GB at 70.5M
-      // pairs) spilled local[32] regardless of partition count.
+      // volume — and the 24-byte scored rows mirror afterwards.
+      // Attaching both 64-dim vectors to every DIRECTED pair is the
+      // RAM cliff (~80 GB at 70.5M pairs at sf3, spilling local[32]
+      // regardless of partition count).
       val half = slicedScore(
-        forestPairsCanonical(spark, dir, p, tables, radius)
-          .localCheckpoint(),
+        forestPairsCanonical(spark, dir, p).localCheckpoint(),
         a, b, cos, "cos_raw")
         .localCheckpoint() // consumed by both the rows and their mirror
       half.union(half.select(col("id_b").as("id_a"), col("id_a").as("id_b"),
@@ -317,9 +311,8 @@ object Similarity {
   @volatile private[graft] var ForestSliceThreshold: Double = 8e6
 
   /** Measured (directed candidates, build wall s, score wall s) for
-    * THIS corpus — the graft.ForestCost harness probe behind the r13
-    * verdict's exponent-methodology item: the candidate BUILD
-    * (probe join + canonical dedup) times separately from the
+    * THIS corpus — the graft.ForestCost harness probe: the candidate
+    * BUILD (probe join + canonical dedup) times separately from the
     * vector-attach SCORING stage, so scale-rung comparisons can state
     * the scoring exponent against measured CANDIDATES, not rows — the
     * ceil-log₂ occupancy sawtooth moves candidate volume ×5 between
@@ -337,8 +330,9 @@ object Similarity {
     val b = emb.select(col("vec_id").as("id_b"), col("v").as("vb"),
       col("nrm").as("nb"))
     val cos = dot(col("va"), col("vb")) / (col("na") * col("nb"))
+    val p = occupancyPlanes(Tables.embeddings(spark, dir).count())
     val t0 = System.nanoTime()
-    val pairs = forestPairsCanonical(spark, dir).localCheckpoint()
+    val pairs = forestPairsCanonical(spark, dir, p).localCheckpoint()
     val nCanon = pairs.count()
     val t1 = System.nanoTime()
     val half = slicedScore(pairs, a, b, cos, "cos_raw")
@@ -359,8 +353,8 @@ object Similarity {
     * count is ADAPTIVE (one row per [[ForestScoreSliceRows]], capped
     * at [[ForestScoreSlicesMax]]): at sandbox scale a sliced plan
     * pays 3-6 s of per-branch job overhead for frames a single join
-    * absorbs trivially, while at the sf3 probe's 70M pairs the
-    * unsliced frame was the measured RAM cliff — so small corpora
+    * absorbs trivially, while at sf3's 70M pairs the unsliced frame
+    * was the measured RAM cliff — so small corpora
     * score in one branch and the slicing engages exactly when the
     * frame could hurt. */
   private val ForestScoreSlicesMax = 8
@@ -393,12 +387,11 @@ object Similarity {
     * The candidate set is SYMMETRIC (probing is corpus-wide and a
     * single-bit XOR is its own inverse), so per-node neighbor lists
     * and both directions of a mutual edge rank over the same pairs.
-    * `planes = 0` (the registered default) resolves to the
-    * occupancy-derived [[occupancyPlanes]] count for THIS corpus. */
+    * `planes` is the caller's [[occupancyPlanes]] count for THIS
+    * corpus, taken from the count the caller already holds. */
   private def forestPairs(spark: SparkSession, dir: String,
-      planes: Int = 0, tables: Int = LshTables,
-      radius: Int = 1): DataFrame =
-    forestProbeJoin(spark, dir, planes, tables, radius)
+      planes: Int): DataFrame =
+    forestProbeJoin(spark, dir, planes)
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
 
@@ -410,9 +403,8 @@ object Similarity {
     * LARGE-corpus scoring path; small corpora keep the direct
     * [[forestPairs]] dedup). */
   private def forestPairsCanonical(spark: SparkSession, dir: String,
-      planes: Int = 0, tables: Int = LshTables,
-      radius: Int = 1): DataFrame =
-    forestProbeJoin(spark, dir, planes, tables, radius)
+      planes: Int): DataFrame =
+    forestProbeJoin(spark, dir, planes)
       .select(least(col("id_a"), col("id_b")).as("id_a"),
         greatest(col("id_a"), col("id_b")).as("id_b"))
       .dropDuplicates("id_a", "id_b")
@@ -420,17 +412,13 @@ object Similarity {
   /** The raw (undeduped, directed) probe-collision join both dedup
     * flavors read. */
   private def forestProbeJoin(spark: SparkSession, dir: String,
-      planes: Int = 0, tables: Int = LshTables,
-      radius: Int = 1): DataFrame = {
-    val p = if (planes > 0) planes else forestPlanes(spark, dir)
+      planes: Int): DataFrame = {
     val emb = Tables.widened(Tables.embeddings(spark, dir))
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    val index = forestBuckets(emb, p, tables)
+    val index = forestBuckets(emb, planes, LshTables)
     val probes = index
       .withColumn("probe", explode(array(col("bucket") +:
-        (if (radius >= 1) (0 until p).map(pp =>
-          col("bucket").bitwiseXOR(lit(1L << pp)))
-         else Seq.empty[Column]): _*)))
+        (0 until planes).map(p => col("bucket").bitwiseXOR(lit(1L << p))): _*)))
       .select(col("vec_id").as("id_a"), col("t").as("ta"), col("probe"))
     probes.join(
         index.select(col("vec_id").as("id_b"), col("t").as("t2"),
@@ -445,9 +433,9 @@ object Similarity {
     * work ~linear), which is exactly what pinned planes break. */
   private[graft] def forestCandidatesPerNodeE3(spark: SparkSession,
       dir: String): Long = {
-    val pairs = forestPairs(spark, dir).count()
-    val nodes = math.max(1L, Tables.embeddings(spark, dir).count())
-    pairs * 1000L / nodes
+    val nodes = Tables.embeddings(spark, dir).count()
+    val pairs = forestPairs(spark, dir, occupancyPlanes(nodes)).count()
+    pairs * 1000L / math.max(1L, nodes)
   }
 
   /** q_lof_approx: [[lof]] with its neighbor lists ranked over FOREST
@@ -463,15 +451,6 @@ object Similarity {
     * scores. */
   def lofApprox(spark: SparkSession, dir: String): DataFrame =
     lofFrom(directedTopK(forestScored(spark, dir), KnnK))
-
-  /** The radius-0 measurement hook ApproxSubstrateSpec reads: the
-    * same LOF tail over exact-bucket-only forest candidates (no
-    * one-flip multiprobe) — the documented ~14x candidate-volume
-    * lever whose agreement cost must stay MEASURED, not assumed,
-    * before any default flip. */
-  private[graft] def lofApproxRadius0(spark: SparkSession,
-      dir: String): DataFrame =
-    lofFrom(directedTopK(forestScored(spark, dir, radius = 0), KnnK))
 
   /** q_knn_components: SEMANTIC CLUSTERS — connected components over
     * the mutual-kNN graph ([[knnGraph]]'s edge set), one row per
@@ -497,11 +476,8 @@ object Similarity {
     * themselves), count members, flag the minimum as canonical. */
   private def componentsOutput(spark: SparkSession, dir: String,
       edges: DataFrame): DataFrame = {
-    val labels = Dedup.componentLabels(edges)
-    val lab = Tables.embeddings(spark, dir)
-      .select(col("vec_id"))
-      .join(labels.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("label"), col("vec_id")).as("cluster_id"))
+    val lab = Dedup.labelEveryNode(
+      Tables.embeddings(spark, dir).select(col("vec_id")), "vec_id", edges)
     val sizes = lab.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     lab
       .join(sizes, Seq("cluster_id"))
@@ -549,11 +525,8 @@ object Similarity {
   def graphModularity(spark: SparkSession, dir: String): DataFrame = {
     val edges = knnMutual(spark, dir, SampleKnnK)
       .select("id_a", "id_b").localCheckpoint()
-    val labels = Dedup.componentLabels(edges)
-    val lab = Tables.embeddings(spark, dir)
-      .select(col("vec_id"))
-      .join(labels.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("label"), col("vec_id")).as("cluster_id"))
+    val lab = Dedup.labelEveryNode(
+      Tables.embeddings(spark, dir).select(col("vec_id")), "vec_id", edges)
     val mTot = edges.agg(count(lit(1)).as("m"))
     val deg = edges.select(col("id_a").as("vec_id"))
       .union(edges.select(col("id_b").as("vec_id")))
@@ -594,11 +567,8 @@ object Similarity {
     * window over cluster-count-sized rows. */
   def clusterPurity(spark: SparkSession, dir: String): DataFrame = {
     val edges = knnMutual(spark, dir, SampleKnnK).select("id_a", "id_b")
-    val labels = Dedup.componentLabels(edges)
-    val lab = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("label").cast("long").as("y"))
-      .join(labels.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-      .select(coalesce(col("label"), col("vec_id")).as("cluster_id"), col("y"))
+    val lab = Dedup.labelEveryNode(Tables.embeddings(spark, dir)
+        .select(col("vec_id"), col("label").cast("long").as("y")), "vec_id", edges)
     val counts = lab.groupBy("cluster_id", "y").agg(count(lit(1)).as("n_y"))
     val w = Window.partitionBy("cluster_id")
       .orderBy(col("n_y").desc, col("y").asc)
@@ -656,11 +626,8 @@ object Similarity {
     * and forest-fed diversity samplers. */
   private def clusterSampleFrom(spark: SparkSession, dir: String,
       edges: DataFrame): DataFrame = {
-    val labels = Dedup.componentLabels(edges)
-    val lab = Tables.embeddings(spark, dir)
-      .select(col("vec_id"))
-      .join(labels.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("label"), col("vec_id")).as("cluster_id"))
+    val lab = Dedup.labelEveryNode(
+      Tables.embeddings(spark, dir).select(col("vec_id")), "vec_id", edges)
     val sizes = lab.groupBy("cluster_id").agg(count(lit(1)).as("cluster_size"))
     val draws = lab
       .join(sizes, Seq("cluster_id"))
@@ -787,11 +754,7 @@ object Similarity {
       .select(col("vec_id"), expr(
         "transform(cast(embedding as array<double>), x -> cast(floor(x * 1e6 + 0.5) as bigint))")
         .as("ve"))
-    val labels = Dedup.componentLabels(edges)
-    val mem = emb
-      .join(labels.withColumnRenamed("id", "vec_id"), Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("label"), col("vec_id")).as("cluster_id"), col("ve"))
+    val mem = Dedup.labelEveryNode(emb, "vec_id", edges)
       .localCheckpoint() // catalog-bounded; centroid agg + cos join read it
     val cent = mem
       .select(col("cluster_id"), posexplode(col("ve")).as(Seq("dim", "v")))
@@ -859,12 +822,12 @@ object Similarity {
     * their probe side is a BOUNDED query set, so candidate volume is
     * |Q|·occupancy·probes·L — linear in n with this constant). The
     * corpus-wide FOREST-FED family does NOT use this constant: its
-    * default is the occupancy-derived [[occupancyPlanes]], the dial
-    * that keeps its candidate volume ~linear (see
-    * [[ForestTargetOccupancy]]). At production scale pass
-    * `planes ≈ log₂(corpus / targetBucketSize)` here too: e.g. 10⁹
-    * vectors with ~4k-vector buckets → 18 planes. Cost is linear in
-    * planes (one 64-dim dot each); bucket count grows 2^planes. */
+    * plane count is the occupancy-derived [[occupancyPlanes]], the
+    * dial that keeps its candidate volume ~linear (see
+    * [[ForestTargetOccupancy]]). At production scale this constant
+    * would be ≈ log₂(corpus / targetBucketSize): e.g. 10⁹ vectors
+    * with ~4k-vector buckets → 18 planes. Cost is linear in planes
+    * (one 64-dim dot each); bucket count grows 2^planes. */
   private val Planes = 8
 
   /** OR-amplification width for [[annLshCosine]]: L independent
@@ -905,11 +868,6 @@ object Similarity {
       else 0
     math.max(4, ceilLog2)
   }
-
-  /** The occupancy-derived plane count for a corpus directory (one
-    * parquet metadata count — the same n the oracle's COUNT(*) sees). */
-  private def forestPlanes(spark: SparkSession, dir: String): Int =
-    occupancyPlanes(Tables.embeddings(spark, dir).count())
 
   /** Constant ±1 Rademacher hyperplanes (n × 64), derived from
     * md5("plane<p>/<i>") first-byte parity — fixed operator parameters
@@ -961,7 +919,7 @@ object Similarity {
 
   /** q_ann_lsh_cosine: bucketed approximate top-k over an
     * OR-AMPLIFIED LSH forest — [[LshTables]] independent sign-
-    * projection tables of `planes` bits each; a candidate is scored
+    * projection tables of [[Planes]] bits each; a candidate is scored
     * if it shares a bucket with the query in ANY table, in that
     * table's exact bucket or (multiprobe, Lv et al., VLDB'07) one bit
     * flip away. Union-of-tables is the standard LSH recall
@@ -981,25 +939,20 @@ object Similarity {
     * ever rides the dedup shuffle. Recall < 1 by design;
     * value-checked against a DuckDB oracle that rebuilds the same
     * forest and probe set. */
-  def annLshCosine(spark: SparkSession, dir: String, planes: Int = Planes,
-      probeRadius: Int = 1, tables: Int = LshTables): DataFrame = {
-    require(probeRadius >= 0 && probeRadius <= 1,
-      "probeRadius > 1 would enumerate C(planes, r) flips; not needed here")
+  def annLshCosine(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
     // the forest index: L narrow rows per vector, keyed (t, bucket)
-    val index = forestBuckets(emb.select("vec_id", "v"), planes, tables)
-    // query probes: per table, the exact bucket plus `planes` one-flip
+    val index = forestBuckets(emb.select("vec_id", "v"), Planes, LshTables)
+    // query probes: per table, the exact bucket plus [[Planes]] one-flip
     // multiprobe buckets — ids and bucket keys only (derived from the
     // query slice of the same index)
     val probes = index.filter(isQuery(col("vec_id")))
       .select(col("vec_id").as("query_id"), col("t").as("qt"),
         col("bucket").as("qbucket"))
       .withColumn("probe", explode(array(col("qbucket") +:
-        (if (probeRadius == 0) Seq.empty[Column]
-         else (0 until planes).map(p =>
-           col("qbucket").bitwiseXOR(lit(1L << p)))): _*)))
+        (0 until Planes).map(p => col("qbucket").bitwiseXOR(lit(1L << p))): _*)))
       .select(col("query_id"), col("qt"), col("probe"))
     // union of tables: candidate PAIRS dedup first (16-byte rows), so a
     // pair colliding in several tables is scored once
@@ -1093,8 +1046,8 @@ object Similarity {
     * dedup-flavored use of the ANN machinery: bucket-local pairs with
     * cosine ≥ τ. All-pairs work is confined to sign-projection buckets
     * (the 100 TB shape: shuffle ∝ corpus, compare ∝ Σ bucket²). */
-  def dedupEmbedding(spark: SparkSession, dir: String, planes: Int = Planes): DataFrame = {
-    val emb = bucketed(spark, dir, planes)
+  def dedupEmbedding(spark: SparkSession, dir: String): DataFrame = {
+    val emb = bucketed(spark, dir, Planes)
     val a = emb.select(col("vec_id").as("id_a"), col("v").as("va"),
       col("nrm").as("na"), col("bucket"))
     val b = emb.select(col("vec_id").as("id_b"), col("v").as("vb"),
@@ -1106,12 +1059,26 @@ object Similarity {
       .orderBy("id_a", "id_b")
   }
 
-  /** q_ann_ivf_cosine: IVF approximate top-k — a coarse quantizer
-    * assigns every vector to a cell; each query probes its `nprobe`
+  /** Fixed codebook: the [[IvfCells]] corpus vectors ranked first by
+    * md5(vec_id) — a deterministic pseudo-random sample (bounded
+    * collect: cells × dims doubles). Shared by the IVF and SemDeDup
+    * paths; the oracle SQL re-derives the identical anchors. Returns
+    * (1-based cell id, vector, |vector|²). */
+  private def seededAnchors(emb: DataFrame): Array[(Long, Array[Double], Double)] =
+    emb.select(col("vec_id"), col("v"))
+      .withColumn("h", md5(col("vec_id").cast("string")))
+      .orderBy("h").limit(IvfCells)
+      .collect().zipWithIndex.map { case (r, i) =>
+        val a = r.getSeq[Double](1).toArray
+        (i + 1L, a, a.foldLeft(0.0)((s, x) => s + x * x))
+      }
+
+  /** q_ann_ivf_cosine: IVF approximate top-k — a coarse codebook
+    * assigns every vector to a cell; each query probes its [[IvfNprobe]]
     * nearest cells only, so scoring work is ∝ Σ probed-cell sizes (the
     * classic inverted-file trade: recall vs nprobe).
     *
-    * The default codebook is the production IVF shape: centroids are
+    * The codebook is the production IVF shape: centroids are
     * trained OFFLINE and shipped fixed to the search job. Here the
     * fixed codebook is a deterministic md5-ranked sample of corpus
     * vectors (same derivation both engines run), which makes the whole
@@ -1119,46 +1086,13 @@ object Similarity {
     * in SQL, so this path carries a full value oracle. Cell assignment
     * is a pure map-side argmin over literal-anchor distances (no ML
     * transform, no extra shuffle); every distance folds in pinned index
-    * order so assignments are bit-identical in DuckDB.
-    *
-    * `quantizer = "kmeans"` routes to [[annIvfKmeans]] — the
-    * integer-exact Lloyd-trained codebook, registered and
-    * hash-oracled in its own right as q_ann_ivf_kmeans. On that route
-    * the codebook size is FIXED by the Lloyd kernel's [[KmCells]]
-    * (shared with q_kmeans); `cells` applies only to the seeded
-    * codebook, and an explicit non-default `cells` with
-    * quantizer=kmeans is rejected with IllegalArgumentException
-    * rather than silently ignored. */
-  /** Fixed codebook: the `cells` corpus vectors ranked first by
-    * md5(vec_id) — a deterministic pseudo-random sample (bounded
-    * collect: cells × dims doubles). Shared by the IVF and SemDeDup
-    * paths; the oracle SQL re-derives the identical anchors. Returns
-    * (1-based cell id, vector, |vector|²). */
-  private def seededAnchors(emb: DataFrame, cells: Int): Array[(Long, Array[Double], Double)] =
-    emb.select(col("vec_id"), col("v"))
-      .withColumn("h", md5(col("vec_id").cast("string")))
-      .orderBy("h").limit(cells)
-      .collect().zipWithIndex.map { case (r, i) =>
-        val a = r.getSeq[Double](1).toArray
-        (i + 1L, a, a.foldLeft(0.0)((s, x) => s + x * x))
-      }
-
-  def annIvfCosine(spark: SparkSession, dir: String, cells: Int = IvfCells,
-      nprobe: Int = IvfNprobe, quantizer: String = "seeded"): DataFrame = {
-    if (quantizer == "kmeans") {
-      // the trained quantizer's codebook size is fixed by the Lloyd
-      // kernel's KmCells (shared with q_kmeans); honoring an arbitrary
-      // `cells` here would silently hand back a different codebook
-      // than requested — reject loudly instead (r13 ADVICE)
-      require(cells == IvfCells || cells == KmCells,
-        s"quantizer=kmeans trains a fixed $KmCells-cell codebook " +
-          s"(KmCells); cells=$cells cannot be honored on this route")
-      return annIvfKmeans(spark, dir, nprobe)
-    }
+    * order so assignments are bit-identical in DuckDB. The trained
+    * (Lloyd) codebook is its own registration, [[annIvfKmeans]]. */
+  def annIvfCosine(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm2", dot(col("v"), col("v")))
-    val anchors = seededAnchors(emb, cells)
+    val anchors = seededAnchors(emb)
     val dists = array(anchors.map { case (_, a, a2) =>
       col("nrm2") - lit(2.0) * dot(col("v"), lit(a)) + lit(a2)
     }: _*)
@@ -1173,7 +1107,7 @@ object Similarity {
         col("nrm").as("qn"), posexplode(col("dists")).as(Seq("pos", "dist")))
       .withColumn("cell_p", (col("pos") + 1).cast("long"))
       .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
+      .filter(col("pr") <= IvfNprobe)
       .select(col("query_id"), col("qv"), col("qn"), col("cell_p"))
     val scored = withCell.join(broadcast(probes),
         col("cell") === col("cell_p") && col("vec_id") =!= col("query_id"))
@@ -1189,7 +1123,7 @@ object Similarity {
       .orderBy("query_id", "rank")
   }
 
-  /** q_ann_ivf_kmeans: IVF top-k with the TRAINED coarse quantizer —
+  /** q_ann_ivf_kmeans: IVF top-k with the TRAINED coarse codebook —
     * the complete "train the codebook, then search it" pipeline
     * (q_kmeans is the train half, q_ann_ivf_cosine the search shape;
     * this row runs both ends on ONE shared [[lloyd]] kernel).
@@ -1209,13 +1143,12 @@ object Similarity {
     * assignment/probing are map-side + a per-vector rank window; the
     * candidate join is the same (cell) equi-join as annIvfCosine —
     * shuffle ∝ probed candidates, never |corpus|². */
-  private[graft] def annIvfKmeans(spark: SparkSession, dir: String,
-      nprobe: Int = IvfNprobe): DataFrame = {
+  private[graft] def annIvfKmeans(spark: SparkSession, dir: String): DataFrame = {
     val (corpus, cents) = ivfKmeansIndex(spark, dir)
     ivfTopKFinish(ivfKmeansCandidates(
       Tables.widened(Tables.embeddings(spark, dir))
         .filter(isQuery(col("vec_id"))).select("vec_id", "embedding"),
-      corpus, ivfCentsAgg(cents), nprobe))
+      corpus, ivfCentsAgg(cents), IvfNprobe))
   }
 
   /** The trained IVF index, built batch-side: (assigned corpus
@@ -1378,7 +1311,7 @@ object Similarity {
 
   /** q_ann_ivfpq: the IVF-PQ index probe (Jégou et al. TPAMI'11, the
     * FAISS IVFPQ shape) — the billion-vector configuration where BOTH
-    * halves of the cost are cut: the IVF coarse quantizer restricts
+    * halves of the cost are cut: the IVF coarse codebook restricts
     * each query to nprobe cells (compare work ∝ probed fraction, as
     * q_ann_ivf_cosine), and within a cell candidates are scored from
     * their [[PqM]]-code PQ representation via the asymmetric-distance
@@ -1402,12 +1335,11 @@ object Similarity {
     * q_ann_ivf_cosine with the build side carrying M small ints per
     * row instead of the full vector — the memory cut that lets the
     * candidate scan stay in cache at 10⁹ vectors. */
-  def annIvfPq(spark: SparkSession, dir: String, cells: Int = IvfCells,
-      nprobe: Int = IvfNprobe): DataFrame = {
+  def annIvfPq(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.widened(Tables.embeddings(spark, dir))
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm2", dot(col("v"), col("v")))
-    val anchors = seededAnchors(emb, cells)
+    val anchors = seededAnchors(emb)
     val sample = emb
       .withColumn("h", md5(col("vec_id").cast("string")))
       .orderBy("h").limit(PqKs)
@@ -1448,7 +1380,7 @@ object Similarity {
         posexplode(col("dists")).as(Seq("pos", "dist")): _*)
       .withColumn("cell_p", (col("pos") + 1).cast("long"))
       .withColumn("pr", row_number().over(wProbe))
-      .filter(col("pr") <= nprobe)
+      .filter(col("pr") <= IvfNprobe)
       .drop("pos", "dist", "pr")
     val adc = (0 until PqM)
       .map(m => element_at(col(s"lut$m"), col(s"code${m + 1}").cast("int")))
@@ -1476,7 +1408,7 @@ object Similarity {
   /** q_semdedup: SemDeDup (Abbas et al., "SemDeDup: Data-efficient
     * learning at web-scale through semantic deduplication", 2023) —
     * embedding-space near-dup removal that never goes all-pairs: a
-    * coarse quantizer assigns every vector to a cell, pairwise cosine
+    * coarse codebook assigns every vector to a cell, pairwise cosine
     * runs only WITHIN cells (compare work ∝ Σ cell², not n²), and of
     * each duplicate neighborhood the vector with the LOWEST cosine to
     * its centroid is kept (the paper's keep-the-outlier rule — it
@@ -1493,13 +1425,13 @@ object Similarity {
     * cell-keyed self-join. Oracle: full value compare — assignment,
     * centroid cosines, and tie-breaks fold in pinned index order, so
     * DuckDB reproduces every keep bit. */
-  def semDedup(spark: SparkSession, dir: String, cells: Int = IvfCells): DataFrame = {
+  def semDedup(spark: SparkSession, dir: String): DataFrame = {
     // widen: the per-vector cell-assignment arithmetic dominates; a
     // one-task sandbox scan serializes it (no-op at scale)
     val emb = Tables.widened(Tables.embeddings(spark, dir))
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm2", dot(col("v"), col("v")))
-    val anchors = seededAnchors(emb, cells)
+    val anchors = seededAnchors(emb)
     val dists = array(anchors.map { case (_, a, a2) =>
       col("nrm2") - lit(2.0) * dot(col("v"), lit(a)) + lit(a2)
     }: _*)
@@ -1984,7 +1916,7 @@ object Similarity {
     * centroid form — O(n·cells), the only silhouette computable at
     * corpus scale; the exact pairwise form is O(n²) by definition).
     * s(i) = 1 − d_own/d_next ∈ [0,1]; a cell mean near 0 means its
-    * members sit on the boundary — the quantizer is not separating
+    * members sit on the boundary — the codebook is not separating
     * them and q_ann_ivf_cosine's nprobe recall will be poor there.
     * The cell-level tuning audit next to the corpus-level
     * [[annRecall]]: recall says HOW GOOD retrieval is, silhouette
@@ -1997,20 +1929,20 @@ object Similarity {
     *
     * Scale shape: map-only scan against the broadcast cells×dims
     * codebook, then a ≤cells-row two-phase agg. */
-  def silhouette(spark: SparkSession, dir: String, cells: Int = IvfCells): DataFrame =
+  def silhouette(spark: SparkSession, dir: String): DataFrame =
     silhouetteFinish(silhouetteCensus(
-      Tables.embeddings(spark, dir), silhouetteAnchors(spark, dir, cells)))
+      Tables.embeddings(spark, dir), silhouetteAnchors(spark, dir)))
 
   /** The seeded IVF codebook for [[silhouette]], as batch-derivable
-    * model state: at production scale this is the persisted quantizer
+    * model state: at production scale this is the persisted codebook
     * loaded from the model store and BROADCAST into whichever plan
     * (batch audit or at-ingest monitor) needs per-point cell scores —
     * the reference's load-model-then-map contract (streaming/
     * Htmls2PredsPipe.scala:84-88). */
-  private[graft] def silhouetteAnchors(spark: SparkSession, dir: String,
-      cells: Int = IvfCells): Array[(Long, Array[Double], Double)] =
+  private[graft] def silhouetteAnchors(spark: SparkSession,
+      dir: String): Array[(Long, Array[Double], Double)] =
     seededAnchors(Tables.embeddings(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v")), cells)
+      .select(col("vec_id"), asDouble(col("embedding")).as("v")))
 
   /** The per-cell (n, Σs_e6) census over any `(vec_id, embedding)`
     * frame — batch table or stream — against a broadcast `anchors`
@@ -2413,7 +2345,7 @@ object Similarity {
     * come from the kNN graph): [[KmRounds]] assign/recompute rounds
     * from the IVF anchor seeds, reported per (round, cell) with
     * member counts and mean squared distance so the convergence curve
-    * is the OUTPUT. This is the canonical "train the coarse quantizer"
+    * is the OUTPUT. This is the canonical "train the coarse codebook"
     * step an IVF deployment actually runs before q_ann_ivf_cosine's
     * search — the missing first half of that pipeline.
     *
@@ -2454,7 +2386,7 @@ object Similarity {
     * (vec_id, cell, ve, d2), final centroid table (cell, ce)). ONE
     * kernel for q_kmeans (which outputs the convergence curve) and
     * q_ann_ivf_kmeans (which searches with the trained codebook), so
-    * the quantizer a search deploys is exactly the one the
+    * the codebook a search deploys is exactly the one the
     * convergence report certified. */
   private def lloyd(ve: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val anchorW = Window.orderBy(expr("md5(cast(vec_id as string))"),

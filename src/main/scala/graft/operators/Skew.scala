@@ -8,31 +8,34 @@ import org.apache.spark.sql.functions._
   * adaptively; explicit salting remains the tool when the skewed side
   * must pre-aggregate or the join is key-exploding.
   *
-  * `saltedJoin` replicates the (small) right side `saltFactor` times
-  * and scatters the left side's hot keys across the replicas with a
-  * deterministic per-row salt — each (key, salt) shuffle bucket then
-  * holds ~1/saltFactor of a hot key's rows. Inner-join semantics are
+  * `saltedJoin` replicates the (small) right side [[Skew.SaltFactor]]
+  * times and scatters the left side's hot keys across the replicas with
+  * a deterministic per-row salt — each (key, salt) shuffle bucket then
+  * holds ~1/SaltFactor of a hot key's rows. Inner-join semantics are
   * preserved exactly: every left row meets exactly one replica of each
   * matching right row.
   */
 object Skew {
 
+  /** Salt buckets per key: a hot key's rows spread over this many
+    * shuffle partitions, and the right side is replicated this many
+    * times. */
+  private val SaltFactor = 16
+
   /** Inner equi-join of `left` and `right` on `key`, with the left
-    * side's keys scattered over `saltFactor` salted partitions.
+    * side's keys scattered over [[SaltFactor]] salted partitions.
     * `right` is expected to be the bounded side (it is replicated
-    * `saltFactor` times before the shuffle). */
-  def saltedJoin(left: DataFrame, right: DataFrame, key: String,
-      saltFactor: Int = 16): DataFrame = {
-    require(saltFactor > 0, "saltFactor must be positive")
+    * [[SaltFactor]] times before the shuffle). */
+  def saltedJoin(left: DataFrame, right: DataFrame, key: String): DataFrame = {
     // salt derived from row CONTENT, never from partition-dependent ids
     // (monotonically_increasing_id under a stage retry reassigns ids →
     // rows change buckets mid-shuffle and the join drops/duplicates
     // rows, the SPARK-23207 failure class); identical rows sharing a
     // salt is harmless for correctness
     val salted = left.withColumn("__salt",
-      pmod(xxhash64(left.columns.map(col).toIndexedSeq: _*), lit(saltFactor.toLong)))
+      pmod(xxhash64(left.columns.map(col).toIndexedSeq: _*), lit(SaltFactor.toLong)))
     val replicated = right.withColumn("__salt",
-      explode(array((0 until saltFactor).map(s => lit(s.toLong)): _*)))
+      explode(array((0 until SaltFactor).map(s => lit(s.toLong)): _*)))
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 
@@ -43,7 +46,7 @@ object Skew {
     * UNSALTED inner join and the hash compare proves the contract on
     * real data. Left = the events fact keyed by user; right = the
     * per-customer order profile (the bounded dim that gets replicated
-    * saltFactor×). */
+    * [[SaltFactor]]×). */
   def skewJoinQuery(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val ev = graft.sources.Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"),

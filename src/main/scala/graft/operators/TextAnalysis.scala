@@ -171,24 +171,29 @@ object TextAnalysis {
       .orderBy("lang", "bin")
   }
 
-  /** q_fingerprint: winnowing-lite document fingerprint — char 5-gram
-    * md5 hashes, per-window (w=4) minima, distinct set (cf. Schleimer,
-    * Wilkerson, Aiken: "Winnowing: Local Algorithms for Document
-    * Fingerprinting", SIGMOD'03). Map-only; the fingerprint set is
-    * summarized to scalars so the oracle compare is array-free. */
-  def fingerprint(spark: SparkSession, dir: String, k: Int = 5, w: Int = 4): DataFrame = {
+  /** q_fingerprint's char-gram width and winnowing window. */
+  private val FpGram = 5
+  private val FpWindow = 4
+
+  /** q_fingerprint: winnowing-lite document fingerprint — char
+    * [[FpGram]]-gram md5 hashes, per-window ([[FpWindow]]) minima,
+    * distinct set (cf. Schleimer, Wilkerson, Aiken: "Winnowing: Local
+    * Algorithms for Document Fingerprinting", SIGMOD'03). Map-only; the
+    * fingerprint set is summarized to scalars so the oracle compare is
+    * array-free. */
+  def fingerprint(spark: SparkSession, dir: String): DataFrame = {
     val grams = transform(
-      sequence(lit(1), length(col("text")) - (k - 1)),
-      i => col("text").substr(i, lit(k)))
+      sequence(lit(1), length(col("text")) - (FpGram - 1)),
+      i => col("text").substr(i, lit(FpGram)))
     val hashes = transform(grams, g => substring(md5(g), 1, 8))
     val mins = transform(
-      sequence(lit(1), size(col("hashes")) - (w - 1)),
-      j => array_min(slice(col("hashes"), j, lit(w))))
+      sequence(lit(1), size(col("hashes")) - (FpWindow - 1)),
+      j => array_min(slice(col("hashes"), j, lit(FpWindow))))
     val fps = array_distinct(mins)
     // widen: the per-char md5 cascade is the whole query; a one-task
     // sandbox scan would run it single-threaded (no-op at scale)
     Tables.widened(Tables.documents(spark, dir)
-      .filter(length(col("text")) >= k + w - 1))
+      .filter(length(col("text")) >= FpGram + FpWindow - 1))
       .withColumn("hashes", hashes)
       .select(
         col("doc_id"),
@@ -239,6 +244,9 @@ object TextAnalysis {
       .orderBy("lang", "split")
   }
 
+  /** Hits reported per query by q_token_search and q_bm25_search. */
+  private val SearchTopK = 5
+
   /** q_token_search: inverted-index token-overlap retrieval — the
     * reference's ES best-candidate search (nlp/ESSearchBestCand.scala:
     * 28-33, 40-62: query = distinct tokens of the pattern text, hit =
@@ -258,7 +266,7 @@ object TextAnalysis {
     * containing it). */
   private val SearchMaxDf = 100
 
-  def tokenSearch(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def tokenSearch(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val toks = Tables.documents(spark, dir)
       .select(col("doc_id"),
@@ -279,7 +287,7 @@ object TextAnalysis {
       .groupBy("query_id", "doc_id")
       .agg(count(lit(1)).as("overlap"))
       .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= SearchTopK)
       .orderBy("query_id", "rank")
   }
 
@@ -307,7 +315,7 @@ object TextAnalysis {
     * hash-oracled (the one ln() per distinct df is the only float op,
     * same-input ulp risk only — the house pattern from q_lm_quality).
     * Ranking ties break on doc_id. */
-  def bm25Search(spark: SparkSession, dir: String, k: Int = 5): DataFrame = {
+  def bm25Search(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // dls/dfs/index/queries all consume the shingle explosion — this IS
     // the materialize-the-index-once step (disk-spillable table build
@@ -346,7 +354,7 @@ object TextAnalysis {
       .groupBy("query_id", "doc_id")
       .agg(count(lit(1)).as("overlap"), sum("contrib_e6").as("score_e6"))
       .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= SearchTopK)
       .orderBy("query_id", "rank")
   }
 
@@ -1732,7 +1740,7 @@ object TextAnalysis {
          |    ORDER BY score_e6 DESC, doc_id ASC) AS rank
          |  FROM scored)
          |SELECT query_id, doc_id, overlap, score_e6, CAST(rank AS BIGINT) AS rank
-         |FROM ranked WHERE rank <= 5
+         |FROM ranked WHERE rank <= $SearchTopK
          |ORDER BY query_id, rank""".stripMargin
 
   val oracleSql: Map[String, String] = Map(
@@ -2448,7 +2456,7 @@ object TextAnalysis {
          |    ORDER BY overlap DESC, doc_id ASC) AS rank
          |  FROM scored)
          |SELECT query_id, doc_id, overlap, CAST(rank AS BIGINT) AS rank
-         |FROM ranked WHERE rank <= 5
+         |FROM ranked WHERE rank <= $SearchTopK
          |ORDER BY query_id, rank""".stripMargin,
     "q_lang_id" ->
       s"""WITH scored AS (
@@ -2520,23 +2528,23 @@ object TextAnalysis {
         |FROM documents
         |ORDER BY doc_id""".stripMargin,
     "q_fingerprint" ->
-      """WITH g AS (
-        |  SELECT doc_id, i,
-        |    substr(md5(substr(text, CAST(i AS INT), 5)), 1, 8) AS h
-        |  FROM documents, UNNEST(range(1, len(text) - 3)) AS t(i)
-        |  WHERE len(text) >= 8),
-        |n AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams FROM g GROUP BY doc_id),
-        |wins AS (
-        |  SELECT a.doc_id, a.i AS win, MIN(b.h) AS minh
-        |  FROM g a
-        |  JOIN n ON a.doc_id = n.doc_id AND a.i + 3 <= n.n_grams
-        |  JOIN g b ON a.doc_id = b.doc_id AND b.i BETWEEN a.i AND a.i + 3
-        |  GROUP BY a.doc_id, a.i),
-        |fp AS (SELECT doc_id, minh FROM wins GROUP BY doc_id, minh)
-        |SELECT doc_id, n_grams,
-        |  CAST(COUNT(*) AS BIGINT) AS n_fp,
-        |  MIN(minh) AS fp_min, MAX(minh) AS fp_max
-        |FROM fp JOIN n USING (doc_id)
-        |GROUP BY doc_id, n_grams
-        |ORDER BY doc_id""".stripMargin)
+      s"""WITH g AS (
+         |  SELECT doc_id, i,
+         |    substr(md5(substr(text, CAST(i AS INT), $FpGram)), 1, 8) AS h
+         |  FROM documents, UNNEST(range(1, len(text) - ${FpGram - 2})) AS t(i)
+         |  WHERE len(text) >= ${FpGram + FpWindow - 1}),
+         |n AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams FROM g GROUP BY doc_id),
+         |wins AS (
+         |  SELECT a.doc_id, a.i AS win, MIN(b.h) AS minh
+         |  FROM g a
+         |  JOIN n ON a.doc_id = n.doc_id AND a.i + ${FpWindow - 1} <= n.n_grams
+         |  JOIN g b ON a.doc_id = b.doc_id AND b.i BETWEEN a.i AND a.i + ${FpWindow - 1}
+         |  GROUP BY a.doc_id, a.i),
+         |fp AS (SELECT doc_id, minh FROM wins GROUP BY doc_id, minh)
+         |SELECT doc_id, n_grams,
+         |  CAST(COUNT(*) AS BIGINT) AS n_fp,
+         |  MIN(minh) AS fp_min, MAX(minh) AS fp_max
+         |FROM fp JOIN n USING (doc_id)
+         |GROUP BY doc_id, n_grams
+         |ORDER BY doc_id""".stripMargin)
 }

@@ -43,27 +43,25 @@ object TextQueries {
       .orderBy("o_orderkey")
   }
 
-  /** q_char_grams: exploded char 3-grams with the reference's quirky
-    * bounds — first char never starts a gram, last gram stops one short
-    * (gram count = len-n-1). Reference: Utils.scala:40-52. */
-  def charGrams(spark: SparkSession, dir: String, n: Int = 3): DataFrame =
+  /** Gram width for q_char_grams. */
+  private val CharGramN = 3
+
+  /** q_char_grams: exploded char [[CharGramN]]-grams with the
+    * reference's quirky bounds — first char never starts a gram, last
+    * gram stops one short (gram count = len-n-1).
+    * Reference: Utils.scala:40-52. */
+  def charGrams(spark: SparkSession, dir: String): DataFrame =
     // widen: the full char-gram explosion is the query (no-op at scale)
     Tables.widened(Tables.documents(spark, dir)
-      .filter(length(col("text")) >= n + 2))
+      .filter(length(col("text")) >= CharGramN + 2))
       .select(col("doc_id"),
         explode(transform(
-          sequence(lit(2), length(col("text")) - n),
-          i => struct(i.cast("long").as("pos"), col("text").substr(i, lit(n)).as("gram")))).as("g"))
+          sequence(lit(2), length(col("text")) - CharGramN),
+          i => struct(i.cast("long").as("pos"),
+            col("text").substr(i, lit(CharGramN)).as("gram")))).as("g"))
       .select(col("doc_id"), col("g.pos").as("pos"), col("g.gram").as("gram"))
       .orderBy("doc_id", "pos")
 
-  /** q_get_domain: URL → domain over four URL shapes (scheme'd, bare,
-    * www-bare, broken single-slash scheme) + min-support frequency list
-    * + stable domain ids and mod-grouping (the reference's domain→id
-    * map / domNameGrp: zipWithIndex then id % (n/minGrpNum)).
-    * The id window ranks the ~|domains| aggregated rows, not raw data.
-    * Reference: Utils.scala:359-375 (getDomain), 344-357 (domainsList),
-    * emr/GenDMap.scala. */
   /** The synthetic URL corpus over `customer` (four URL shapes). */
   private def customerUrl: org.apache.spark.sql.Column = {
     val base = concat(lit("shop"), (col("c_custkey") % 37).cast("string"), lit(".example.com"))
@@ -75,8 +73,19 @@ object TextQueries {
       .otherwise(concat(lit("http:/"), base, lit("/y")))
   }
 
-  def getDomain(spark: SparkSession, dir: String, minSupport: Int = 3,
-      minGrpNum: Int = 10): DataFrame = {
+  /** q_get_domain's frequency floor and its group divisor. */
+  private val DomainMinSupport = 3
+  private val DomainGrpNum = 10
+
+  /** q_get_domain: URL → domain over four URL shapes (scheme'd, bare,
+    * www-bare, broken single-slash scheme) + min-support frequency
+    * list + stable domain ids and mod-grouping (the reference's
+    * domain→id map / domNameGrp: zipWithIndex then
+    * id % (n/[[DomainGrpNum]])).
+    * The id window ranks the ~|domains| aggregated rows, not raw data.
+    * Reference: Utils.scala:359-375 (getDomain), 344-357 (domainsList),
+    * emr/GenDMap.scala. */
+  def getDomain(spark: SparkSession, dir: String): DataFrame = {
     val url = customerUrl
     // Scale-safe id assignment: dom_id is a content hash (md5 prefix →
     // bigint), not a zipWithIndex-style dense rank — no global-window
@@ -89,13 +98,13 @@ object TextQueries {
       .select(Text.getDomain(url).as("domain"))
       .groupBy("domain")
       .agg(count(lit(1)).as("freq"))
-      .filter(col("freq") >= minSupport)
+      .filter(col("freq") >= DomainMinSupport)
     val nDf = freq.groupBy().agg(count(lit(1)).as("n_dom"))
     freq
       .crossJoin(broadcast(nDf))
       .withColumn("dom_id",
         expr("cast(conv(substr(md5(domain), 1, 15), 16, 10) as bigint)"))
-      .withColumn("grp", col("dom_id") % greatest(floor(col("n_dom") / minGrpNum), lit(1L)))
+      .withColumn("grp", col("dom_id") % greatest(floor(col("n_dom") / DomainGrpNum), lit(1L)))
       .drop("n_dom")
       .orderBy("domain")
   }
@@ -244,11 +253,14 @@ object TextQueries {
       .orderBy("domain")
   }
 
-  def heavyHitters(spark: SparkSession, dir: String,
-      capacity: Int = 64, k: Int = 10): DataFrame =
+  /** q_heavy_hitters' SpaceSaving counter capacity and reported top-k. */
+  private val HhCapacity = 64
+  private val HhTopK = 10
+
+  def heavyHitters(spark: SparkSession, dir: String): DataFrame =
     Tables.customer(spark, dir)
       .select(Text.getDomain(customerUrl).as("domain"))
-      .agg(graft.functions.HeavyHitters.heavyHitters(col("domain"), capacity, k).as("hh"))
+      .agg(graft.functions.HeavyHitters.heavyHitters(col("domain"), HhCapacity, HhTopK).as("hh"))
       .select(posexplode(col("hh")).as(Seq("pos", "h")))
       .select((col("pos") + 1).cast("long").as("rank"),
         col("h.item").as("domain"), col("h.cnt").as("cnt"), col("h.err").as("err"))
@@ -391,17 +403,17 @@ object TextQueries {
          |ORDER BY e.domain""".stripMargin
     },
     "q_heavy_hitters" ->
-      """WITH freq AS (
-        |  SELECT concat('shop', CAST(c_custkey % 37 AS VARCHAR), '.example.com') AS domain,
-        |    COUNT(*) AS cnt
-        |  FROM customer GROUP BY 1),
-        |ranked AS (
-        |  SELECT domain, cnt,
-        |    ROW_NUMBER() OVER (ORDER BY cnt DESC, domain ASC) AS rank
-        |  FROM freq)
-        |SELECT CAST(rank AS BIGINT) AS rank, domain, cnt, CAST(0 AS BIGINT) AS err
-        |FROM ranked WHERE rank <= 10
-        |ORDER BY rank""".stripMargin,
+      s"""WITH freq AS (
+         |  SELECT concat('shop', CAST(c_custkey % 37 AS VARCHAR), '.example.com') AS domain,
+         |    COUNT(*) AS cnt
+         |  FROM customer GROUP BY 1),
+         |ranked AS (
+         |  SELECT domain, cnt,
+         |    ROW_NUMBER() OVER (ORDER BY cnt DESC, domain ASC) AS rank
+         |  FROM freq)
+         |SELECT CAST(rank AS BIGINT) AS rank, domain, cnt, CAST(0 AS BIGINT) AS err
+         |FROM ranked WHERE rank <= $HhTopK
+         |ORDER BY rank""".stripMargin,
     "q_text_only_tokens" ->
       """WITH t AS (
         |  SELECT doc_id,
@@ -434,23 +446,23 @@ object TextQueries {
         |FROM t
         |ORDER BY o_orderkey""".stripMargin,
     "q_char_grams" ->
-      """SELECT doc_id, CAST(i AS BIGINT) AS pos, substr(text, CAST(i AS INT), 3) AS gram
-        |FROM documents, UNNEST(range(2, len(text) - 2)) AS t(i)
-        |WHERE len(text) >= 5
-        |ORDER BY doc_id, pos""".stripMargin,
+      s"""SELECT doc_id, CAST(i AS BIGINT) AS pos, substr(text, CAST(i AS INT), $CharGramN) AS gram
+         |FROM documents, UNNEST(range(2, len(text) - ${CharGramN - 1})) AS t(i)
+         |WHERE len(text) >= ${CharGramN + 2}
+         |ORDER BY doc_id, pos""".stripMargin,
     "q_get_domain" ->
-      """WITH freq AS (
-        |  SELECT concat('shop', CAST(c_custkey % 37 AS VARCHAR), '.example.com') AS domain,
-        |    COUNT(*) AS freq
-        |  FROM customer
-        |  GROUP BY 1 HAVING COUNT(*) >= 3),
-        |n AS (SELECT COUNT(*) AS n_dom FROM freq)
-        |SELECT domain, freq,
-        |  CAST(concat('0x', substr(md5(domain), 1, 15)) AS BIGINT) AS dom_id,
-        |  CAST(concat('0x', substr(md5(domain), 1, 15)) AS BIGINT)
-        |    % greatest(n_dom // 10, 1) AS grp
-        |FROM freq, n
-        |ORDER BY domain""".stripMargin,
+      s"""WITH freq AS (
+         |  SELECT concat('shop', CAST(c_custkey % 37 AS VARCHAR), '.example.com') AS domain,
+         |    COUNT(*) AS freq
+         |  FROM customer
+         |  GROUP BY 1 HAVING COUNT(*) >= $DomainMinSupport),
+         |n AS (SELECT COUNT(*) AS n_dom FROM freq)
+         |SELECT domain, freq,
+         |  CAST(concat('0x', substr(md5(domain), 1, 15)) AS BIGINT) AS dom_id,
+         |  CAST(concat('0x', substr(md5(domain), 1, 15)) AS BIGINT)
+         |    % greatest(n_dom // $DomainGrpNum, 1) AS grp
+         |FROM freq, n
+         |ORDER BY domain""".stripMargin,
     "q_parse_price_locale" ->
       """WITH b AS (
         |  SELECT o_orderkey,

@@ -14,6 +14,14 @@ object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** Collision-proof tag for a corpus dir in the names of the files
+    * derived from it (md5 prefix, not String.hashCode: "Aa" and "BB"
+    * share a hashCode, and two dirs sharing a tag would share, or
+    * delete, each other's staged sources, sinks and model maps). */
+  private[graft] def dirTag(dir: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(dir.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+
   /** Fan a narrow scan across the session's cores before a map-heavy
     * stage. The sandbox testdata arrives as SINGLE-row-group parquet —
     * an unsplittable one-task scan however small maxPartitionBytes goes

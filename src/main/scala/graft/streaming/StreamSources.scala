@@ -58,7 +58,7 @@ private[graft] object StreamSources {
     * or a landing directory instead). */
   private def stageStreamDir(dir: String, table: String): String = {
     val streamDir = new java.io.File(
-      s"/tmp/graft_stream_${table}_${Integer.toHexString(dir.hashCode)}")
+      s"/tmp/graft_stream_${table}_${graft.sources.Tables.dirTag(dir)}")
     streamDir.mkdirs()
     val link = new java.io.File(streamDir, s"$table.parquet")
     if (!link.exists()) {

@@ -817,7 +817,7 @@ object StreamingQueries {
     graft.operators.Curation.kmvEstimates(skDf).orderBy("src_a", "src_b")
   }
 
-  /** q_stream_silhouette — the quantizer-health monitor AT INGEST:
+  /** q_stream_silhouette — the codebook-health monitor AT INGEST:
     * the persisted IVF codebook loads once and broadcasts into the
     * stream (the reference's load-model-then-map contract, streaming/
     * Htmls2PredsPipe.scala:84-88 — exactly how q_stream_pipe carries
@@ -883,7 +883,7 @@ object StreamingQueries {
   }
 
   /** q_stream_ann — ANN lookups AT INGEST on the trained IVF
-    * codebook: the quantizer trains once batch-side
+    * codebook: it trains once batch-side
     * ([[graft.operators.Similarity.ivfKmeansIndex]] — q_kmeans's
     * integer-exact Lloyd, the load-model-then-map contract of
     * q_stream_pipe / q_stream_sem_decontam), its ≤8-row codebook

@@ -46,7 +46,7 @@ private[graft] object TableSink {
   /** The deterministic sink path for a (query tag, source) pair —
     * exposed so specs can inspect the partition layout. */
   private[graft] def sinkDir(tag: String, src: String): String =
-    s"/tmp/graft_table_sink/${tag}_${Integer.toHexString(src.hashCode)}"
+    s"/tmp/graft_table_sink/${tag}_${graft.sources.Tables.dirTag(src)}"
 
   /** Delete a file or a directory tree. */
   private def rm(f: java.io.File): Unit = {

@@ -73,35 +73,6 @@ class ApproxSubstrateSpec extends SparkSpec {
     assert(overlap >= 0.4, f"top-decile overlap $overlap%.4f below floor 0.4")
   }
 
-  test("radius-0 probe lever: agreement is MEASURED before any default flip") {
-    // The multiprobe's one-flip fan is (planes+1)·L — the dominant
-    // candidate-volume factor (~14× at sandbox plane counts). Before
-    // the radius-0 cut can ever become the default, its agreement
-    // cost must be a measured number, not an assumption: this records
-    // it every run, and the floor asserted here is only the sanity
-    // line (the real triage floors — 0.6/0.4 — stay pinned on the
-    // shipped radius-1 path above).
-    def scores(df: DataFrame): Map[Long, Long] =
-      df.select("vec_id", "lof_e6").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val exact = scores(graft.operators.Similarity.lof(spark, dir))
-    val r0 = scores(graft.operators.Similarity.lofApproxRadius0(spark, dir))
-    val joint = exact.keySet.intersect(r0.keySet).toSeq
-    val (xs, ys) = (joint.map(exact(_).toDouble), joint.map(r0(_).toDouble))
-    val (mx, my) = (xs.sum / xs.size, ys.sum / ys.size)
-    val cov = xs.zip(ys).map { case (x, y) => (x - mx) * (y - my) }.sum
-    val r = cov / math.sqrt(
-      xs.map(x => (x - mx) * (x - mx)).sum * ys.map(y => (y - my) * (y - my)).sum)
-    def topK(m: Map[Long, Long], k: Int): Set[Long] =
-      m.toSeq.sortBy { case (id, s) => (-s, id) }.take(k).map(_._1).toSet
-    val k = exact.size / 10
-    val overlap = topK(exact, k).intersect(topK(r0, k)).size.toDouble / k
-    info(f"radius-0 lof agreement: pearson=$r%.4f top-decile=$overlap%.4f " +
-      f"covered=${r0.size}/${exact.size}")
-    // sanity only: the lever must still produce a scored majority
-    assert(r0.size >= (exact.size * 3) / 4, "radius-0 dropped > 25% of nodes")
-  }
-
   test("forest-fed diversity sample keeps most of the exact picks") {
     def picks(df: DataFrame): Set[Long] =
       df.select("vec_id").collect().map(_.getLong(0)).toSet

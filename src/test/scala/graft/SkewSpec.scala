@@ -17,7 +17,7 @@ class SkewSpec extends SparkSpec {
       .toDF("k", "tag")
     val expected = left.join(right, Seq("k"))
       .select("k", "v", "tag").collect().map(_.toSeq).sortBy(_.toString)
-    val got = Skew.saltedJoin(left, right, "k", saltFactor = 8)
+    val got = Skew.saltedJoin(left, right, "k")
       .select("k", "v", "tag").collect().map(_.toSeq).sortBy(_.toString)
     assert(got.length == expected.length)
     assert(got.sameElements(expected))
@@ -26,7 +26,7 @@ class SkewSpec extends SparkSpec {
   test("salted shuffle partitions on (key, salt)") {
     val left = (1 to 100).map(i => (1L, i.toLong)).toDF("k", "v")
     val right = Seq((1L, "a")).toDF("k", "tag")
-    val plan = Skew.saltedJoin(left, right, "k", saltFactor = 4)
+    val plan = Skew.saltedJoin(left, right, "k")
       .queryExecution.executedPlan.toString
     assert(plan.contains("__salt"), s"salt column missing from plan:\n$plan")
   }

@@ -154,6 +154,38 @@ class StreamingSpec extends SparkSpec {
     ModelMap.clearCache()
   }
 
+  test("corpora whose paths share a String.hashCode stream their own events") {
+    // "Aa" and "BB" share a String.hashCode, and so do any two paths
+    // that differ only in that suffix: a staging dir tagged by the
+    // hashCode would hand the second corpus the first one's events
+    val tmp = java.nio.file.Files.createTempDirectory("graft_tag").toString
+    val (aa, bb) = (s"$tmp/Aa", s"$tmp/BB")
+    assert(aa.hashCode == bb.hashCode)
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    def corpus(dir: String, users: Seq[Long]): Unit = { // one file, as testdata ships
+      users.map(u => (u * 100, ts, u, "view", u.toDouble, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.parquet(s"$dir/parts")
+      val part = new java.io.File(s"$dir/parts").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(s"$dir/events.parquet"))
+    }
+    corpus(aa, Seq(1L, 2L))
+    corpus(bb, Seq(7L, 8L, 9L))
+    val staged = Seq(aa, bb).flatMap(d =>
+      graft.streaming.StreamSources.eventsFileSource(spark, d).path)
+    try {
+      def users(dir: String): Set[Long] =
+        SparkEntry.queries("q_stream_stateful")(spark, dir)
+          .select("user_id").collect().map(_.getLong(0)).toSet
+      assert(users(aa) == Set(1L, 2L))
+      assert(users(bb) == Set(7L, 8L, 9L))
+    } finally staged.foreach { d =>
+      Option(new java.io.File(d).listFiles()).foreach(_.foreach(_.delete()))
+      new java.io.File(d).delete()
+    }
+  }
+
   test("LocalText kernels match their Column twins") {
     val samples = Seq("", " ", "a", "price $1,234.56 now", "x  y\tz",
       "<span class=\"price\">$99.10</span>", "9.99 ship", ",5", "-3.5x",
