@@ -1,7 +1,9 @@
 package graft.streaming
 
+import java.nio.file.{FileAlreadyExistsException, Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionBridge
 import org.apache.spark.sql.types._
 
 /** The pluggable streaming SOURCE seam — what the reference wires to
@@ -31,6 +33,13 @@ import org.apache.spark.sql.types._
   * Kafka producer or Cassandra mutation to change transport), and the
   * memory sink in StreamingQueries.runToMemory is the driver-contract
   * result channel.
+  *
+  * Describing a file source runs no Spark job: the physical schema is
+  * read from one parquet footer on the driver
+  * ([[org.apache.spark.sql.graft.SessionBridge.parquetSchema]]), not by
+  * the batch reader's schema-inference job, and afresh on every call,
+  * so a rewritten corpus is never described by a stale schema. A table
+  * may be one parquet file or a parquet directory; see [[stageStreamDir]].
   */
 private[graft] object StreamSources {
 
@@ -53,27 +62,44 @@ private[graft] object StreamSources {
     spec.normalize(spec.path.fold(r.load())(r.load))
   }
 
-  /** The file source wants a directory; stage one holding a symlink to
-    * the single table file (a real deployment points at a Kafka topic
-    * or a landing directory instead). */
-  private def stageStreamDir(dir: String, table: String): String = {
-    val streamDir = new java.io.File(
-      s"/tmp/graft_stream_${table}_${graft.sources.Tables.dirTag(dir)}")
-    streamDir.mkdirs()
-    val link = new java.io.File(streamDir, s"$table.parquet")
-    if (!link.exists()) {
-      java.nio.file.Files.createSymbolicLink(
-        link.toPath, java.nio.file.Paths.get(s"$dir/$table.parquet"))
+  /** Where the file source reads `table` from, and one file whose
+    * footer holds its schema. A table that is a parquet DIRECTORY (what
+    * `DataFrame.write.parquet` writes) is read in place: the source lists
+    * its part files, and the first `part-*.parquet` holds the footer. A
+    * single-file table (what the testdata ships) is staged as a symlink
+    * in a directory of its own, because the file source wants a
+    * directory (a real deployment points at a Kafka topic or a landing
+    * directory instead). Two JVMs may stage the same table at once: a
+    * link that already exists is accepted when it points at the same
+    * file. */
+  private def stageStreamDir(dir: String, table: String): (String, String) = {
+    val src = Paths.get(s"$dir/$table.parquet")
+    if (Files.isDirectory(src)) {
+      val parts = Option(src.toFile.list()).toSeq.flatten
+        .filter(n => n.startsWith("part-") && n.endsWith(".parquet")).sorted
+      require(parts.nonEmpty, s"$src holds no part-*.parquet file")
+      (src.toString, s"$src/${parts.head}")
+    } else {
+      val streamDir = new java.io.File(
+        s"/tmp/graft_stream_${table}_${graft.sources.Tables.dirTag(dir)}")
+      streamDir.mkdirs()
+      val link = new java.io.File(streamDir, s"$table.parquet").toPath
+      try Files.createSymbolicLink(link, src)
+      catch {
+        case _: FileAlreadyExistsException
+          if Files.readSymbolicLink(link) == src =>
+      }
+      (streamDir.getAbsolutePath, src.toString)
     }
-    streamDir.getAbsolutePath
   }
 
-  /** Staged-parquet source for any testdata table: the batch reader
-    * probes the footer once for the physical schema. */
-  def tableFileSource(spark: SparkSession, dir: String, table: String): SourceSpec =
-    SourceSpec("parquet",
-      path = Some(stageStreamDir(dir, table)),
-      schema = Some(spark.read.parquet(s"$dir/$table.parquet").schema))
+  /** Staged-parquet source for any testdata table; its physical schema
+    * comes from the parquet footer, read on the driver. */
+  def tableFileSource(spark: SparkSession, dir: String, table: String): SourceSpec = {
+    val (path, footer) = stageStreamDir(dir, table)
+    SourceSpec("parquet", path = Some(path),
+      schema = Some(SessionBridge.parquetSchema(spark, footer)))
+  }
 
   private def eventsSchema(tsType: DataType) = StructType(Seq(
     StructField("event_id", LongType),
@@ -92,10 +118,10 @@ private[graft] object StreamSources {
     * plays for its value payload. */
   def eventsFileSource(spark: SparkSession, dir: String): SourceSpec = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val physical = spark.read.parquet(s"$dir/events.parquet")
-      .schema("ts").dataType
+    val (path, footer) = stageStreamDir(dir, "events")
+    val physical = SessionBridge.parquetSchema(spark, footer)("ts").dataType
     SourceSpec("parquet",
-      path = Some(stageStreamDir(dir, "events")),
+      path = Some(path),
       schema = Some(eventsSchema(physical)),
       normalize = raw => physical match {
         // integer division: `/` on columns is double division, and nano

@@ -4,6 +4,7 @@ import graft.functions.{PriceCandidates, Text}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SessionBridge
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
 
@@ -69,11 +70,14 @@ object StreamingQueries {
   /** Run `df` through a memory sink synchronously; return the result.
     * Sinks from previous invocations are dropped first so repeated runs
     * (warmup + timed, Bench's cold and warm runs) don't accumulate
-    * result sets in driver memory. */
+    * result sets in driver memory; the old sinks are found in the
+    * session catalog, which runs no Spark job. The memory sink holds
+    * its rows on the driver, so the result comes back as ONE partition:
+    * a caller's `orderBy` is then a single in-task sort, with no range-
+    * partition sampling job and no shuffle. */
   private def runToMemory(spark: SparkSession, df: DataFrame,
       mode: OutputMode): DataFrame = {
-    spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_sink_"))
+    SessionBridge.localTempViews(spark, "graft_sink_*")
       .foreach(spark.catalog.dropTempView(_))
     val name = s"graft_sink_${System.nanoTime()}"
     val q = df.writeStream
@@ -83,7 +87,7 @@ object StreamingQueries {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.table(name)
+    spark.table(name).coalesce(1)
   }
 
   /** Row 298 — htmls→preds pipe with REAL trained models: stream of

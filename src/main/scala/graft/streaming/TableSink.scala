@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.types.LongType
 
 /** Durable keyed sink for Update-mode streams — the reference's
   * per-partition Cassandra upsert contract (streaming/Push2Cassandra
@@ -94,14 +95,16 @@ private[graft] object TableSink {
 
   private def readLog(spark: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    val logSchema = schema.add("batch", LongType)
     val any = new java.io.File(dir).listFiles()
     if (any == null || any.isEmpty) // empty stream wrote no batch
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        schema.add("batch", "long"))
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], logSchema)
     // the table dir itself, not a `batch=*` glob: partition discovery
-    // yields the same `batch` column, and a glob path makes the reader
-    // log a stack trace while it probes for a stream-sink metadata dir
-    else spark.read.parquet(dir).withColumn("batch", col("batch").cast("long"))
+    // yields the `batch` column, and a glob path makes the reader log a
+    // stack trace while it probes for a stream-sink metadata dir. The
+    // schema the log was written with needs no inference job, and types
+    // `batch` as a long.
+    else spark.read.schema(logSchema).parquet(dir)
   }
 
   /** Run `updates` (one row per changed key per trigger) into the

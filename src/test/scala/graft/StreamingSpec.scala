@@ -186,6 +186,18 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  test("a corpus whose events table is a parquet directory streams its rows") {
+    // what DataFrame.write.parquet writes: a directory of part files
+    val dir = java.nio.file.Files.createTempDirectory("graft_dirtable").toString
+    val ts = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
+    Seq(3L, 4L, 5L, 6L).map(u => (u * 100, ts, u, "view", u.toDouble, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .repartition(2).write.parquet(s"$dir/events.parquet")
+    val users = SparkEntry.queries("q_stream_stateful")(spark, dir)
+      .select("user_id").collect().map(_.getLong(0)).toSet
+    assert(users == Set(3L, 4L, 5L, 6L))
+  }
+
   test("LocalText kernels match their Column twins") {
     val samples = Seq("", " ", "a", "price $1,234.56 now", "x  y\tz",
       "<span class=\"price\">$99.10</span>", "9.99 ship", ",5", "-3.5x",
