@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.SessionBridge
 import scala.util.control.NonFatal
 
 /** Central SparkSession builder (SURVEY §3): shuffle partitions sized
@@ -54,7 +55,7 @@ object Sessions {
       var sinceRecycle = 0
       items.iterator.map { item =>
         try {
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+          spark.sparkContext.getPersistentRDDs.values.foreach(SessionBridge.unpersist)
           spark.catalog.clearCache()
         } catch { case NonFatal(_) => () }
         if (recycleEvery > 0 && sinceRecycle >= recycleEvery) {

@@ -430,20 +430,20 @@ object Dedup {
     val parent = Pregel.withAdjacency(edges, part) { adj =>
       val (p, sums) = Pregel.iterate(adj.mapValues(_.min), maxIter)({ (p, _) =>
         // c(v) = the least p over N[v]
-        val c = Pregel.scan(adj, p)((_, ns, x) => ns.iterator.map((_, x)))
-          .reduceByKey(part, math.min(_, _))
+        val c = Pregel.reduceByNode(Pregel.scan(adj, p)((_, ns, x) => ns.iterator.map((_, x))), part)(
+          math.min(_, _))
         // hook: c(v) to v and to p(v); each keeps the least it receives
-        val hooked = Pregel.zipByNode(c, p) { (rows, pv) =>
+        val hooked = Pregel.reduceByNode(Pregel.zipByNode(c, p) { (rows, pv) =>
           rows.flatMap { case (v, cv) => Iterator((v, cv), (pv(v), cv)) }
-        }.reduceByKey(part, math.min(_, _))
+        }, part)(math.min(_, _))
         // shortcut: p(v) ← min(h(v), h(h(v))), asked at w = h(v), answered to v
-        val asks = hooked.map(_.swap).partitionBy(part)
-        Pregel.zipByNode(asks, hooked) { (rows, h) =>
+        val asks = Pregel.shipByNode(hooked.map(_.swap), part)
+        Pregel.shipByNode(Pregel.zipByNode(asks, hooked) { (rows, h) =>
           rows.map { case (w, v) => (v, math.min(w, h.getOrElse(w, w))) }
-        }.partitionBy(part)
+        }, part)
       })(_.foldLeft(BigInt(0))(_ + _._2))(_ + _, converged)
       if (!converged(sums)) {
-        p.unpersist(blocking = false)
+        Pregel.release(p)
         throw new IllegalStateException(
           s"connected components did not converge in ${sums.length} rounds (maxIter = $maxIter)")
       }

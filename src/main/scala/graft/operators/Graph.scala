@@ -4,7 +4,6 @@ import graft.sources.Tables
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.mutable
 
 /** Iterative graph analytics over the co-order product graph (parts
   * that appear in the same order are linked — the co-purchase graph
@@ -52,10 +51,10 @@ object Graph {
     val ranks = Pregel.withAdjacency(e, part) { adj =>
       // state: node → (deg, r)
       Pregel.rounds(adj.mapValues(ds => (ds.length.toLong, 1000000L)), PrIters) { (st, _) =>
-        val sums = Pregel.scan(adj, st) { case (_, ds, (deg, r)) =>
+        val sums = Pregel.reduceByNode(Pregel.scan(adj, st) { case (_, ds, (deg, r)) =>
           val c = r / deg
           ds.iterator.map((_, c))
-        }.reduceByKey(part, _ + _)
+        }, part)(_ + _)
         Pregel.scan(adj, sums)((u, ds, s) => Some((u, (ds.length.toLong, 150000L + PrDampE3 * s / 1000))))
       }
     }
@@ -196,9 +195,9 @@ object Graph {
         (v, if (seeds(v)) 0L else Long.MaxValue) }, preservesPartitioning = true)
       Pregel.rounds(init, BfsRounds) { (st, k) =>
         val hop = k.toLong
-        val reached = Pregel.scan(adj, st) { (_, ds, d) =>
+        val reached = Pregel.reduceByNode(Pregel.scan(adj, st) { (_, ds, d) =>
           if (d == hop - 1) ds.iterator.map((_, hop)) else Iterator.empty
-        }.reduceByKey(part, math.min(_, _))
+        }, part)(math.min(_, _))
         Pregel.zipByNode(st, reached) { (rows, r) =>
           rows.map { case (v, d) => (v, math.min(d, r.getOrElse(v, d))) }
         }
@@ -259,21 +258,21 @@ object Graph {
         // sums `from`'s scores along `along` into the side `to` indexes
         def half(along: Pregel.Adjacency, to: Pregel.Adjacency, from: Side): Side = {
           val (st, m) = from
-          val sums = Pregel.scan(along, st) { case (_, ds, (_, s)) =>
+          val sums = Pregel.reduceByNode(Pregel.scan(along, st) { case (_, ds, (_, s)) =>
             val x = e6Share(s, m)
             ds.iterator.map((_, x))
-          }.reduceByKey(part, Math.addExact(_, _))
-          val next = Pregel.scan(to, sums)((u, ds, s) => Some((u, (ds.length.toLong, s))))
-          (next, Pregel.materialize(next)(_.foldLeft(0L)(_ max _._2._2))(_ max _))
+          }, part)(Math.addExact(_, _))
+          Pregel.materialize(Pregel.scan(to, sums)((u, ds, s) => Some((u, (ds.length.toLong, s)))))(
+            _.foldLeft(0L)(_ max _._2._2))(_ max _)
         }
         var hub: Side = (byCust.mapValues(ds => (ds.length.toLong, 1L)), 1L)
         var auth: Side = null
         (1 to HitsRounds).foreach { _ =>
           val a = half(byCust, byPart, hub)
-          if (auth != null) auth._1.unpersist(blocking = false)
+          if (auth != null) Pregel.release(auth._1)
           auth = a
           val h = half(byPart, byCust, auth)
-          hub._1.unpersist(blocking = false)
+          Pregel.release(hub._1)
           hub = h
         }
         def out(role: String, side: Side): RDD[(String, Long, Long, Long)] = {
@@ -368,7 +367,7 @@ object Graph {
     * key (one row per distinct degree) and cut on the driver. The
     * ladder peels all three rungs in ONE [[Pregel]] loop: a node's
     * state is the bit set of rungs it is alive in, each alive node
-    * sends that set to its neighbours, one aggregateByKey counts alive
+    * sends that set to its neighbours, one by-node sum counts alive
     * neighbours per rung, and a narrow zip with the old state keeps
     * the bits whose count reaches K — shuffle ∝ surviving edges per
     * round, never node-quadratic. The round's job returns its per-rung
@@ -381,8 +380,8 @@ object Graph {
     import edges.sparkSession.implicits._
     val (e, part) = Pregel.pairs(edges)
     val census = Pregel.withAdjacency(e, part) { adj =>
-      val hist = adj.map { case (_, ds) => (ds.length.toLong, 1L) }
-        .reduceByKey(_ + _).collect().sortBy(_._1)
+      val hist = Pregel.reduceByNode(adj.map { case (_, ds) => (ds.length.toLong, 1L) }, part)(_ + _)
+        .collect().sortBy(_._1)
       val n = hist.map(_._2).sum
       val cum = hist.map(_._1).zip(hist.scanLeft(0L)(_ + _._2).tail)
       // the least degree whose cumulative count reaches num/den of the nodes
@@ -392,10 +391,8 @@ object Graph {
       val ks = rungs.map(_._2).toArray
       val (last, alive) = Pregel.iterate(
           adj.mapValues(_ => (1 << ks.length) - 1), if (ks.isEmpty) 0 else KcoreRounds)({ (st, _) =>
-        val counts = Pregel.scan(adj, st)((_, ds, m) => ds.iterator.map((_, m)))
-          .aggregateByKey(new Array[Long](ks.length), part)(
-          { (c, m) => var j = 0; while (j < c.length) { if ((m >> j & 1) != 0) c(j) += 1; j += 1 }; c },
-          { (a, b) => a.indices.foreach(j => a(j) += b(j)); a })
+        val counts = Pregel.sumByNode(Pregel.scan(adj, st)((_, ds, m) => ds.iterator.map((_, m))),
+          part, ks.length)((m, j) => (m >> j & 1).toLong)
         Pregel.zipByNode(st, counts) { (rows, c) =>
           rows.flatMap { case (v, m) =>
             c.get(v).map(cs => (v, ks.indices.foldLeft(0) { (k, j) =>
@@ -407,7 +404,7 @@ object Graph {
         c.indices.foreach(j => if ((vm._2 >> j & 1) != 0) c(j) += 1); c
       })((a, b) => a.indices.map(j => a(j) + b(j)).toArray,
         fs => fs.nonEmpty && fs.last.forall(_ == 0L))
-      last.unpersist(blocking = false)
+      Pregel.release(last)
       for {
         ((lbl, k), j) <- rungs.zipWithIndex
         r <- 0 to KcoreRounds
@@ -448,14 +445,14 @@ object Graph {
           // state: node → (deg, r), ranked nodes only
           val init = adj.filter(_._1 == seed).mapValues(ds => (ds.length.toLong, 1000000L))
           Pregel.rounds(init, PprIters) { (st, _) =>
-            val sums = Pregel.scan(adj, st) { case (v, ds, (deg, r)) =>
+            val sent = Pregel.scan(adj, st) { case (v, ds, (deg, r)) =>
               val c = r / deg
               // the seed (ranked in every round: it keeps its restart)
               // also sends itself a zero, so its restart lands even
               // with no inflow
               (if (v == seed) Iterator((v, 0L)) else Iterator.empty) ++ ds.iterator.map((_, c))
-            }.reduceByKey(part, _ + _)
-            Pregel.scan(adj, sums) { (u, ds, s) =>
+            }
+            Pregel.scan(adj, Pregel.reduceByNode(sent, part)(_ + _)) { (u, ds, s) =>
               val r = PrDampE3 * s / 1000 + (if (u == seed) 150000L else 0L)
               if (r > 0) Some((u, (ds.length.toLong, r))) else None
             }
@@ -481,11 +478,11 @@ object Graph {
     * quality score for exactly this kind of partition.
     *
     * Scale shape: each [[Pregel]] round sends every node's label to
-    * its neighbours (∝ edges), gathers each receiver's votes map-side
-    * into one primitive array per node, shuffles those by node once,
-    * and picks the winner from the sorted votes, already aligned with
-    * the adjacency — no window, no (node, label) shuffle key. The classic Pregel reduction — nothing is
-    * ever node-pair-quadratic. */
+    * its neighbours (∝ edges), shuffles those votes by receiver once,
+    * gathers each receiver's into one primitive array, and picks the
+    * winner from the sorted votes — no window, no (node, label) shuffle
+    * key. The classic Pregel reduction — nothing is ever
+    * node-pair-quadratic. */
   def labelProp(spark: SparkSession, dir: String): DataFrame =
     labelPropOf(coOrderEdges(spark, dir))
 
@@ -496,14 +493,11 @@ object Graph {
     val lab = Pregel.withAdjacency(e, part) { adj =>
       val init = adj.mapPartitions(_.map { case (v, _) => (v, v) }, preservesPartitioning = true)
       Pregel.rounds(init, LpaRounds) { (st, _) =>
-        // each node's votes, gathered map-side into one primitive array
-        Pregel.scan(adj, st)((_, ds, l) => ds.iterator.map((_, l)))
-          .combineByKey[mutable.ArrayBuilder.ofLong](
-            new mutable.ArrayBuilder.ofLong += _, _ += _, (a, b) => a.addAll(b.result()), part)
-          .mapValues { votes =>
+        // each node's votes, gathered into one primitive array
+        Pregel.gatherByNode(Pregel.scan(adj, st)((_, ds, l) => ds.iterator.map((_, l))), part)
+          .mapValues { ls =>
             // the (cnt desc, label asc) winner: the first longest run of
             // the sorted labels
-            val ls = votes.result()
             java.util.Arrays.sort(ls)
             var (best, bestCnt, i) = (ls(0), 0, 0)
             while (i < ls.length) {

@@ -4,15 +4,16 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{SparkSession, classic}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
 /** Driver-side reads of session state that Spark keeps behind
   * `private[sql]`/`private[spark]` (the session's catalog and conf,
-  * `StructType.asNullable`), bridged from a sub-package of
-  * `org.apache.spark.sql` as [[ColumnBridge]] is. Neither read runs a
-  * Spark job. */
+  * `StructType.asNullable`, `SparkContext.unpersistRDD`), bridged from
+  * a sub-package of `org.apache.spark.sql` as [[ColumnBridge]] is. None
+  * of them runs a Spark job. */
 object SessionBridge {
   private def classicSession(spark: SparkSession): classic.SparkSession =
     spark.asInstanceOf[classic.SparkSession]
@@ -36,4 +37,10 @@ object SessionBridge {
     * (`*` is a wildcard), straight from the session catalog. */
   def localTempViews(spark: SparkSession, pattern: String): Seq[String] =
     classicSession(spark).sessionState.catalog.listLocalTempViews(pattern).map(_.table)
+
+  /** Drops `rdd`'s blocks and its persisted-RDD entry without waiting.
+    * `RDD.unpersist` does the same but warns for every locally
+    * checkpointed RDD that its lineage is gone, which a loop that
+    * releases each round's checkpointed state knows. */
+  def unpersist(rdd: RDD[_]): Unit = rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

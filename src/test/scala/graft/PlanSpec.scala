@@ -218,14 +218,15 @@ class PlanSpec extends SparkSpec {
 
   test("graph loops shuffle their edge list once") {
     // Each loop groups its edge list into an adjacency hash-partitioned
-    // by node once. A round must read it narrowly, in the same stage as
-    // the stored state it zips with; a stage that holds the adjacency
-    // but no state is one that shuffles the adjacency again. Every job
-    // of one call is captured; a round's job is the one whose last stage
-    // stores an RDD named "state", and its stages carry that state's
-    // lineage (a stage holds an RDD and its narrow ancestors). Round 1
-    // zips with a start derived from the adjacency itself, so the check
-    // starts at round 2.
+    // by node once and stores it as blocks named "adjacency". A round
+    // must read it narrowly, in the same stage as the stored state it
+    // zips with; a stage that holds the adjacency but no state is one
+    // that shuffles the adjacency again. Every job of one call is
+    // captured; a round's job is the one whose last stage stores the
+    // blocks named "state", and its stages carry that state's lineage (a
+    // stage holds an RDD and its narrow ancestors). Round 1 zips with a
+    // start derived from the adjacency itself, so the check starts at
+    // round 2.
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, StageInfo}
     import scala.jdk.CollectionConverters._
     import spark.implicits._

@@ -1,11 +1,14 @@
 package graft
 
-import graft.operators.{Dedup, Graph}
+import graft.operators.{Dedup, Graph, Pregel}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.graftspec.ShuffleRecorder
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 import org.scalacheck.{Gen, Prop}
 import org.scalacheck.Prop.propBoolean
+import scala.util.{Failure, Success, Try}
 
 /** The graph loops on the Pregel substrate against plain-Scala loops of
   * the same integer rules, over random small graphs. */
@@ -28,11 +31,35 @@ class PregelSpec extends SparkSpec {
       Gen.listOf(Gen.zip(Gen.choose(0L, n.toLong), Gen.choose(0L, n.toLong))) }, 8))
 
   private def check(name: String)(p: Pairs => Prop): Unit =
-    shapes.foreach { case (shape, gen, n) =>
-      val res = org.scalacheck.Test.check(
-        org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(n).withWorkers(1),
-        Prop.forAllNoShrink(gen)(p))
-      assert(res.passed, s"$name on $shape: ${org.scalacheck.util.Pretty.pretty(res)}")
+    shapes.foreach { case (shape, gen, n) => holds(s"$name on $shape", gen, n)(p) }
+
+  private def holds[A](name: String, gen: Gen[A], n: Int)(p: A => Prop): Unit = {
+    val res = org.scalacheck.Test.check(
+      org.scalacheck.Test.Parameters.default.withMinSuccessfulTests(n).withWorkers(1),
+      Prop.forAllNoShrink(gen)(p))
+    assert(res.passed, s"$name: ${org.scalacheck.util.Pretty.pretty(res)}")
+  }
+
+  /** Messages for the by-node reductions: keys from a small pool (so
+    * they repeat) plus the map's edge cases 0, Long.MinValue and
+    * Long.MaxValue; spread over up to 9 slices (often more slices than
+    * messages, so some map partitions are empty) and reduced into 1–9
+    * partitions (often more than there are keys). */
+  private case class Msgs(kvs: Seq[(Long, Long)], slices: Int, parts: Int)
+  private def msgs(value: Gen[Long]): Gen[Msgs] = for {
+    kvs <- Gen.listOf(Gen.zip(Gen.oneOf(Gen.choose(-3L, 3L), Gen.oneOf(0L, Long.MinValue, Long.MaxValue)), value))
+    slices <- Gen.choose(1, 9)
+    parts <- Gen.choose(1, 9)
+  } yield Msgs(kvs, slices, parts)
+
+  /** A run's rows sorted, or the class of the first ArithmeticException
+    * (or else the top exception) it failed with. */
+  private def outcome[A](rows: => Seq[A])(implicit ord: Ordering[A]): Either[String, Seq[A]] =
+    Try(rows) match {
+      case Success(r) => Right(r.sorted)
+      case Failure(e) =>
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+        Left(chain.find(_.isInstanceOf[ArithmeticException]).getOrElse(e).getClass.getName)
     }
 
   /** The co-order loops' input shape: symmetric, distinct, no self-loop. */
@@ -98,6 +125,65 @@ class PregelSpec extends SparkSpec {
     }.sortBy(t => (t._1, t._3))
   }
 
+  test("reduceByNode equals reduceByKey for min, + and Math.addExact") {
+    val ops: Seq[(String, (Long, Long) => Long, Gen[Long])] = Seq(
+      ("min", math.min(_, _), Gen.choose(Long.MinValue, Long.MaxValue)),
+      ("+", _ + _, Gen.choose(Long.MinValue, Long.MaxValue)),
+      // non-negative, so every order of the additions overflows exactly
+      // when the total does
+      ("Math.addExact", Math.addExact(_, _),
+        Gen.frequency(3 -> Gen.choose(0L, 100L), 1 -> Gen.choose(Long.MaxValue / 3, Long.MaxValue))))
+    ops.foreach { case (name, f, value) =>
+      holds(s"reduceByNode($name)", msgs(value), 40) { case Msgs(kvs, slices, parts) =>
+        val rdd = spark.sparkContext.parallelize(kvs, slices)
+        val part = new HashPartitioner(parts)
+        val got = outcome(Pregel.reduceByNode(rdd, part)(f).collect().toSeq)
+        val exp = outcome(rdd.reduceByKey(part, f).collect().toSeq)
+        (got == exp) :| s"$kvs over $slices slices into $parts: got $got, reduceByKey $exp"
+      }
+    }
+    assert(Try(Pregel.reduceByNode(spark.sparkContext.parallelize(Seq(7L -> Long.MaxValue, 7L -> 1L), 2),
+      new HashPartitioner(3))(Math.addExact(_, _)).collect()).isFailure, "an overflow across map partitions must throw")
+  }
+
+  test("sumByNode, gatherByNode and shipByNode equal plain-Scala groupings") {
+    holds("by-node sums, gathers and shipments", msgs(Gen.choose(-5L, 5L)), 40) { case Msgs(kvs, slices, parts) =>
+      val rdd = spark.sparkContext.parallelize(kvs, slices)
+      val part = new HashPartitioner(parts)
+      val width = 3
+      val sums = Pregel.sumByNode(rdd, part, width)((v, j) => v * (j + 1)).collect()
+        .map { case (k, c) => (k, c.toSeq) }.toSeq.sortBy(_._1)
+      val expSums = kvs.groupMapReduce(_._1)(kv => Seq.tabulate(width)(j => kv._2 * (j + 1)))(
+        (a, b) => a.zip(b).map { case (x, y) => x + y }).toSeq.sortBy(_._1)
+      val gathered = Pregel.gatherByNode(rdd, part).collect().map { case (k, vs) => (k, vs.toSeq.sorted) }
+        .toSeq.sortBy(_._1)
+      val expGathered = kvs.groupMap(_._1)(_._2).map { case (k, vs) => (k, vs.sorted) }.toSeq.sortBy(_._1)
+      val shipped = Pregel.shipByNode(rdd, part)
+      val placed = shipped.mapPartitionsWithIndex((i, it) => it.map(kv => (i, kv))).collect().toSeq
+      ((sums == expSums) :| s"sums of $kvs: $sums") &&
+        ((gathered == expGathered) :| s"gathers of $kvs: $gathered") &&
+        ((placed.map(_._2).sorted == kvs.sorted) :| s"shipments of $kvs: $placed") &&
+        (placed.forall { case (i, (k, _)) => part.getPartition(k) == i } :| s"misplaced: $placed")
+    }
+  }
+
+  test("graph loops shuffle through no Spark aggregator and no map-side combine") {
+    val es = symmetric(Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L), (4L, 5L), (5L, 6L), (6L, 4L), (7L, 8L)))
+    val calls: Seq[(String, () => Any)] = Seq(
+      "pagerankOf" -> (() => Graph.pagerankOf(frame(es)).collect()),
+      "kcoreOf" -> (() => Graph.kcoreOf(frame(es)).collect()),
+      "labelPropOf" -> (() => Graph.labelPropOf(frame(es)).collect()),
+      "componentLabels" -> (() => Dedup.componentLabels(es.toDF("id_a", "id_b")).collect()))
+    calls.foreach { case (name, call) =>
+      val (_, deps) = ShuffleRecorder.record(spark.sparkContext)(call())
+      // an adjacency shuffle and at least one message shuffle a round
+      assert(deps.size >= 4, s"$name: only ${deps.size} shuffles seen")
+      val combining = deps.filter(d => d.aggregator.nonEmpty || d.mapSideCombine)
+      assert(combining.isEmpty, s"$name: shuffles with an aggregator: " +
+        combining.map(d => s"${d.shuffleId} over ${d.rdd}").mkString(", "))
+    }
+  }
+
   test("connected components of an empty graph: no rows, no throw") {
     assert(Dedup.componentLabels(Seq.empty[(Long, Long)].toDF("id_a", "id_b")).collect().isEmpty)
   }
@@ -143,6 +229,8 @@ class PregelSpec extends SparkSpec {
       assert(left.keySet.subsetOf(read),
         s"$name leaves persisted RDDs its result does not read: ${left.values.map(r => s"${r.id}:${r.name}")}")
       assert(!left.values.exists(_.name == "adjacency"), s"$name leaves its adjacency persisted")
+      assert(left.values.forall(_.name == "state"),
+        s"$name leaves persisted RDDs other than its last stored state: ${left.values.map(r => s"${r.id}:${r.name}")}")
     }
   }
 }
